@@ -1,14 +1,17 @@
 """The complete ETL run — the reference's ``main()`` (SURVEY §3.1) as
 one orchestrated DataFrame program:
 
-1. restore latest snapshot (carry forward state + geocodes with the
-   site_id/hash reset)                      main_pls.py:101-186
+1. restore latest committed snapshot (carry forward state + geocodes
+   with the site_id/hash reset)             main_pls.py:101-186
 2. incremental-or-full ESRI pulls, merged into carried state via
    upsert (M1/M2/M5)                        geocode.py:469-488
 3. relational post-processing: prune → update-join enrich → prune →
    surrogate ids                            pls/tables.py:911-938
 4. publish: metadata row, snapshot write, artifact headers, Kafka
    message row                              main_pls.py:188-218
+   The snapshot's tables are written concurrently and committed
+   together: a publish that fails part-way raises and leaves no
+   snapshot the next run's step 1 would restore.
 
 The distributed-lock (S12) and presign (S9) edges stay with the
 orchestrator (boto3), outside the engine. All inputs arrive as
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.upsert import upsert_by_key
 from ..sources.snapshot import (
     carry_forward_geocodes,
+    has_snapshot_table,
     latest_snapshot,
     read_snapshot_table,
     write_snapshot,
@@ -80,14 +84,15 @@ def run_etl(
             spark, snapshot_root, prev_ts, "lf_geocode_sp_survey_point"
         )
         carried_geo = carry_forward_geocodes(prev_geo)
-        id_maps = {}
-        for name in tables_to_remap:
-            try:
-                id_maps[name] = read_snapshot_table(
-                    spark, snapshot_root, prev_ts, f"{name}_id_map"
-                )
-            except Exception:
-                id_maps[name] = empty_map
+        # a table first remapped in this run has no id map yet; any
+        # other read failure must surface — an empty map would renumber
+        # every carried key
+        id_maps = {
+            name: read_snapshot_table(spark, snapshot_root, prev_ts, f"{name}_id_map")
+            if has_snapshot_table(snapshot_root, prev_ts, f"{name}_id_map")
+            else empty_map
+            for name in tables_to_remap
+        }
     else:
         stored_pid, carried_geo = empty_pid, None
         id_maps = {name: empty_map for name in tables_to_remap}

@@ -4,20 +4,23 @@ The reference versions whole-database snapshots under timestamped S3
 keys and restores the *latest* by descending-lex key sort
 (``address_etl/s3.py:13-46,111-121``; restore ``main_pls.py:101-186``).
 Here a snapshot is a directory ``<root>/snapshot_ts=<ts>/<table>/``
-of parquet tables; "latest" is the max partition value (O1). The same
-layout works on S3A paths on a real cluster; object-store listing is
-O(#snapshots), not O(data).
+of parquet tables plus a commit marker file; "latest" is the max
+committed partition value (O1). Listing is O(#snapshots), not O(data).
 """
 
 from __future__ import annotations
 
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 _TS_RE = re.compile(r"^snapshot_ts=(.+)$")
+#: empty file marking a snapshot directory complete (see write_snapshot)
+COMMIT_MARKER = "_COMMITTED"
 
 
 def snapshot_dir(root: str, ts: str) -> str:
@@ -25,13 +28,15 @@ def snapshot_dir(root: str, ts: str) -> str:
 
 
 def list_snapshots(root: str) -> list[str]:
-    """All snapshot timestamps, ascending."""
+    """All committed snapshot timestamps, ascending. A snapshot
+    directory without its commit marker (a publish that failed or is
+    still running) is not a snapshot."""
     if not os.path.isdir(root):
         return []
     out = []
     for name in os.listdir(root):
         m = _TS_RE.match(name)
-        if m:
+        if m and os.path.exists(os.path.join(root, name, COMMIT_MARKER)):
             out.append(m.group(1))
     return sorted(out)
 
@@ -43,15 +48,33 @@ def latest_snapshot(root: str, prefix: str = "") -> str | None:
     return candidates[-1] if candidates else None
 
 
+def has_snapshot_table(root: str, ts: str, name: str) -> bool:
+    return os.path.isdir(os.path.join(snapshot_dir(root, ts), name))
+
+
 def write_snapshot(
     tables: dict[str, DataFrame],
     root: str,
     ts: str,
     sort_specs: dict[str, list[str]] | None = None,
 ) -> str:
-    """Publish one atomic snapshot of all state + output tables. Job
-    commit protocol makes each table write all-or-nothing (replaces the
-    reference's periodic-commit batching, pls/tables.py:454-457).
+    """Publish one atomic snapshot of all state + output tables.
+
+    The per-table writes are submitted together from driver threads,
+    one per table, so Spark's scheduler runs their jobs side by side
+    instead of paying each job's fixed latency in turn. Each thread
+    inherits the caller's job group and labels its jobs
+    ``publish <table>`` (``spark.job.description``).
+
+    Atomicity: the job commit protocol makes each table write
+    all-or-nothing (replaces the reference's periodic-commit batching,
+    pls/tables.py:454-457), and the snapshot as a whole becomes visible
+    to ``list_snapshots`` only through the empty ``COMMIT_MARKER`` file
+    written into its directory after every table write succeeded. A
+    repeat call into the same ``ts`` withdraws the marker first and
+    re-commits when its own writes succeed. If any write fails, every
+    started write is waited for, no marker is written and the first
+    failure (in ``tables`` order) is raised.
 
     ``sort_specs`` (table name → sort columns) opts a table into the
     clustered layout of ``plans/compact.py``: one
@@ -70,13 +93,26 @@ def write_snapshot(
             f"(writing: {sorted(tables)})"
         )
     base = snapshot_dir(root, ts)
-    for name, df in tables.items():
+    marker = os.path.join(base, COMMIT_MARKER)
+    if os.path.exists(marker):
+        os.remove(marker)
+
+    def write_table(name: str, df: DataFrame) -> None:
+        sc = df.sparkSession.sparkContext
+        sc.setLocalProperty("spark.job.description", f"publish {name}")
         cols = (sort_specs or {}).get(name)
         if cols:
-            df = df.repartitionByRange(
-                df.sparkSession.sparkContext.defaultParallelism, *cols
-            ).sortWithinPartitions(*cols)
+            df = df.repartitionByRange(sc.defaultParallelism, *cols).sortWithinPartitions(*cols)
         df.write.mode("overwrite").parquet(os.path.join(base, name))
+
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(df.sparkSession)(write_table), name, df)
+            for name, df in tables.items()
+        ]
+    for f in futures:
+        f.result()
+    open(marker, "w").close()
     return base
 
 

@@ -5,12 +5,19 @@ runs, and the publish contract."""
 
 from __future__ import annotations
 
+import glob
+import os
 from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from cam_location_addressing_feature_service_etl_spark.plans.run import run_etl
+from cam_location_addressing_feature_service_etl_spark.sources.snapshot import (
+    latest_snapshot,
+    write_snapshot,
+)
+from tests.test_sources import active_jobs_after_events
 
 BNE = timezone(timedelta(hours=10))
 
@@ -33,13 +40,14 @@ def _pid_map(spark, rows):
     return spark.createDataFrame(rows, "address_iri string, address_pid string")
 
 
-def test_two_run_lifecycle(spark, tmp_path):
-    root = str(tmp_path / "snaps")
+def _parcels(spark, rows):
+    return spark.createDataFrame(rows, "parcel_id string, plan_no string")
 
-    # ---- run 1: cold start
-    r1 = run_etl(
-        spark,
-        snapshot_root=root,
+
+def _day1(spark):
+    """run_etl inputs of a cold start: two addresses, one geocode,
+    two parcels."""
+    return dict(
         start_time=datetime(2026, 4, 22, 2, 0, 0, tzinfo=BNE),
         end_time=datetime(2026, 4, 22, 2, 2, 30, tzinfo=BNE),
         fetched_iri_pid=_pid_map(spark, [("iri/1", "100"), ("iri/2", "200")]),
@@ -52,25 +60,17 @@ def test_two_run_lifecycle(spark, tmp_path):
         ),
         tables_to_remap={
             "lf_parcel": (
-                spark.createDataFrame(
-                    [("parcel-A", "SP1"), ("parcel-B", "SP2")], "parcel_id string, plan_no string"
-                ),
+                _parcels(spark, [("parcel-A", "SP1"), ("parcel-B", "SP2")]),
                 "parcel_id",
             )
         },
     )
-    assert r1.previous_snapshot_ts is None
-    assert r1.s3_key == "pls-etl/2026-04-22T02:02:30+1000/pls.db"
-    geo1 = {r["geocode_id"]: r["site_id"] for r in r1.tables["lf_geocode_sp_survey_point"].collect()}
-    assert geo1 == {"geo-1": "site-1"}
-    ids1 = {r["iri"]: r["id"] for r in r1.tables["lf_parcel_id_map"].collect()}
-    assert sorted(ids1.values()) == [1, 2]
 
-    # ---- run 2: incremental — new address + updated pid for iri/1,
-    # re-imported geo-1 (site reset), one new parcel
-    r2 = run_etl(
-        spark,
-        snapshot_root=root,
+
+def _day2(spark):
+    """The next day's increment: new address + updated pid for iri/1,
+    re-imported geo-1 (site reset), one new parcel."""
+    return dict(
         start_time=datetime(2026, 4, 23, 2, 0, 0, tzinfo=BNE),
         end_time=datetime(2026, 4, 23, 2, 2, 30, tzinfo=BNE),
         fetched_iri_pid=_pid_map(spark, [("iri/1", "101"), ("iri/3", "300")]),
@@ -86,13 +86,31 @@ def test_two_run_lifecycle(spark, tmp_path):
         ),
         tables_to_remap={
             "lf_parcel": (
-                spark.createDataFrame(
-                    [("parcel-A", "SP1"), ("parcel-C", "SP3")], "parcel_id string, plan_no string"
-                ),
+                _parcels(spark, [("parcel-A", "SP1"), ("parcel-C", "SP3")]),
                 "parcel_id",
             )
         },
     )
+
+
+def _id_map(result, name="lf_parcel"):
+    return {r["iri"]: r["id"] for r in result.tables[f"{name}_id_map"].collect()}
+
+
+def test_two_run_lifecycle(spark, tmp_path):
+    root = str(tmp_path / "snaps")
+
+    # ---- run 1: cold start
+    r1 = run_etl(spark, snapshot_root=root, **_day1(spark))
+    assert r1.previous_snapshot_ts is None
+    assert r1.s3_key == "pls-etl/2026-04-22T02:02:30+1000/pls.db"
+    geo1 = {r["geocode_id"]: r["site_id"] for r in r1.tables["lf_geocode_sp_survey_point"].collect()}
+    assert geo1 == {"geo-1": "site-1"}
+    ids1 = _id_map(r1)
+    assert sorted(ids1.values()) == [1, 2]
+
+    # ---- run 2: incremental
+    r2 = run_etl(spark, snapshot_root=root, **_day2(spark))
     assert r2.previous_snapshot_ts == "2026-04-22T02:02:30+1000"
 
     # cache upsert: iri/1 overwritten, iri/2 carried, iri/3 new
@@ -106,7 +124,7 @@ def test_two_run_lifecycle(spark, tmp_path):
     assert geo2 == {"geo-3": "site-3"}
 
     # surrogate ids stable: parcel-A keeps its run-1 id; parcel-C dense-appends
-    ids2 = {r["iri"]: r["id"] for r in r2.tables["lf_parcel_id_map"].collect()}
+    ids2 = _id_map(r2)
     assert ids2["parcel-A"] == ids1["parcel-A"]
     assert ids2["parcel-B"] == ids1["parcel-B"]
     assert ids2["parcel-C"] == 3
@@ -193,3 +211,47 @@ def test_run_etl_increment_through_dsv2_reader(spark, tmp_path):
     # objectid 2 (pid 100002, no address) pruned. type-0 → "T0" etc.
     # via the initialism fallback (F6).
     assert geo == {"0": ("T0", "site-a"), "1": ("T1", "site-b")}
+
+
+def test_failed_publish_is_never_restored(spark, tmp_path):
+    """A publish that fails part-way (one table raises at execution,
+    next to healthy ones — among them an id map with every id moved)
+    raises once all writes are done; the next run restores the last
+    committed snapshot and keeps every carried id. A table remapped for
+    the first time has no id map in that snapshot and starts empty."""
+    root = str(tmp_path / "snaps")
+    r1 = run_etl(spark, snapshot_root=root, **_day1(spark))
+    ids1 = _id_map(r1)
+
+    moved = spark.createDataFrame([(iri, i + 10) for iri, i in ids1.items()], "iri string, id long")
+    boom = spark.range(1).select(F.raise_error(F.lit("publish boom")).alias("id"))
+    with pytest.raises(Exception, match="publish boom"):
+        write_snapshot(
+            {"lf_parcel_id_map": moved, "metadata": boom, "lf_address": r1.tables["lf_address"]},
+            root,
+            "2026-04-22T12:00:00+1000",
+        )
+    assert active_jobs_after_events(spark) == []
+    assert latest_snapshot(root) == "2026-04-22T02:02:30+1000"
+
+    day2 = _day2(spark)
+    sites = spark.createDataFrame([("site-1", "S1"), ("site-3", "S3")], "site_id string, name string")
+    day2["tables_to_remap"]["lf_site"] = (sites, "site_id")
+    r2 = run_etl(spark, snapshot_root=root, **day2)
+    assert r2.previous_snapshot_ts == "2026-04-22T02:02:30+1000"
+    ids2 = _id_map(r2)
+    assert {k: ids2[k] for k in ids1} == ids1
+    assert ids2["parcel-C"] == 3
+    assert sorted(_id_map(r2, "lf_site").values()) == [1, 2]
+
+
+def test_unreadable_id_map_fails_the_run(spark, tmp_path):
+    """An id map that exists in the restored snapshot but cannot be
+    read fails the run instead of renumbering every carried key."""
+    root = str(tmp_path / "snaps")
+    r1 = run_etl(spark, snapshot_root=root, **_day1(spark))
+    for f in glob.glob(os.path.join(r1.snapshot_path, "lf_parcel_id_map", "*.parquet")):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="lf_parcel_id_map"):
+        run_etl(spark, snapshot_root=root, **_day2(spark))

@@ -4,6 +4,8 @@ pagination tests (``tests/test_geocode_schema.py``,
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -18,7 +20,9 @@ from cam_location_addressing_feature_service_etl_spark.sources.esri import (
 from cam_location_addressing_feature_service_etl_spark.sources.snapshot import (
     carry_forward_geocodes,
     latest_snapshot,
+    list_snapshots,
     read_snapshot_table,
+    snapshot_dir,
     write_snapshot,
 )
 from cam_location_addressing_feature_service_etl_spark.sources.sparql import (
@@ -157,3 +161,59 @@ def test_snapshot_sorted_layout_has_disjoint_key_ranges(spark, tmp_path):
     spans.sort()
     for (_, hi1), (lo2, _) in zip(spans, spans[1:]):
         assert hi1 < lo2
+
+
+def active_jobs_after_events(spark) -> list[int]:
+    """Active job ids once the listener bus has delivered every event
+    posted so far (the status tracker reads listener-fed state)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getActiveJobsIds())
+
+
+def test_failed_publish_is_not_a_snapshot(spark, tmp_path):
+    """One table failing at execution, next to healthy ones: the error
+    is raised after every write has finished, and the partial
+    directory is never listed, so the previous snapshot stays latest.
+    A repeat publish into the same ts then commits it."""
+    root = str(tmp_path)
+    ok = spark.range(50).withColumnRenamed("id", "k")
+    write_snapshot({"t": ok}, root, "2026-04-22T02:00:00+1000")
+    boom = spark.range(3).select(F.raise_error(F.lit("publish boom")).alias("k"))
+    ts = "2026-04-23T02:00:00+1000"
+    with pytest.raises(Exception, match="publish boom"):
+        write_snapshot({"a": ok, "bad": boom, "t": ok}, root, ts, sort_specs={"t": ["k"]})
+    assert active_jobs_after_events(spark) == []
+    assert os.path.isdir(snapshot_dir(root, ts))  # the partial write is there...
+    assert list_snapshots(root) == ["2026-04-22T02:00:00+1000"]  # ...but not listed
+    assert latest_snapshot(root) == "2026-04-22T02:00:00+1000"
+
+    # one table per call into the same ts, as a table-by-table replay does
+    write_snapshot({"a": ok}, root, ts)
+    write_snapshot({"t": ok}, root, ts, sort_specs={"t": ["k"]})
+    assert latest_snapshot(root) == ts
+    assert read_snapshot_table(spark, root, ts, "t").count() == 50
+
+
+def test_publish_jobs_carry_table_label_and_caller_group(spark, tmp_path):
+    """Each table's write jobs are described ``publish <table>`` and
+    keep the job group set by the caller."""
+    sc = spark.sparkContext
+    group = f"publish-label-{tmp_path.name}"
+    sc.setJobGroup(group, "caller")
+    try:
+        write_snapshot(
+            {"a": spark.range(5), "b": spark.range(7)}, str(tmp_path), "2026-04-22T02:00:00+1000"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    labels = set()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            desc = job.description()
+            labels.add(desc.get() if desc.isDefined() else None)
+    assert labels == {"publish a", "publish b"}

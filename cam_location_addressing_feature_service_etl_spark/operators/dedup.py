@@ -856,8 +856,10 @@ def connected_components_star(
     # trigger (the canonical edge set is materialized here either
     # way), and anything above the cap keeps the distributed rounds —
     # at 100 TB a corpus-scale CC never enters the local path, while
-    # the fold minis (and converged tails of big graphs, whose edge
-    # set only SHRINKS toward the fixed point) do.
+    # the fold minis do. The gate is taken ONCE, on the initial edge
+    # count: a graph that starts above the cap stays distributed for
+    # every round, even once its edge set has shrunk under the cap
+    # toward the fixed point — converged tails are NOT covered.
     local = e.count() <= _STAR_LOCAL_MAX
 
     def narrow(df: DataFrame) -> DataFrame:

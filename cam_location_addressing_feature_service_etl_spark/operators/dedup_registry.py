@@ -142,44 +142,6 @@ _FOLD_BCAST_MAX = 4_000_000
 _FOLD_BCAST_SMALL = 200_000
 
 
-def dedup_prepare_batch(
-    batch: DataFrame,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """STATE-INDEPENDENT batch prep for ``dedup_fold_increment``:
-    tokens and md5-shingle postings of the deduplicated batch, BEFORE
-    the registry anti-join — everything here is a pure function of the
-    batch, so callers folding several batches may run preps on driver
-    threads (``runtime.prefetch``, guide §2.6) while earlier folds'
-    state-dependent tails execute, overlapping the fold loop's
-    inter-job driver gaps (r16 verdict #1). The trailing ``count()``
-    triggers both lazy checkpoints inside the prefetch thread — that
-    is the point: the tokenize/shingle/hash jobs run NOW, off the
-    consuming fold's critical path.
-
-    Returns ``(toks_raw, bp_raw)``. The fold anti-joins both against
-    the registry's doc_ids before use, which is row-identical to the
-    original anti-join-then-tokenize order because tokenization is a
-    per-row function of (doc_id, text): dropping already-registered
-    rows before or after computing their tokens yields the same
-    surviving rows (re-ingested rows' prep work is wasted, matching
-    the original form's semantics of never re-processing them)."""
-    d = batch.dropDuplicates([id_col])
-    toks_raw = d.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
-    ).transform(materialize)
-    bp_raw = toks_raw.select(
-        F.col(id_col),
-        F.explode(shingles_col(F.col("_toks"), shingle_n)).alias("shingle"),
-    ).select(F.col(id_col), F.md5(F.col("shingle")).alias("sh")).transform(
-        materialize
-    )
-    bp_raw.count()
-    return toks_raw, bp_raw
-
-
 def empty_dedup_registry(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], DEDUP_REGISTRY_SCHEMA)
 
@@ -316,7 +278,6 @@ def dedup_fold_increment(
     id_col: str = "doc_id",
     text_col: str = "text",
     dfreq: DataFrame | None = None,
-    pre: tuple[DataFrame, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fold one batch of ``(doc_id, text)`` documents into the standing
     registry + postings index + additive df side state; returns
@@ -342,49 +303,28 @@ def dedup_fold_increment(
     only the batch's shingle rows replaced (additive merge) — the
     write side is the partitioned versioned layout's job (touched
     buckets only).
-
-    ``pre``: optional ``dedup_prepare_batch(batch, ...)`` output —
-    the batch's (toks_raw, bp_raw) computed state-independently (and
-    typically PREFETCHED on a driver thread, guide §2.6). The fold
-    then only anti-joins them against the registry's doc_ids, which is
-    row-identical to the inline order (see ``dedup_prepare_batch``).
     """
     spark = batch.sparkSession
 
     # --- new documents only (re-ingest is identity) -------------------
-    if pre is not None:
-        toks_raw, bp_raw = pre
-        # ONE doc-level anti-join (same cost shape as the inline path's
-        # new_docs anti), then tiny-frame semi-joins restrict the
-        # prefetched raws map-side (new_ids is ∝ batch docs and
-        # AQE-broadcast from its runtime size, so neither raw frame is
-        # shuffled and the registry is scanned once here, as before)
-        new_ids = (
-            toks_raw.select(id_col)
-            .join(registry.select(id_col), id_col, "left_anti")
-            .transform(materialize)
-        )
-        toks = toks_raw.join(new_ids, id_col, "leftsemi")
-        bp = bp_raw.join(new_ids, id_col, "leftsemi").transform(materialize)
-    else:
-        new_docs = (
-            batch.dropDuplicates([id_col])
-            .join(registry.select(id_col), id_col, "left_anti")
-            .select(id_col, text_col)
-        )
-        toks = new_docs.select(
-            F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
-        ).transform(materialize)
-        # batch postings, shingles md5-keyed; feeds the cross probe, the
-        # self join, the size aggregate and the postings output. Built
-        # from the ALREADY-materialized token arrays — shingle_postings
-        # would re-tokenize the batch a second time for the same frame
-        bp = toks.select(
-            F.col(id_col),
-            F.explode(shingles_col(F.col("_toks"), shingle_n)).alias("shingle"),
-        ).select(F.col(id_col), F.md5(F.col("shingle")).alias("sh")).transform(
-            materialize
-        )
+    new_docs = (
+        batch.dropDuplicates([id_col])
+        .join(registry.select(id_col), id_col, "left_anti")
+        .select(id_col, text_col)
+    )
+    toks = new_docs.select(
+        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
+    ).transform(materialize)
+    # batch postings, shingles md5-keyed; feeds the cross probe, the
+    # self join, the size aggregate and the postings output. Built
+    # from the ALREADY-materialized token arrays — shingle_postings
+    # would re-tokenize the batch a second time for the same frame
+    bp = toks.select(
+        F.col(id_col),
+        F.explode(shingles_col(F.col("_toks"), shingle_n)).alias("shingle"),
+    ).select(F.col(id_col), F.md5(F.col("shingle")).alias("sh")).transform(
+        materialize
+    )
     # ONE bounded scalar sizes every batch-side broadcast decision
     # (the measured-count hint gate); bp is materialized, so the count
     # is a cache read, not a recompute

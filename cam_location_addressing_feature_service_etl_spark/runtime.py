@@ -98,40 +98,6 @@ def scoped_plan_refs():
         _SCOPED.refs = prev
 
 
-def prefetch(*thunks):
-    """Run independent, state-free DataFrame-materializing thunks on
-    driver threads so their jobs OVERLAP the main thread's sequential
-    actions (guide §2.6 — Spark's scheduler happily runs several jobs
-    at once; actions are only sequential because the driver calls them
-    sequentially). Returns one ``Future`` per thunk, in order; callers
-    take ``futures[i].result()`` exactly where they need the value, so
-    an exception inside a thunk surfaces at the consuming fold, not in
-    a detached thread.
-
-    Used by the incremental-registry fold loops (r16 verdict #1): the
-    per-fold batch prep (tokenize/shingle/hash of batch i+1) depends
-    only on the BATCH, not on fold i's state, so it runs while fold i's
-    driver-coordinated tail (gates, convergence checks, re-labels) is
-    still executing — filling the inter-job driver gaps the job
-    profile measured instead of queueing behind them. Two workers in
-    flight is plenty (the guide's own rule): enough to fill the tail,
-    not so many that prefetch steals the fold's own executors.
-
-    ``inheritable_thread_target`` pins each thunk to the submitting
-    thread's JVM thread-locals (job group/description), so concurrent
-    jobs stay correctly labeled under PYSPARK_PIN_THREAD."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    pool = ThreadPoolExecutor(max_workers=min(2, max(1, len(thunks))))
-    futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
-    # threads finish their queued work; the pool object itself is
-    # single-use (no blocking — shutdown only forbids NEW submissions)
-    pool.shutdown(wait=False)
-    return futures
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """Cut lineage and materialize ``df`` lazily (on first action).
 

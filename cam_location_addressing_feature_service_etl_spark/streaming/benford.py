@@ -16,21 +16,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.relational import _BENFORD_CASE
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "digit bigint, n_obs bigint"
+from .versioned import Fold
 
 #: amount-stream contract: any frame with a positive money column
 AMOUNT_COLUMN = "o_totalprice"
 
 
-def digit_counts(amounts: DataFrame, col: str = AMOUNT_COLUMN) -> DataFrame:
+def digit_counts(amounts: DataFrame) -> DataFrame:
     """Exact first-digit counts of a batch — the mergeable form. The
     digit comes from exact integer cents, as in the batch audit."""
-    cents = F.floor(F.col(col) * 100 + 0.5).cast("long")
+    cents = F.floor(F.col(AMOUNT_COLUMN) * 100 + 0.5).cast("long")
     return (
         amounts.select(cents.alias("c"))
         .filter(F.col("c") > 0)
@@ -52,41 +49,18 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_amount_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one amount micro-batch's digit counts into the versioned
-    state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    amounts: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the Benford monitor over an amount stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_amount_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        amounts.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+BENFORD_FOLD = Fold("digit bigint, n_obs bigint", _merge)
+#: fold one amount micro-batch's digit counts into the state
+apply_amount_batch = BENFORD_FOLD.apply
+#: run the Benford monitor over an amount stream
+monitor_stream = BENFORD_FOLD.stream
 
 
 def read_benford(spark: SparkSession, state_dir: str) -> DataFrame:
     """The standing audit table — the batch query's exact output shape
     (digit, n_obs, expected_n, chi2_part) from the folded counts and
     the SAME probability literals; empty before any batch folds."""
-    cnt = read_latest(spark, state_dir, _STATE_SCHEMA)
+    cnt = BENFORD_FOLD.read(spark, state_dir)
     tot = cnt.agg(F.sum("n_obs").alias("big_n"))
     p = F.expr(_BENFORD_CASE)
     exp_n = F.col("big_n") * p

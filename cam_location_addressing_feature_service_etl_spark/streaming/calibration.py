@@ -25,13 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.llm_text import _ECE_BINS
-from .versioned import fold_version, read_latest
-
-#: (bin, n, sum_conf_micro, n_pos) — all exact integers
-_STATE_SCHEMA = "bin bigint, n bigint, s bigint, pos bigint"
+from .versioned import Fold
 
 #: scored-document stream contract: the batch query's scoring output
 SCORED_SCHEMA = "doc_id bigint, p_quality double, gold boolean"
@@ -76,42 +72,19 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_scored_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one scored micro-batch's bin counts into the versioned
-    state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    scored: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the calibration monitor over a scored-document stream
-    (``SCORED_SCHEMA``)."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_scored_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        scored.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+#: state (bin, n, sum_conf_micro, n_pos) — all exact integers
+CALIBRATION_FOLD = Fold("bin bigint, n bigint, s bigint, pos bigint", _merge)
+#: fold one scored micro-batch's bin counts into the state
+apply_scored_batch = CALIBRATION_FOLD.apply
+#: run the monitor over a scored-document stream (``SCORED_SCHEMA``)
+monitor_stream = CALIBRATION_FOLD.stream
 
 
 def read_reliability(spark: SparkSession, state_dir: str) -> DataFrame:
     """The standing reliability table — the batch query's exact output
     shape (bin, n_docs, avg_conf, frac_pos, abs_gap) derived from the
     folded integer counts; empty before any batch folds."""
-    st = read_latest(spark, state_dir, _STATE_SCHEMA)
+    st = CALIBRATION_FOLD.read(spark, state_dir)
     return st.select(
         "bin",
         F.col("n").alias("n_docs"),

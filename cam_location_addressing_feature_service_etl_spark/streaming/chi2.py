@@ -19,12 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.events import chi2_category_counts, chi2_table_from_counts
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "event_type string, n_ref bigint, n_cur bigint"
+from .versioned import Fold
 
 
 def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
@@ -38,40 +35,14 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_event_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one event micro-batch's per-category counts into the
-    versioned state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the chi² drift monitor over an (event_type, value, ts)
-    event stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_event_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+CHI2_FOLD = Fold("event_type string, n_ref bigint, n_cur bigint", _merge)
+#: fold one event micro-batch's per-category counts into the state
+apply_event_batch = CHI2_FOLD.apply
+#: run the chi² drift monitor over an (event_type, value, ts) stream
+monitor_stream = CHI2_FOLD.stream
 
 
 def read_chi2(spark: SparkSession, state_dir: str) -> DataFrame:
     """The standing chi² drift table — the batch query's exact output
     shape from the folded counts; empty before any batch folds."""
-    return chi2_table_from_counts(
-        read_latest(spark, state_dir, _STATE_SCHEMA)
-    )
+    return chi2_table_from_counts(CHI2_FOLD.read(spark, state_dir))

@@ -27,57 +27,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..workload.llm_text import nb_score
+from ..workload.llm_text import nb_merge_counts, nb_score, nb_token_counts
+from .versioned import Fold, parquet_stream, run_fold_stream
 
 DOC_SCHEMA = "doc_id bigint, text string"
 
 
 LABELED_SCHEMA = "doc_id bigint, lang string, text string"
-_MODEL_SCHEMA = "lbl string, tok string, cnt bigint"
 
-
-def read_model(spark: SparkSession, model_dir: str) -> DataFrame:
-    """The current (max committed version) count-table model; empty
-    with the model schema when untrained."""
-    from .versioned import read_latest
-
-    return read_latest(spark, model_dir, _MODEL_SCHEMA)
-
-
-def train_model_stream(
-    labeled_stream: DataFrame,
-    model_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """STREAMING TRAINING — the other half of the classifier loop:
-    each micro-batch of labeled docs (``LABELED_SCHEMA``) contributes
-    its own map-side-combined (label, token) count table, folded into
-    the versioned model with ``nb_merge_counts`` (training is
-    mergeable — ``text_nb_incremental_train`` pins counts-from-batches
-    == one-shot). Exactly-once under foreachBatch replay by the shared
-    idempotent-versioning discipline (``streaming/versioned.py``).
-    After any prefix of batches the model equals batch training on the
-    union of those batches' docs, so train and score streams compose:
-    retrain between scoring batches by re-reading ``read_model``."""
-    from ..workload.llm_text import nb_merge_counts, nb_token_counts
-    from .versioned import fold_version
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        fold_version(
-            nb_token_counts(batch),
-            batch_id,
-            model_dir,
-            _MODEL_SCHEMA,
-            lambda prior, delta: nb_merge_counts(prior, delta),
-        )
-
-    return (
-        labeled_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+#: STREAMING TRAINING — the other half of the classifier loop: each
+#: micro-batch of labeled docs (``LABELED_SCHEMA``) contributes its own
+#: map-side-combined (label, token) count table, folded into the
+#: versioned model with ``nb_merge_counts`` (training is mergeable —
+#: ``text_nb_incremental_train`` pins counts-from-batches == one-shot).
+#: After any prefix of batches the model equals batch training on the
+#: union of those batches' docs, so train and score streams compose:
+#: retrain between scoring batches by re-reading ``read_model``.
+MODEL_FOLD = Fold(
+    "lbl string, tok string, cnt bigint",
+    lambda prior, batch: nb_merge_counts(prior, nb_token_counts(batch)),
+)
+#: run training over a labeled-doc stream into a model dir
+train_model_stream = MODEL_FOLD.stream
+#: the current count-table model; empty when untrained
+read_model = MODEL_FOLD.read
 
 
 def read_doc_stream(
@@ -85,10 +58,7 @@ def read_doc_stream(
 ) -> DataFrame:
     """File-source stream of (doc_id, text) — the test stand-in for a
     Kafka document feed."""
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, DOC_SCHEMA, max_files_per_trigger)
 
 
 def classify_stream(
@@ -107,9 +77,4 @@ def classify_stream(
     def _score_batch(batch: DataFrame, _batch_id: int) -> None:
         nb_score(batch, counts, stats).write.mode("append").parquet(out_dir)
 
-    return (
-        doc_stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(doc_stream, _score_batch, checkpoint_dir, trigger)

@@ -42,8 +42,10 @@ from ..operators.dedup_registry import (
 from ..runtime import scoped_plan_refs
 from .versioned import (
     commit_version_partitioned,
+    parquet_stream,
     read_latest_partitioned,
     read_version_before_partitioned,
+    run_fold_stream,
 )
 
 DOC_BATCH_SCHEMA = "doc_id bigint, text string"
@@ -68,18 +70,16 @@ def fold_doc_batch(
     batch_id: int,
     registry_dir: str,
     postings_dir: str,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    retain_versions: int = 3,
     num_buckets: int = DEDUP_BUCKETS,
-    compact_every: int | None = None,
     compact_dispersion: int | None = None,
     dfreq_dir: str | None = None,
 ) -> None:
     """Fold one document micro-batch into the three versioned state
     tables. Idempotent under foreachBatch replay; one fold computation
     feeds all commits (the ``commit_version_partitioned`` split API).
-    ``dfreq_dir`` defaults to ``<postings_dir>_df``."""
+    ``compact_dispersion`` is ``fold_version_partitioned``'s adaptive
+    compaction policy, applied per table. ``dfreq_dir`` defaults to
+    ``<postings_dir>_df``."""
     spark = batch.sparkSession
     dfreq_dir = dfreq_dir or _dfreq_dir(postings_dir)
     reg_prior, reg_man = read_version_before_partitioned(
@@ -97,12 +97,7 @@ def fold_doc_batch(
     dfreq = None if (post_man["pids"] and not df_man["pids"]) else df_prior
     with scoped_plan_refs():
         new_reg, new_post, new_df = dedup_fold_increment(
-            reg_prior, post_prior, batch, threshold, shingle_n, dfreq=dfreq
-        )
-        every = (
-            compact_every is not None
-            and batch_id > 0
-            and batch_id % compact_every == 0
+            reg_prior, post_prior, batch, dfreq=dfreq
         )
 
         def _disperse(man: dict) -> bool:
@@ -121,8 +116,7 @@ def fold_doc_batch(
             ("doc_id",),
             post_prior,
             post_man,
-            retain_versions,
-            force_rewrite_all=every or _disperse(post_man),
+            force_rewrite_all=_disperse(post_man),
         )
         commit_version_partitioned(
             new_df,
@@ -132,8 +126,7 @@ def fold_doc_batch(
             ("sh",),
             df_prior,
             df_man,
-            retain_versions,
-            force_rewrite_all=every or _disperse(df_man),
+            force_rewrite_all=_disperse(df_man),
         )
         commit_version_partitioned(
             new_reg,
@@ -143,8 +136,7 @@ def fold_doc_batch(
             ("doc_id",),
             reg_prior,
             reg_man,
-            retain_versions,
-            force_rewrite_all=every or _disperse(reg_man),
+            force_rewrite_all=_disperse(reg_man),
         )
 
 
@@ -154,40 +146,17 @@ def dedup_registry_stream(
     postings_dir: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    retain_versions: int = 3,
-    num_buckets: int = DEDUP_BUCKETS,
-    compact_every: int | None = None,
-    compact_dispersion: int | None = None,
     dfreq_dir: str | None = None,
 ) -> StreamingQuery:
     """Run the accreting corpus-dedup loop over a (doc_id, text)
-    document stream (``DOC_BATCH_SCHEMA``). Every fold knob threads
-    through to ``fold_doc_batch`` — a stream caller can configure
-    everything the batch API allows."""
+    document stream (``DOC_BATCH_SCHEMA``)."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         fold_doc_batch(
-            batch,
-            batch_id,
-            registry_dir,
-            postings_dir,
-            threshold,
-            shingle_n,
-            retain_versions,
-            num_buckets,
-            compact_every,
-            compact_dispersion,
-            dfreq_dir,
+            batch, batch_id, registry_dir, postings_dir, dfreq_dir=dfreq_dir
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(docs_stream, _apply, checkpoint_dir, trigger)
 
 
 def read_doc_stream(
@@ -195,7 +164,4 @@ def read_doc_stream(
 ) -> DataFrame:
     """File-source stream of document rows — the test stand-in for an
     ingest topic."""
-    reader = spark.readStream.schema(DOC_BATCH_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, DOC_BATCH_SCHEMA, max_files_per_trigger)

@@ -15,13 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..workload.events import _DD_GAMMA, _DD_LN_GAMMA, _DD_QS
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "event_type string, bucket bigint, n bigint"
+from .versioned import Fold
 
 
 def bucket_counts(events: DataFrame) -> DataFrame:
@@ -48,44 +45,19 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_value_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one event micro-batch's bucket counts into the versioned
-    state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
+DDSKETCH_FOLD = Fold("event_type string, bucket bigint, n bigint", _merge)
+#: fold one event micro-batch's bucket counts into the state
+apply_value_batch = DDSKETCH_FOLD.apply
+#: run the quantile monitor over an event stream
+monitor_stream = DDSKETCH_FOLD.stream
 
 
-def monitor_stream(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the quantile monitor over an event stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_value_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
-
-
-def read_quantiles(
-    spark: SparkSession, state_dir: str, qs: tuple[int, ...] = _DD_QS
-) -> DataFrame:
+def read_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
     """Per-type quantile estimates from the folded histogram — the
     batch query's rank-crossing rule (smallest bucket whose cumulative
     count reaches ceil(q·n)), estimate = 2γ^i/(γ+1), rounded to 4.
     Empty before any batch folds."""
-    hist = read_latest(spark, state_dir, _STATE_SCHEMA)
+    hist = DDSKETCH_FOLD.read(spark, state_dir)
     w = Window.partitionBy("event_type").orderBy("bucket")
     cum = hist.select(
         "event_type",
@@ -98,7 +70,7 @@ def read_quantiles(
         ).alias("total"),
     )
     out = None
-    for q in qs:
+    for q in _DD_QS:
         hit = (
             cum.filter(F.col("cum") >= F.ceil(F.col("total") * q / 100.0))
             .groupBy("event_type")

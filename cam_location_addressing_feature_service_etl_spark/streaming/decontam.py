@@ -19,12 +19,11 @@ own scale plan (at 100 TB a bloom filter pushed into the scan).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import shingle_postings
 from ..workload.decontam import _DC_N, contamination_stats
-from .versioned import fold_version, read_latest
+from .versioned import fold_version, read_latest, run_fold_stream
 
 _STATE_SCHEMA = (
     "doc_id bigint, n_shingles bigint, n_hit bigint, "
@@ -68,24 +67,13 @@ def _merge_with(bench: DataFrame):
 
 
 def apply_doc_batch(
-    batch: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    ref_dir: str,
-    retain_versions: int = 3,
+    batch: DataFrame, batch_id: int, state_dir: str, ref_dir: str
 ) -> None:
     """Score one (doc_id, text) micro-batch against the frozen
     benchmark and fold the ledger. Idempotent under foreachBatch
     replay."""
     bench = batch.sparkSession.read.parquet(ref_dir)
-    fold_version(
-        batch,
-        batch_id,
-        state_dir,
-        _STATE_SCHEMA,
-        _merge_with(bench),
-        retain_versions,
-    )
+    fold_version(batch, batch_id, state_dir, _STATE_SCHEMA, _merge_with(bench))
 
 
 def monitor_stream(
@@ -94,20 +82,14 @@ def monitor_stream(
     ref_dir: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
-    retain_versions: int = 3,
 ) -> StreamingQuery:
     """Run the decontamination guard over a (doc_id, text) document
     stream."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_doc_batch(batch, batch_id, state_dir, ref_dir, retain_versions)
+        apply_doc_batch(batch, batch_id, state_dir, ref_dir)
 
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(docs, _apply, checkpoint_dir, trigger)
 
 
 def read_contamination(spark: SparkSession, state_dir: str) -> DataFrame:

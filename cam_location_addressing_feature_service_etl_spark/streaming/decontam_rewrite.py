@@ -24,11 +24,10 @@ plan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import _gram_postings, remove_contaminated_spans
-from .versioned import fold_version, read_latest
+from .versioned import fold_version, read_latest, run_fold_stream
 
 _STATE_SCHEMA = (
     "doc_id bigint, n_tokens bigint, kept_tokens bigint, "
@@ -67,24 +66,14 @@ def _merge_with(bench_kg: DataFrame, k: int):
 
 
 def apply_doc_batch(
-    batch: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    ref_dir: str,
-    k: int = 8,
-    retain_versions: int = 3,
+    batch: DataFrame, batch_id: int, state_dir: str, ref_dir: str, k: int = 8
 ) -> None:
     """Rewrite one (doc_id, text) micro-batch against the frozen
     benchmark gram set and fold the accounting ledger. Idempotent
     under foreachBatch replay."""
     bench_kg = batch.sparkSession.read.parquet(ref_dir)
     fold_version(
-        batch,
-        batch_id,
-        state_dir,
-        _STATE_SCHEMA,
-        _merge_with(bench_kg, k),
-        retain_versions,
+        batch, batch_id, state_dir, _STATE_SCHEMA, _merge_with(bench_kg, k)
     )
 
 
@@ -95,19 +84,13 @@ def monitor_stream(
     checkpoint_dir: str,
     k: int = 8,
     trigger: dict | None = None,
-    retain_versions: int = 3,
 ) -> StreamingQuery:
     """Run the rewrite guard over a (doc_id, text) document stream."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_doc_batch(batch, batch_id, state_dir, ref_dir, k, retain_versions)
+        apply_doc_batch(batch, batch_id, state_dir, ref_dir, k)
 
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(docs, _apply, checkpoint_dir, trigger)
 
 
 def read_rewrite_ledger(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .versioned import parquet_stream
+
 EVENT_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, value double"
 
 
@@ -41,7 +43,4 @@ def read_event_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream of possibly-redelivered event rows."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger)

@@ -30,6 +30,7 @@ from ..runtime import scoped_plan_refs
 from .benford import apply_amount_batch
 from .psi import apply_psi_batch
 from .seasonal import apply_baseline_batch
+from .versioned import run_fold_stream
 
 
 def apply_dq_batch(
@@ -38,19 +39,15 @@ def apply_dq_batch(
     psi_dir: str,
     seasonal_dir: str,
     benford_dir: str,
-    retain_versions: int = 3,
 ) -> None:
     """Fold one event micro-batch into all three monitor states from a
     single materialization. Idempotent under foreachBatch replay."""
     with scoped_plan_refs():
         b = batch.localCheckpoint(eager=True)
-        apply_psi_batch(b, batch_id, psi_dir, retain_versions)
-        apply_baseline_batch(b, batch_id, seasonal_dir, retain_versions)
+        apply_psi_batch(b, batch_id, psi_dir)
+        apply_baseline_batch(b, batch_id, seasonal_dir)
         apply_amount_batch(
-            b.withColumnRenamed("value", "o_totalprice"),
-            batch_id,
-            benford_dir,
-            retain_versions,
+            b.withColumnRenamed("value", "o_totalprice"), batch_id, benford_dir
         )
 
 
@@ -61,19 +58,11 @@ def dq_suite_stream(
     benford_dir: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
-    retain_versions: int = 3,
 ) -> StreamingQuery:
     """Run the composed monitor suite over an event stream (the
     ``events`` table shape: ts, event_type, value, ...)."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_dq_batch(
-            batch, batch_id, psi_dir, seasonal_dir, benford_dir, retain_versions
-        )
+        apply_dq_batch(batch, batch_id, psi_dir, seasonal_dir, benford_dir)
 
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(events, _apply, checkpoint_dir, trigger)

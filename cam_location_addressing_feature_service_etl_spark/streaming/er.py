@@ -25,13 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..workload.geo import (
-    _LINK_BLOCK_STRATEGIES,
-    _LINK_TAU,
-    ER_REGISTRY_SCHEMA,
-    er_resolve_increment,
+from ..workload.geo import _LINK_TAU, ER_REGISTRY_SCHEMA, er_resolve_increment
+from .versioned import (
+    fold_version_partitioned,
+    parquet_stream,
+    read_latest_partitioned,
+    run_fold_stream,
 )
-from .versioned import fold_version_partitioned, read_latest_partitioned
 
 MASTER_BATCH_SCHEMA = "mk bigint, mn string"
 
@@ -52,10 +52,8 @@ def fold_master_batch(
     batch_id: int,
     registry_dir: str,
     tau: int = _LINK_TAU,
-    block_keys: tuple[str, ...] = _LINK_BLOCK_STRATEGIES,
     retain_versions: int = 3,
     num_buckets: int = REGISTRY_BUCKETS,
-    compact_every: int | None = None,
     compact_dispersion: int | None = None,
 ) -> None:
     """Fold one master-record micro-batch into the versioned registry.
@@ -67,14 +65,11 @@ def fold_master_batch(
         batch_id,
         registry_dir,
         ER_REGISTRY_SCHEMA,
-        lambda prior, delta: er_resolve_increment(
-            prior, delta, tau, block_keys
-        ),
+        lambda prior, delta: er_resolve_increment(prior, delta, tau),
         ("nm",),
         num_buckets,
         retain_versions,
-        compact_every,
-        compact_dispersion,
+        compact_dispersion=compact_dispersion,
     )
 
 
@@ -84,38 +79,16 @@ def resolve_registry_stream(
     checkpoint_dir: str,
     trigger: dict | None = None,
     tau: int = _LINK_TAU,
-    block_keys: tuple[str, ...] = _LINK_BLOCK_STRATEGIES,
     retain_versions: int = 3,
-    num_buckets: int = REGISTRY_BUCKETS,
-    compact_every: int | None = None,
-    compact_dispersion: int | None = None,
 ) -> StreamingQuery:
     """Run the accreting-registry loop over a (mk, mn) master stream
-    (``MASTER_BATCH_SCHEMA``). Every fold knob (linkage ``tau``/
-    ``block_keys``, ``retain_versions``, ``num_buckets``,
-    ``compact_every``/``compact_dispersion``) threads straight through to
-    ``fold_master_batch`` — a stream caller can configure everything
-    the batch API allows."""
+    (``MASTER_BATCH_SCHEMA``); ``tau`` and ``retain_versions`` thread
+    through to ``fold_master_batch``."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        fold_master_batch(
-            batch,
-            batch_id,
-            registry_dir,
-            tau,
-            block_keys,
-            retain_versions,
-            num_buckets,
-            compact_every,
-            compact_dispersion,
-        )
+        fold_master_batch(batch, batch_id, registry_dir, tau, retain_versions)
 
-    return (
-        masters_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(masters_stream, _apply, checkpoint_dir, trigger)
 
 
 def read_master_stream(
@@ -123,7 +96,4 @@ def read_master_stream(
 ) -> DataFrame:
     """File-source stream of master rows — the test stand-in for a
     registry-ingest topic."""
-    reader = spark.readStream.schema(MASTER_BATCH_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, MASTER_BATCH_SCHEMA, max_files_per_trigger)

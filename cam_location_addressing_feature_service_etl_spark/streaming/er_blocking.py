@@ -31,7 +31,6 @@ recomputes identical content in any commit order.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.geo import (
@@ -40,7 +39,7 @@ from ..workload.geo import (
     blocking_quality_audit,
     blocking_true_pairs,
 )
-from .versioned import _versions, fold_version, read_latest
+from .versioned import _versions, fold_version, read_latest, run_fold_stream
 
 FEED_SCHEMA = "fn string"
 MASTER_SCHEMA = "mn string"
@@ -65,9 +64,7 @@ def _prior(
     return spark.createDataFrame([], schema)
 
 
-def apply_part_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
+def apply_part_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
     """Fold one part micro-batch into the three versioned states.
     Idempotent under foreachBatch replay: every derived frame reads
     only versions < ``batch_id`` plus the delta."""
@@ -98,7 +95,6 @@ def apply_part_batch(
         p_dir,
         PAIRS_SCHEMA,
         lambda state, delta: state.unionByName(delta).distinct(),
-        retain_versions,
     )
     fold_version(
         new_f,
@@ -106,7 +102,6 @@ def apply_part_batch(
         f_dir,
         FEED_SCHEMA,
         lambda state, delta: state.unionByName(delta).distinct(),
-        retain_versions,
     )
     fold_version(
         new_m,
@@ -114,7 +109,6 @@ def apply_part_batch(
         m_dir,
         MASTER_SCHEMA,
         lambda state, delta: state.unionByName(delta).distinct(),
-        retain_versions,
     )
 
 
@@ -123,19 +117,14 @@ def monitor_stream(
     state_dir: str,
     checkpoint_dir: str,
     trigger: dict | None = None,
-    retain_versions: int = 3,
 ) -> StreamingQuery:
     """Run the blocking-quality monitor over a part-row stream (any
     frame carrying ``p_name``)."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_part_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        parts.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
+    return run_fold_stream(
+        parts,
+        lambda batch, batch_id: apply_part_batch(batch, batch_id, state_dir),
+        checkpoint_dir,
+        trigger,
     )
 
 

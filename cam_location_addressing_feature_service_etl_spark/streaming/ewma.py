@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from ..workload.events import _EWMA_LAGS, _EWMA_W
+from .versioned import parquet_stream
 
 EVENT_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, value double"
 
@@ -136,10 +137,7 @@ def read_event_value_stream(
 ) -> DataFrame:
     """File-source stream of event rows — the test stand-in for the
     Kafka event feed."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger)
 
 
 __doc__ = __doc__.format(lags=_EWMA_LAGS)

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.geo import (
     _fs_decision_layers,
@@ -27,10 +26,8 @@ from ..workload.geo import (
     _fs_em_layers,
     _FS_EM_ROUNDS,
 )
-from .versioned import fold_version, read_latest
+from .versioned import Fold
 
-#: one row per agreement pattern k = a_first*4 + a_last*2 + a_close
-_STATE_SCHEMA = "k bigint, n bigint"
 #: incoming candidate batches carry the agreement vector
 GAMMA_SCHEMA = "a_first boolean, a_last boolean, a_close boolean"
 
@@ -50,34 +47,12 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_gamma_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one batch of agreement vectors into the versioned pattern
-    counts. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def train_stream(
-    gammas: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Run the trainer over a stream of (a_first, a_last, a_close)
-    agreement vectors (``GAMMA_SCHEMA``)."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_gamma_batch(batch, batch_id, state_dir)
-
-    return (
-        gammas.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+#: state: one row per agreement pattern k = a_first*4 + a_last*2 + a_close
+FSEM_FOLD = Fold("k bigint, n bigint", _merge)
+#: fold one batch of agreement vectors into the pattern counts
+apply_gamma_batch = FSEM_FOLD.apply
+#: run the trainer over a stream of agreement vectors (``GAMMA_SCHEMA``)
+train_stream = FSEM_FOLD.stream
 
 
 def _trained_frame(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -88,7 +63,7 @@ def _trained_frame(spark: SparkSession, state_dir: str) -> DataFrame:
     silently coerce to 1-1e-9, handing the consumer plausible-looking
     parameters with n_pairs=0. The guard is a lazy filter on the one
     aggregated row — no extra action."""
-    counts = read_latest(spark, state_dir, _STATE_SCHEMA)
+    counts = FSEM_FOLD.read(spark, state_dir)
     # widen the ≤8 count rows to the one n0..n7 row the EM program
     # references — disjoint-singleton sums, order-irrelevant, exact
     df = counts.agg(

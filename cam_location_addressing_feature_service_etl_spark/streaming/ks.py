@@ -19,12 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.events import ks_table_from_counts, ks_value_counts
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "event_type string, v bigint, n_ref bigint, n_cur bigint"
+from .versioned import Fold
 
 
 def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
@@ -38,38 +35,14 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_event_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one event micro-batch's (type, value-grid) counts into the
-    versioned state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the KS drift monitor over an (event_type, value, ts) event
-    stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_event_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+KS_FOLD = Fold("event_type string, v bigint, n_ref bigint, n_cur bigint", _merge)
+#: fold one event micro-batch's (type, value-grid) counts into the state
+apply_event_batch = KS_FOLD.apply
+#: run the KS drift monitor over an (event_type, value, ts) stream
+monitor_stream = KS_FOLD.stream
 
 
 def read_ks(spark: SparkSession, state_dir: str) -> DataFrame:
     """The standing KS drift table — the batch query's exact output
     shape from the folded counts; empty before any batch folds."""
-    return ks_table_from_counts(read_latest(spark, state_dir, _STATE_SCHEMA))
+    return ks_table_from_counts(KS_FOLD.read(spark, state_dir))

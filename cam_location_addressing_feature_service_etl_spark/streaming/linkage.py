@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.geo import link_feed_to_masters
+from .versioned import parquet_stream, run_fold_stream
 
 FEED_SCHEMA = "fk bigint, fn string"
 
@@ -42,10 +43,7 @@ def read_feed_stream(
 ) -> DataFrame:
     """File-source stream of dirty feed records (fk, fn) — the test
     stand-in for the Kafka feed of a live addressing service."""
-    reader = spark.readStream.schema(FEED_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, FEED_SCHEMA, max_files_per_trigger)
 
 
 def link_feed_stream(
@@ -75,9 +73,4 @@ def link_feed_stream(
         out = link_feed_to_masters(m, batch, tau, block_keys=block_keys)
         out.write.mode("append").parquet(out_dir)
 
-    return (
-        feed_stream.writeStream.foreachBatch(_link_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+    return run_fold_stream(feed_stream, _link_batch, checkpoint_dir, trigger)

@@ -19,12 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .versioned import _versions, fold_version, read_latest
+from .versioned import Fold, _versions, parquet_stream
 
 DELTA_SCHEMA = "user_id bigint, dn bigint, dv bigint"
-_VIEW_SCHEMA = "user_id bigint, n_events bigint, total_centi bigint"
 
 
 def read_view(spark: SparkSession, view_dir: str) -> DataFrame:
@@ -32,7 +30,7 @@ def read_view(spark: SparkSession, view_dir: str) -> DataFrame:
     frame with the view schema when no version exists yet. Keys whose
     live count is non-positive are filtered HERE, at read time — the
     stored state keeps them (see ``_merge``)."""
-    return read_latest(spark, view_dir, _VIEW_SCHEMA).filter(
+    return VIEW_FOLD.read(spark, view_dir).filter(
         F.col("n_events") > 0
     )
 
@@ -57,39 +55,16 @@ def _merge(view: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_delta_batch(
-    delta: DataFrame, batch_id: int, view_dir: str, retain_versions: int = 3
-) -> None:
-    """Apply one signed-delta micro-batch: merge into the latest prior
-    view version (union + one groupBy) and write ``v=<batch_id>``.
-    Replays are idempotent. The STORED state may carry non-positive
-    keys (negative carries from CDC disorder; only exactly-balanced
-    (0, 0) keys are garbage-collected) — consumers read through
-    ``read_view``, which filters to live keys, never ``read_latest``
-    directly."""
-    fold_version(
-        delta, batch_id, view_dir, _VIEW_SCHEMA, _merge, retain_versions
-    )
-
-
-def maintain_view_stream(
-    cdc_stream: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Run the maintenance loop over a (user_id, dn, dv) signed-delta
-    stream (``DELTA_SCHEMA``)."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_delta_batch(batch, batch_id, view_dir)
-
-    return (
-        cdc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+VIEW_FOLD = Fold("user_id bigint, n_events bigint, total_centi bigint", _merge)
+#: apply one signed-delta micro-batch: merge into the latest prior view
+#: version (union + one groupBy) and write ``v=<batch_id>``. The STORED
+#: state may carry non-positive keys (negative carries from CDC
+#: disorder; only exactly-balanced (0, 0) keys are garbage-collected) —
+#: consumers read through ``read_view``, which filters to live keys,
+#: never ``VIEW_FOLD.read`` directly
+apply_delta_batch = VIEW_FOLD.apply
+#: run the maintenance loop over a signed-delta stream (``DELTA_SCHEMA``)
+maintain_view_stream = VIEW_FOLD.stream
 
 
 def read_delta_stream(
@@ -97,7 +72,4 @@ def read_delta_stream(
 ) -> DataFrame:
     """File-source stream of signed delta rows — the test stand-in for
     a CDC topic."""
-    reader = spark.readStream.schema(DELTA_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, DELTA_SCHEMA, max_files_per_trigger)

@@ -39,10 +39,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from .versioned import fold_version, read_latest
+from .versioned import Fold, parquet_stream
 
 #: signed CDC rows: kind 'base' (a base-table arrival), 'ins' (an
 #: insert tracked outside the heap), 'del' (a retraction of one base
@@ -143,12 +142,11 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     return new_heap.unionByName(del_rows).unionByName(ins_rows)
 
 
-def apply_max_delta_batch(
-    delta: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one CDC micro-batch into the versioned heap state.
-    Idempotent under foreachBatch replay (versioned-fold discipline)."""
-    fold_version(delta, batch_id, state_dir, STATE_SCHEMA, _merge, retain_versions)
+MAX_FOLD = Fold(STATE_SCHEMA, _merge)
+#: fold one CDC micro-batch into the versioned heap state
+apply_max_delta_batch = MAX_FOLD.apply
+#: run the heap-maintenance loop over a CDC stream (``DELTA_SCHEMA``)
+maintain_max_view_stream = MAX_FOLD.stream
 
 
 def read_max_view(
@@ -161,7 +159,7 @@ def read_max_view(
     keys, semi-join-pruned. Flag semantics match the batch op exactly:
     ``recomputed`` = no surviving heap value (so an insert-only key is
     flagged too)."""
-    state = read_latest(spark, state_dir, STATE_SCHEMA)
+    state = MAX_FOLD.read(spark, state_dir)
     surv = (
         state.filter(
             (F.col("kind") == "heap") & (F.col("n_base") > F.col("n_del"))
@@ -231,31 +229,8 @@ def read_max_view(
     return maintained.unionByName(recomputed)
 
 
-def maintain_max_view_stream(
-    cdc_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Run the heap-maintenance loop over a (user_id, v, kind) CDC
-    stream (``DELTA_SCHEMA``)."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_max_delta_batch(batch, batch_id, state_dir)
-
-    return (
-        cdc_stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
-
-
 def read_max_delta_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream of CDC rows — the test stand-in for a topic."""
-    reader = spark.readStream.schema(DELTA_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, DELTA_SCHEMA, max_files_per_trigger)

@@ -16,12 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.events import _PSI_BANDS, psi_band_col as band_col
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "band bigint, n bigint"
+from .versioned import Fold
 
 
 def freeze_reference(events: DataFrame, ref_dir: str) -> None:
@@ -40,34 +37,11 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_psi_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one monitored micro-batch's band counts into the versioned
-    state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Run the monitor over an event stream carrying a ``value``
-    column."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_psi_batch(batch, batch_id, state_dir)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+PSI_FOLD = Fold("band bigint, n bigint", _merge)
+#: fold one monitored micro-batch's band counts into the state
+apply_psi_batch = PSI_FOLD.apply
+#: run the monitor over an event stream carrying a ``value`` column
+monitor_stream = PSI_FOLD.stream
 
 
 def read_psi(spark: SparkSession, state_dir: str, ref_dir: str) -> DataFrame:
@@ -78,7 +52,7 @@ def read_psi(spark: SparkSession, state_dir: str, ref_dir: str) -> DataFrame:
     ref = spark.read.parquet(ref_dir).select(
         "band", F.col("n").alias("r")
     )
-    cur = read_latest(spark, state_dir, _STATE_SCHEMA).select(
+    cur = PSI_FOLD.read(spark, state_dir).select(
         "band", F.col("n").alias("c")
     )
     cnt = (

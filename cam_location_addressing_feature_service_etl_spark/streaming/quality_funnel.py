@@ -21,18 +21,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.llm_text import (
     funnel_counts,
     funnel_doc_flags,
     funnel_table_from_counts,
 )
-from .versioned import fold_version, read_latest
+from .versioned import Fold
 
-_STATE_SCHEMA = (
-    "n_total bigint, k1 bigint, k2 bigint, k3 bigint, k4 bigint"
-)
 _COUNTERS = ("n_total", "k1", "k2", "k3", "k4")
 
 
@@ -48,40 +44,14 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_document_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one document micro-batch's survival counters into the
-    versioned state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    documents: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the funnel monitor over a (doc_id, lang, text) document
-    stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_document_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        documents.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+FUNNEL_FOLD = Fold(", ".join(f"{c} bigint" for c in _COUNTERS), _merge)
+#: fold one document micro-batch's survival counters into the state
+apply_document_batch = FUNNEL_FOLD.apply
+#: run the funnel monitor over a (doc_id, lang, text) document stream
+monitor_stream = FUNNEL_FOLD.stream
 
 
 def read_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     """The standing funnel table — the batch query's exact output
     shape from the folded counters; empty before any batch folds."""
-    return funnel_table_from_counts(
-        read_latest(spark, state_dir, _STATE_SCHEMA)
-    )
+    return funnel_table_from_counts(FUNNEL_FOLD.read(spark, state_dir))

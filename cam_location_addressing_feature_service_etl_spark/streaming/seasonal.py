@@ -26,12 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..workload.events import _SEASONAL_Z
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "event_type string, hod bigint, n decimal(38,0), sx decimal(38,0), sxx decimal(38,0)"
+from .versioned import Fold
 
 
 def _cells(events: DataFrame) -> DataFrame:
@@ -68,34 +65,15 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def apply_baseline_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one event micro-batch's cell moments into the versioned
-    baseline. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def monitor_stream(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the learning-baseline loop over an event stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_baseline_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+SEASONAL_FOLD = Fold(
+    "event_type string, hod bigint, "
+    "n decimal(38,0), sx decimal(38,0), sxx decimal(38,0)",
+    _merge,
+)
+#: fold one event micro-batch's cell moments into the baseline
+apply_baseline_batch = SEASONAL_FOLD.apply
+#: run the learning-baseline loop over an event stream
+monitor_stream = SEASONAL_FOLD.stream
 
 
 def score_batch(
@@ -106,7 +84,7 @@ def score_batch(
     (event_id, event_type, hod, z), flagged at |z| > the shared
     threshold; zero-variance and never-seen cells are excluded
     exactly, as in the batch form."""
-    base = read_latest(spark, state_dir, _STATE_SCHEMA)
+    base = SEASONAL_FOLD.read(spark, state_dir)
     q = events.select(
         "event_id",
         "event_type",

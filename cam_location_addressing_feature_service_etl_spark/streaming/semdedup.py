@@ -57,6 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .versioned import parquet_stream
+
 ASSIGNED_SCHEMA = "vec_id bigint, cluster bigint, nv array<double>"
 
 OUTPUT_SCHEMA = StructType(
@@ -172,7 +174,4 @@ def read_assigned_stream(
 ) -> DataFrame:
     """File-source stream of assigned vectors — the test stand-in for
     the Kafka embedding feed of a live ingest pipeline."""
-    reader = spark.readStream.schema(ASSIGNED_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return parquet_stream(spark, path, ASSIGNED_SCHEMA, max_files_per_trigger)

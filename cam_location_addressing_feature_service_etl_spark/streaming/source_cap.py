@@ -29,16 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from ..workload.llm_text import (
-    _SRC_CAP,
-    source_cap_phase1,
-    source_cap_phase2,
-)
-from .versioned import fold_version, read_latest
-
-_STATE_SCHEMA = "source string, doc_id bigint, n_chars bigint"
+from ..workload.llm_text import source_cap_phase1, source_cap_phase2
+from .versioned import Fold
 
 
 def _dedup_doc_id(df: DataFrame) -> DataFrame:
@@ -75,35 +68,11 @@ def _merge(state: DataFrame, delta: DataFrame) -> DataFrame:
     ).select("source", "doc_id", "n_chars")
 
 
-def apply_doc_batch(
-    batch: DataFrame, batch_id: int, state_dir: str, retain_versions: int = 3
-) -> None:
-    """Fold one document micro-batch into the per-source top-cap
-    state. Idempotent under foreachBatch replay."""
-    fold_version(
-        batch, batch_id, state_dir, _STATE_SCHEMA, _merge, retain_versions
-    )
-
-
-def cap_stream(
-    docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-    retain_versions: int = 3,
-) -> StreamingQuery:
-    """Run the per-source cap over a (source, doc_id, n_chars, ...)
-    document stream."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        apply_doc_batch(batch, batch_id, state_dir, retain_versions)
-
-    return (
-        docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
+CAP_FOLD = Fold("source string, doc_id bigint, n_chars bigint", _merge)
+#: fold one document micro-batch into the per-source top-cap state
+apply_doc_batch = CAP_FOLD.apply
+#: run the per-source cap over a (source, doc_id, n_chars, ...) stream
+cap_stream = CAP_FOLD.stream
 
 
 def read_source_cap(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -111,6 +80,4 @@ def read_source_cap(spark: SparkSession, state_dir: str) -> DataFrame:
     (source, doc_id, n_chars, rnk) from the folded state; empty before
     any batch folds. The rank recompute runs over ≤ cap rows per
     source."""
-    return source_cap_phase2(
-        read_latest(spark, state_dir, _STATE_SCHEMA)
-    )
+    return source_cap_phase2(CAP_FOLD.read(spark, state_dir))

@@ -1,6 +1,8 @@
 """Idempotent versioned state folding for foreachBatch sinks — the
-shared discipline behind streaming MV maintenance (``streaming/mv.py``)
-and streaming model training (``streaming/classify.py``).
+exactly-once discipline behind every streaming twin that keeps state
+in parquet (``streaming/mv.py``, the DQ monitors, the model trainer,
+the entity and dedup registries), plus the three pieces each of them
+would otherwise hand-copy around it.
 
 foreachBatch is at-least-once; folding a batch into standing state is
 not idempotent naively. The fix is one rule: batch ``b`` reads the
@@ -12,7 +14,23 @@ format, reduced to the one sequence number foreachBatch already
 guarantees monotone). Readers take the max committed version; versions
 beyond a retention count are pruned (time travel for free until then).
 
-Two layouts share that rule:
+The shared pieces:
+
+- ``Fold(schema, merge)`` — a monitor's whole versioned-state
+  contract: the state schema and the ``merge(prior, batch)`` that
+  folds one micro-batch into it. ``apply`` folds one batch
+  (``fold_version``), ``stream`` runs the fold over a stream
+  (``run_fold_stream``), ``read`` returns the current state
+  (``read_latest``). A monitor module is its schema, its merge and
+  its read-side formula; its public ``apply_*_batch`` /
+  ``monitor_stream`` names are bindings of one ``Fold``'s methods.
+- ``run_fold_stream(stream, apply, checkpoint_dir, trigger)`` — the
+  one foreachBatch + checkpoint + trigger sink every fold stream and
+  every per-batch append stream starts through.
+- ``parquet_stream(spark, path, schema)`` — the file-source stand-in
+  for a topic that every fixed-schema stream reader returns.
+
+Two state layouts share the exactly-once rule:
 
 - ``fold_version`` — each version is the FULL state as one parquet
   dir. Right for kilobyte states (psi bands, fsem's 8 counts); wrong
@@ -35,9 +53,11 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..runtime import materialize, scoped_plan_refs
 
@@ -118,6 +138,86 @@ def fold_version(
     for v in _versions(spark, state_dir):
         if v not in keep:
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v={v}"), True)
+
+
+def run_fold_stream(
+    stream: DataFrame,
+    apply: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger: dict | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` with every micro-batch handed to
+    ``apply(batch, batch_id)`` and progress checkpointed in
+    ``checkpoint_dir``. ``trigger`` is the deployment setting passed to
+    ``writeStream.trigger``: the default ``availableNow`` drains what
+    exists and FINISHES (tests, catch-up runs); a live feed needs
+    ``{"processingTime": "..."}`` or the query stops after the initial
+    drain. A batch whose ``apply`` raises fails the query without
+    committing that batch, so a restart from the same checkpoint
+    replays it — exactly-once when ``apply`` is a versioned fold."""
+    return (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
+        .start()
+    )
+
+
+def parquet_stream(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source stream of ``schema`` rows under ``path`` — the test
+    stand-in for a Kafka topic. ``max_files_per_trigger`` caps each
+    micro-batch (tests use 1 so a multi-file replay actually crosses
+    micro-batch boundaries)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+@dataclass(frozen=True)
+class Fold:
+    """A flat-layout versioned fold: the state ``schema`` and the
+    ``merge(prior, batch)`` folding one micro-batch into it."""
+
+    schema: str
+    merge: Callable[[DataFrame, DataFrame], DataFrame]
+
+    def apply(
+        self,
+        batch: DataFrame,
+        batch_id: int,
+        state_dir: str,
+        retain_versions: int = 3,
+    ) -> None:
+        """Fold one micro-batch into the state under ``state_dir``.
+        Idempotent under foreachBatch replay."""
+        fold_version(
+            batch, batch_id, state_dir, self.schema, self.merge, retain_versions
+        )
+
+    def stream(
+        self,
+        events: DataFrame,
+        state_dir: str,
+        checkpoint_dir: str,
+        trigger: dict | None = None,
+    ) -> StreamingQuery:
+        """Fold every micro-batch of ``events`` (``run_fold_stream``)."""
+        return run_fold_stream(
+            events,
+            lambda batch, batch_id: self.apply(batch, batch_id, state_dir),
+            checkpoint_dir,
+            trigger,
+        )
+
+    def read(self, spark: SparkSession, state_dir: str) -> DataFrame:
+        """The current state; empty before any batch folds."""
+        return read_latest(spark, state_dir, self.schema)
 
 
 # ---------------------------------------------------------------------------

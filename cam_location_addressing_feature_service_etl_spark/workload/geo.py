@@ -2167,31 +2167,11 @@ def er_empty_registry(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], ER_REGISTRY_SCHEMA)
 
 
-def er_prepare_batch(batch: DataFrame) -> DataFrame:
-    """STATE-INDEPENDENT batch prep for ``er_resolve_increment``: the
-    batch's per-name key minima, a pure function of the batch. Callers
-    folding several batches run this on driver threads
-    (``runtime.prefetch``, guide §2.6) so the prep jobs overlap earlier
-    folds' state-dependent tails; the ``count()`` triggers the lazy
-    checkpoint inside the prefetch thread (that is the point — the
-    scan+aggregate runs off the consuming fold's critical path)."""
-    from ..runtime import materialize
-
-    batch_stats = (
-        batch.groupBy(F.col("mn").alias("nm"))
-        .agg(F.min("mk").alias("bmk"))
-        .transform(materialize)
-    )
-    batch_stats.count()
-    return batch_stats
-
-
 def er_resolve_increment(
     registry: DataFrame,
     batch: DataFrame,
     tau: int = _LINK_TAU,
     block_keys: tuple[str, ...] = _LINK_BLOCK_STRATEGIES,
-    batch_stats: DataFrame | None = None,
 ) -> DataFrame:
     """Fold ONE batch of master rows (mk, mn) into the standing entity
     registry (``ER_REGISTRY_SCHEMA``) WITHOUT re-resolving the corpus:
@@ -2234,12 +2214,11 @@ def er_resolve_increment(
     from ..runtime import materialize
 
     spark = batch.sparkSession
-    if batch_stats is None:
-        batch_stats = (
-            batch.groupBy(F.col("mn").alias("nm"))
-            .agg(F.min("mk").alias("bmk"))
-            .transform(materialize)
-        )
+    batch_stats = (
+        batch.groupBy(F.col("mn").alias("nm"))
+        .agg(F.min("mk").alias("bmk"))
+        .transform(materialize)
+    )
     reg_names = registry.select("nm")
     new_names = (
         batch_stats.select("nm")
@@ -2381,19 +2360,14 @@ def er_incremental_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     names first seen in batches 0 and 1, so labels merge AFTER both
     components already exist (also pinned, with a hand-built forced
     bridge, in tests/test_er_incremental.py)."""
-    from ..runtime import materialize, prefetch
+    from ..runtime import materialize
 
     tune(spark)
     m = _er_masters(load(spark, sf_dir, "part")).transform(materialize)
     registry = er_empty_registry(spark)
-    # §2.6 overlap (r16 verdict #1): each batch's per-name key-min prep
-    # is state-independent, so the three preps run on driver threads
-    # while earlier folds' PassJoin/verify/re-label tails execute.
-    batches = [m.filter(F.col("mk") % 3 == i) for i in range(3)]
-    preps = prefetch(*[(lambda b=b: er_prepare_batch(b)) for b in batches])
     for i in range(3):
         registry = er_resolve_increment(
-            registry, batches[i], batch_stats=preps[i].result()
+            registry, m.filter(F.col("mk") % 3 == i)
         ).transform(materialize)
     return registry
 

@@ -3272,12 +3272,10 @@ def dedup_incremental_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, write-IO ∝ touched doc-hash buckets."""
     from ..operators.dedup_registry import (
         dedup_fold_increment,
-        dedup_prepare_batch,
         empty_dedup_dfreq,
         empty_dedup_postings,
         empty_dedup_registry,
     )
-    from ..runtime import prefetch
 
     (documents,) = _t(spark, sf_dir, "documents")
     registry = empty_dedup_registry(spark)
@@ -3286,27 +3284,14 @@ def dedup_incremental_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # what keeps each fold free of any ∝-corpus aggregate — the fold
     # only ever looks its batch's shingles up in it
     dfreq = empty_dedup_dfreq(spark)
-    # §2.6 overlap (r16 verdict #1): each batch's tokenize/shingle/hash
-    # prep is a pure function of the batch, so all three preps run on
-    # driver threads while earlier folds' state-dependent tails (gates,
-    # verify, re-label) execute — the prep jobs fill the fold loop's
-    # measured inter-job driver gaps instead of queueing behind them.
-    batches = [documents.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    preps = prefetch(
-        *[
-            (lambda b=b: dedup_prepare_batch(b, _NJ_SHINGLE_N))
-            for b in batches
-        ]
-    )
     for i in range(3):
         registry, postings, dfreq = dedup_fold_increment(
             registry,
             postings,
-            batches[i],
+            documents.filter(F.col("doc_id") % 3 == i),
             threshold=_CC_THRESHOLD,
             shingle_n=_NJ_SHINGLE_N,
             dfreq=dfreq,
-            pre=preps[i].result(),
         )
         registry = materialize(registry)
         postings = materialize(postings)

@@ -326,31 +326,3 @@ def test_fold_gate_picks_branch_and_output_invariant(spark):
     finally:
         dr._fold_pairs_naive, dr._fold_pairs_prefix = orig_naive, orig_prefix
 
-
-def test_prefetched_prep_matches_inline_fold(spark):
-    """The r17 prefetch path (dedup_prepare_batch + pre=) only reorders
-    the anti-join around the batch's tokenize/shingle prep — the fold's
-    three outputs must be row-identical to the inline path, INCLUDING
-    when the batch re-ingests already-registered docs (the case where
-    the prep does wasted-but-harmless work on rows the anti-join then
-    drops)."""
-    from cam_location_addressing_feature_service_etl_spark.operators.dedup_registry import (
-        dedup_prepare_batch,
-    )
-
-    base = spark.createDataFrame(
-        [(1, _w(1, 11)), (2, _w(1, 10)), (3, "unrelated text entirely")],
-        DOC_SCHEMA,
-    )
-    reg, post, dfq = _fold_chain(spark, base, [F.lit(True)])
-    # batch 2 re-ingests doc 2 and adds near-dup 4 + novel 5
-    batch = spark.createDataFrame(
-        [(2, _w(1, 10)), (4, _w(1, 12)), (5, "another novel document")],
-        DOC_SCHEMA,
-    )
-    inline = dedup_fold_increment(reg, post, batch, dfreq=dfq)
-    pre = dedup_prepare_batch(batch)
-    prefed = dedup_fold_increment(reg, post, batch, dfreq=dfq, pre=pre)
-    for a, b in zip(inline, prefed):
-        assert _rows(a) == _rows(b)
-    assert _rows(_registry_out(prefed[0])) != _rows(_registry_out(reg))

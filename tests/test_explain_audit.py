@@ -197,6 +197,8 @@ PLAN_SHAPE_MAX: dict[str, tuple[int, int, int]] = {
     "dedup_cc_star_converged": (0, 0, 0),
     "dedup_cluster_canonical": (5, 1, 0),
     "sample_split_leakfree": (3, 0, 0),
+    # one-shot ER resolve: blocking PassJoin + star-CC label chain
+    "er_resolve_entities": (15, 0, 0),
 }
 
 #: Queries allowed to keep a Window with an EMPTY partition spec — the

@@ -10,26 +10,29 @@ Spark-first design:
 
 - new keys = ``left_anti`` against the existing map (tolerant of
   already-converted ids via the UNION trick, see ``new_key_filter``);
-- ids = ``max(existing.id) + row_number() OVER (ORDER BY key)`` —
+- ids = ``max(existing.id) + rank(key)`` over the new keys only —
   deterministic, dense, stable. ``monotonically_increasing_id`` is
-  explicitly avoided: it is neither dense nor stable across runs.
+  never the id: it is neither dense nor stable across runs. The bulk
+  path reads only its lower 33 bits, a row's position within its
+  partition.
 
 Scale: the incremental numbering ranks ONLY the *new* keys of one
 increment (small by definition in an incremental ETL) on a single
 reducer — via the windowless sorted-array rank of ``operators/topk``,
-which does not spill. For a bulk first load at 100 TB use
-``zipWithIndex``-free two-phase numbering: per-partition counts →
-offsets broadcast → partition-local row_number + offset. Implemented
-here as ``assign_surrogate_ids_bulk``.
+which does not spill. ``assign_surrogate_ids_bulk`` is the
+corpus-sized path: range-partition and sort the new keys, read the
+per-partition counts on the driver (one row per partition), and number
+each row in one narrow projection from its partition's offset and its
+position within the partition — the numbering itself needs no window,
+exchange or join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .topk import ASC, prefix_sum_small_frame, rank_small_frame
+from .topk import ASC, rank_small_frame
 from ..runtime import materialize
 
 
@@ -111,56 +114,43 @@ def assign_surrogate_ids_bulk(
     """Bulk variant: same contract as ``assign_surrogate_ids`` but the
     new-key numbering is distributed (no single-partition window).
 
-    Two-phase: sort-repartition new keys by key (range partitioning),
-    count per partition, prefix-sum the counts into per-partition
-    offsets, then number partition-locally. Deterministic because range
-    partitioning + in-partition sort give a total order by key.
+    Two-phase: range-partition and sort the new keys, read each
+    partition's row count and the carried ``max(id)`` on the driver,
+    then number every key in one narrow projection:
+    ``start + offset[partition] + position within partition + 1``.
+    Deterministic because range partitioning + in-partition sort give a
+    total order by key.
     """
-    distinct_keys = keys.select(key_col).distinct()
-    # Materialize the range-partitioned sort ONCE: both the offset
-    # aggregation and the numbering consume it, and lineage-cutting
-    # here both avoids recomputing the subtree per branch and makes
-    # spark_partition_id stability a guarantee rather than a
-    # reuse-the-exchange accident.
+    # Materialize the range-partitioned sort ONCE: the counts and the
+    # numbering both read it, and cutting lineage makes each row's
+    # partition and in-partition position fixed. Under AQE the sort's
+    # shuffle stages already run here, while the plan is built, so the
+    # two driver reads below only scan the materialized frame and the
+    # carried map.
     new_keys = (
-        distinct_keys.join(existing_map.select(key_col), key_col, "left_anti")
+        keys.select(key_col)
+        .distinct()
+        .join(existing_map.select(key_col), key_col, "left_anti")
         .repartitionByRange(F.col(key_col))
         .sortWithinPartitions(key_col)
         .transform(materialize)
     )
-    # Lazy 1-row start frame (broadcast below) — a driver-side
-    # collect() here would execute real jobs at PLAN-BUILD time, making
-    # explain/plan-audit consumers pay full compute before any action.
-    start = existing_map.agg(F.coalesce(F.max("id"), F.lit(0)).alias("_start"))
-
-    # spark_partition_id is stable for a materialized partitioning; use
-    # a window per partition id with a precomputed offset join.
-    with_pid = new_keys.withColumn("_pid", F.spark_partition_id())
-    counts = with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # Prefix-sum the per-partition counts into offsets WITHOUT a window
-    # (the offsets frame is numPartitions rows; an empty-partition-spec
-    # window would still plan as the warned single-partition
-    # WindowExec): operators/topk.py's sorted-array prefix sum. O(P²)
-    # scalar adds inside one row — fine to ~10k partitions; for extreme
-    # partition counts do this prefix sum driver-side (the zipWithIndex
-    # approach).
-    offsets = prefix_sum_small_frame(
-        counts,
-        [(F.col("_pid"), ASC)],
-        ["_pid"],
-        sum_col="_cnt",
-        sum_name="_off",
-        inclusive=False,
-    )
-    w_local = Window.partitionBy("_pid").orderBy(key_col)
-    numbered = (
-        with_pid.join(F.broadcast(offsets), "_pid")
-        .crossJoin(F.broadcast(start))
-        .withColumn(
-            "id",
-            (F.col("_start") + F.col("_off") + F.row_number().over(w_local)).cast("long"),
-        )
-        .select(key_col, "id")
+    pid = F.spark_partition_id()
+    counts = dict(new_keys.groupBy(pid).count().collect())
+    start = existing_map.agg(F.max("id")).first()[0] or 0
+    # the id just before each partition's first, indexed by partition
+    # id; an empty range partition gets a slot that no row reads
+    bases = []
+    for p in range(max(counts, default=-1) + 1):
+        bases.append(start)
+        start += counts.get(p, 0)
+    # position within the partition: monotonically_increasing_id puts
+    # the partition id in the upper 31 bits and the record number in
+    # the lower 33 — only the record number is used, never the id
+    position = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    numbered = new_keys.select(
+        key_col,
+        (F.lit(bases).cast("array<bigint>")[pid] + position + 1).alias("id"),
     )
     return existing_map.select(key_col, "id").unionByName(numbered)
 

@@ -95,15 +95,14 @@ def prefix_sum_small_frame(
     cols: list[str],
     sum_col: str,
     sum_name: str,
-    inclusive: bool = True,
 ) -> DataFrame:
     """Running total of ``sum_col`` (a BIGINT column) over a SMALL
     frame ordered by ``keys``, without a window: the same sorted-array
     aggregate as :func:`rank_small_frame`, with each row's total
-    computed from its array prefix (``inclusive`` chooses whether the
-    row's own value is counted). O(k²) scalar adds on k rows. Output
-    columns: ``cols`` + ``sum_name``. DESC keys must be numeric
-    (enforced, same negation caveat as :func:`rank_small_frame`)."""
+    computed from its array prefix, the row's own value included.
+    O(k²) scalar adds on k rows. Output columns: ``cols`` +
+    ``sum_name``. DESC keys must be numeric (enforced, same negation
+    caveat as :func:`rank_small_frame`)."""
     _check_desc_keys_numeric(df, keys)
     sort_fields = [
         ((-c) if d == DESC else c).alias(f"_s{i}") for i, (c, d) in enumerate(keys)
@@ -112,14 +111,13 @@ def prefix_sum_small_frame(
     payload = [F.col(c).alias(c) for c in carried]
     arr = F.array_sort(F.collect_list(F.struct(*sort_fields, *payload)))
     inner = ", ".join(f"x.{c} AS {c}" for c in cols)
-    off = 1 if inclusive else 0
     return (
         df.agg(arr.alias("_a"))
         .select(
             F.explode(
                 F.expr(
                     f"transform(_a, (x, i) -> struct({inner}, "
-                    f"aggregate(slice(_a, 1, i + {off}), 0L, "
+                    "aggregate(slice(_a, 1, i + 1), 0L, "
                     f"(acc, y) -> acc + y.{sum_col}) AS {sum_name}))"
                 )
             ).alias("_r")

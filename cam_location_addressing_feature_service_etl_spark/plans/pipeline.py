@@ -96,7 +96,10 @@ def surrogate_id_pass(
     ``pls/tables.py:934-938``)."""
     # the BULK numbering: on a first run (empty carried-forward map)
     # every key of the table is "new", so this path must be the
-    # spill-safe distributed form, not the small-increment array rank
+    # spill-safe distributed form, not the small-increment array rank.
+    # The new keys are sorted and counted once, while the plan is
+    # built; the rewritten table and the published map each number
+    # them with a narrow projection over that result.
     full_map = assign_surrogate_ids_bulk(
         table.select(F.col(pk_col).alias("iri")), existing_map
     )

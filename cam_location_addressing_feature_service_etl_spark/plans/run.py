@@ -116,16 +116,13 @@ def run_etl(
     out["address_iri_pid_map"] = iri_pid_map
     out["metadata"] = metadata_df(spark, start_time, end_time)
 
-    # 4. publish — the tables the NEXT run reads back by key get the
-    #    clustered layout (range-disjoint files, tight min/max on the
-    #    lookup key), so the restore step's joins/filters prune files:
-    #    the iri→pid cache is probed by address_iri, every id map by
-    #    iri (sources/snapshot.py write_snapshot sort_specs).
+    # 4. publish — every table is written as planned, with no
+    #    clustered layout: the next run's restore reads the cache and
+    #    the id maps whole (their scans push only IsNotNull), so
+    #    range-disjoint files would prune nothing and only add a
+    #    sampling job, a range exchange and a sort to each write.
     snap_ts = format_run_timestamp(end_time)
-    sort_specs = {"address_iri_pid_map": ["address_iri"]}
-    for name in tables_to_remap:
-        sort_specs[f"{name}_id_map"] = ["iri"]
-    snapshot_path = write_snapshot(out, snapshot_root, snap_ts, sort_specs)
+    snapshot_path = write_snapshot(out, snapshot_root, snap_ts)
     key = artifact_key(end_time)
     headers = build_artifact_headers(
         etl_started_at=start_time,

@@ -79,11 +79,10 @@ def write_snapshot(
     ``sort_specs`` (table name → sort columns) opts a table into the
     clustered layout of ``plans/compact.py``: one
     ``repartitionByRange`` + ``sortWithinPartitions`` so its files
-    carry DISJOINT key ranges and tight min/max stats — the next run
-    reads these tables back (carry-forward, id maps), and key
-    filters/joins then prune files instead of scanning the snapshot.
-    Default is unchanged (write as-is); this is the write-time twin of
-    the post-hoc ``compact_parquet`` maintenance pass."""
+    carry DISJOINT key ranges and tight min/max stats, which prune
+    files for a reader that filters on a key range. Default is
+    unchanged (write as-is); ``run_etl`` uses the default, because its
+    restore reads every snapshot table whole."""
     unknown = set(sort_specs or {}) - set(tables)
     if unknown:
         # a typo'd/renamed table name would otherwise silently lose its

@@ -733,7 +733,8 @@ def m3_stable_surrogate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pre-seed the map with the first 100 keys (mirrors a carried-forward
     map), assign max(id)+row_number over deterministic iri order to the
     rest, then rewrite the table PK text→int via the map join. Never
-    uses monotonically_increasing_id (not dense, not stable).
+    takes an id from monotonically_increasing_id (not dense, not
+    stable).
     """
     (part,) = _t(spark, sf_dir, "part")
     iris = part.select(

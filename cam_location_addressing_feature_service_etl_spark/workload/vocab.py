@@ -170,7 +170,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["tok", "cnt"],
         sum_col="cnt",
         sum_name="cum_count",
-        inclusive=True,
     )
     return (
         cum.crossJoin(F.broadcast(tot))

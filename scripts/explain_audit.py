@@ -9,15 +9,14 @@ Usage: python scripts/explain_audit.py [sf_dir] [name_substring ...]
 Known-intentional CARTESIAN flags (broadcast cross joins against tiny
 build sides, the designed plan): sim_cosine_topk_bruteforce /
 sim_ann_ivf_bucketed (every vector scored against a broadcast query /
-centroid set), m3_stable_surrogate_ids (1-row max-id broadcast), and
-ev_value_band_join (inequality join against a 3-row literal dimension
-— BroadcastNestedLoop with a tiny build side IS the plan), and the
-1-row broadcast scalar aggregates in text_tfidf_topk (corpus doc
-count), text_unigram_logprob (corpus token total), and
+centroid set), and ev_value_band_join (inequality join against a 3-row
+literal dimension — BroadcastNestedLoop with a tiny build side IS the
+plan), and the 1-row broadcast scalar aggregates in text_tfidf_topk
+(corpus doc count), text_unigram_logprob (corpus token total), and
 ev_funnel_conversion (three stage counts combined into one row), and
-sim_kmeans_assignments (every vector scored against the broadcast
-k=8 centroid set — one per Lloyd round plus the init top-k), and the
-1-row broadcast scalars in emb_pca_power_projection (per-round max|u|
+sim_kmeans_assignments (every vector scored against the broadcast k=8
+centroid set — one per Lloyd round plus the init top-k), and the 1-row
+broadcast scalars in emb_pca_power_projection (per-round max|u|
 renormalizer), sample_temperature_mix (total source weight), and
 text_vocab_coverage (corpus token total), and emb_ivfpq_index (every
 member vector scored against the broadcast 8-row cell-centroid set —

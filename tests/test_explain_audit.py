@@ -71,7 +71,6 @@ CARTESIAN_ALLOWED = {
     # broadcast argmin (the sim_ann_ivf_trained shape)
     "sim_rrf_fusion_ann",
     # 1-row broadcast scalar aggregates
-    "m3_stable_surrogate_ids",      # lazy 1-row max-id start frame
     "text_tfidf_topk",              # corpus doc count
     "text_unigram_logprob",         # corpus token total
     "ev_funnel_conversion",         # three stage counts in one row
@@ -199,6 +198,10 @@ PLAN_SHAPE_MAX: dict[str, tuple[int, int, int]] = {
     "sample_split_leakfree": (3, 0, 0),
     # one-shot ER resolve: blocking PassJoin + star-CC label chain
     "er_resolve_entities": (15, 0, 0),
+    # bulk surrogate ids numbered in one narrow projection over the
+    # materialized new keys (was (8, 1, 0): count exchanges, prefix-sum
+    # aggregate, max-id cross join, _pid window)
+    "m3_stable_surrogate_ids": (2, 0, 0),
 }
 
 #: Queries allowed to keep a Window with an EMPTY partition spec — the

@@ -7,12 +7,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cam_location_addressing_feature_service_etl_spark.operators import id_map
 from cam_location_addressing_feature_service_etl_spark.operators.id_map import (
     assign_surrogate_ids,
     assign_surrogate_ids_bulk,
     new_key_filter,
     rewrite_pk_to_id,
 )
+from cam_location_addressing_feature_service_etl_spark.runtime import materialize
 
 PARCEL_IRIS = [
     f"https://linked.data.gov.au/dataset/qld-addr/parcel/{i}SP149947" for i in range(10)
@@ -73,14 +75,66 @@ def test_rewrite_pk_postcondition(spark):
     assert dict(rewritten.dtypes)["parcel_id"] == "bigint"
 
 
-def test_bulk_variant_matches_simple(spark):
+def _gapped(df):
+    """``df``'s partitions moved to the odd partition ids, order kept,
+    so an empty partition sits before each non-empty one: the bulk
+    numbering indexes its offsets by partition id and must skip them."""
+    rdd = df.rdd.mapPartitionsWithIndex(lambda i, rows: ((2 * i + 1, r) for r in rows))
+    n = 2 * df.rdd.getNumPartitions() + 1
+    spread = rdd.partitionBy(n, lambda k: k).values().mapPartitions(sorted)
+    return df.sparkSession.createDataFrame(spread, df.schema)
+
+
+#: (shuffle partitions, AQE coalescing, SPARK_GRAFT_MATERIALIZE, layout)
+BULK_SETTINGS = [
+    ("1", "true", "local", None),
+    ("200", "false", "local", None),
+    ("200", "false", "reliable", None),
+    ("8", "true", "local", _gapped),
+]
+
+
+def test_bulk_variant_matches_simple(spark, monkeypatch):
+    """The bulk numbering equals the single-reducer reference on every
+    input and whatever the partitioning or materialize mode: a seeded
+    map, an empty map (every key new), no new keys, and a few thousand
+    skewed keys (one hot key repeated, the carried map covering one
+    dense block) — each also over a layout with empty partitions."""
     seeded = spark.createDataFrame(
         [(PARCEL_IRIS[0], 1), (PARCEL_IRIS[1], 2)], "iri string, id long"
     )
-    keys = spark.createDataFrame([(i,) for i in PARCEL_IRIS], "iri string")
-    simple = {(r["iri"], r["id"]) for r in assign_surrogate_ids(keys, seeded).collect()}
-    bulk = {(r["iri"], r["id"]) for r in assign_surrogate_ids_bulk(keys, seeded).collect()}
-    assert simple == bulk
+    skewed = [f"k/{i:05d}" for i in range(3000)] + ["k/hot"] * 1000
+    carried = spark.createDataFrame(
+        [(f"k/{i:05d}", i + 1) for i in range(1000, 2000)], "iri string, id long"
+    )
+    cases = {
+        "seeded": (PARCEL_IRIS, seeded),
+        "empty_map": (PARCEL_IRIS, _empty_map(spark)),
+        "no_new_keys": (PARCEL_IRIS[:2] * 3, seeded),
+        "skewed": (skewed, carried),
+    }
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in (
+        "spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled"
+    )}
+    try:
+        for name, (iris, existing) in cases.items():
+            keys = spark.createDataFrame([(i,) for i in iris], "iri string")
+            simple = sorted(assign_surrogate_ids(keys, existing).collect())
+            for parts, coalesce, mode, layout in BULK_SETTINGS:
+                conf.set("spark.sql.shuffle.partitions", parts)
+                conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+                monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
+                if layout is not None:
+                    monkeypatch.setattr(
+                        id_map, "materialize", lambda df: materialize(layout(df))
+                    )
+                bulk = sorted(assign_surrogate_ids_bulk(keys, existing).collect())
+                monkeypatch.undo()
+                assert bulk == simple, (name, parts, mode, layout)
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
 
 
 def test_new_key_filter_tolerates_converted_ids(spark):

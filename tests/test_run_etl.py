@@ -255,3 +255,36 @@ def test_unreadable_id_map_fails_the_run(spark, tmp_path):
             fh.write(b"not a parquet file")
     with pytest.raises(Exception, match="lf_parcel_id_map"):
         run_etl(spark, snapshot_root=root, **_day2(spark))
+
+
+#: Spark jobs of one incremental ``run_etl`` (``_day1`` → ``_day2``,
+#: one remapped table), counted by job group: the restore's reads, the
+#: new-key numbering run while the plan is built, and the concurrent
+#: publish. Set to the 41 measured on this tree; re-deriving the
+#: numbering in each write that consumes the id map and range-sorting
+#: the published maps took 52. A count above the ceiling means a write
+#: started recomputing shared state again — fix the plan, don't raise
+#: the ceiling without a job profile justifying it.
+INCREMENTAL_RUN_MAX_JOBS = 41
+
+
+def test_incremental_run_job_ceiling(spark, tmp_path):
+    """An incremental run stays within its pinned Spark job count."""
+    root = str(tmp_path / "snaps")
+    run_etl(spark, snapshot_root=root, **_day1(spark))
+    day2 = _day2(spark)
+    sc = spark.sparkContext
+    group = f"incremental-run-{tmp_path.name}"
+    sc.setJobGroup(group, "incremental run_etl")
+    try:
+        run_etl(spark, snapshot_root=root, **day2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= INCREMENTAL_RUN_MAX_JOBS, (
+        f"an incremental run_etl ran {len(jobs)} Spark jobs, over the "
+        f"pinned ceiling of {INCREMENTAL_RUN_MAX_JOBS}"
+    )
+

@@ -11,8 +11,8 @@ Package map (see SURVEY.md for the operator inventory this implements):
 - ``operators``  — relational operators (joins §2.3, aggregations §2.4,
   dedup §2.5, upserts/surrogate ids §2.9) plus the LLM-pipeline
   extensions (MinHash/SimHash dedup, ANN similarity, multimodal).
-- ``sources``    — connector-shaped helpers (paged-source planning,
-  SPARQL-binding flattening, snapshot resolution).
+- ``sources``    — the ESRI and SPARQL Python Data Sources, ESRI
+  schema adaptation, snapshot resolution.
 - ``plans``      — the reference's end-to-end pipeline (§3.1) as a
   DataFrame DAG.
 - ``streaming``  — Structured Streaming equivalents (watermarked

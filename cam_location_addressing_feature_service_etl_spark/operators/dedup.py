@@ -301,21 +301,6 @@ def simhash_from_postings(
     return grouped.select(F.col(id_col), acc.alias("simhash"))
 
 
-def simhash_col(toks: Column, bits: int = 16) -> Column:
-    """SimHash over tokens: bit_i set iff more tokens hash to 1 than 0 at
-    position i. Bit source = high bit of the i-th hex digit of md5(token),
-    reproducible in the SQL oracle. Returns an int (bits ≤ 31)."""
-    total = F.size(toks)
-    acc = F.lit(0)
-    for i in range(bits):
-        ones = F.size(
-            F.filter(toks, lambda t: F.substring(F.md5(t), i + 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f"))
-        )
-        bit = F.when(ones * 2 > total, F.lit(1)).otherwise(F.lit(0))
-        acc = acc + (bit * F.lit(1 << i))
-    return acc
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,

@@ -45,19 +45,6 @@ IMAGE_META_SCHEMA = StructType(
 )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """STUB decode: deterministic metadata derived from the payload.
-
-    Stands in for a real image/video header parse. Chosen to be
-    reproducible in the DuckDB oracle (pure byte-length arithmetic).
-    """
-    n = len(payload)
-    width = (n % 640) + 16
-    height = ((n * 7) % 480) + 16
-    n_frames = (n % 16) + 1
-    return width, height, n_frames
-
-
 def decode_image_meta_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:

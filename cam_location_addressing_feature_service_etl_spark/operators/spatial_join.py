@@ -33,13 +33,6 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colu
     return F.lit(2 * 6371.0088) * F.asin(F.sqrt(a))
 
 
-def _cell(lat: Column, lon: Column, cell_deg: float) -> tuple[Column, Column]:
-    return (
-        F.floor(lat / F.lit(cell_deg)).cast("long"),
-        F.floor(lon / F.lit(cell_deg)).cast("long"),
-    )
-
-
 def knn_within_radius(
     points: DataFrame,
     candidates: DataFrame,

@@ -1,5 +1,5 @@
 """ESRI FeatureServer source: schema adaptation, incremental predicate
-construction, partitioned paged fetch.
+construction, feature normalization.
 
 Reference behavior reproduced (file:line into /root/reference):
 
@@ -9,23 +9,20 @@ Reference behavior reproduced (file:line into /root/reference):
   of ``last_edited_date``      geocode.py:148-187; address_iri_pid_map.py:31-66
 - P5 incremental where-clause ``last_edited_date >= DATE '<ts>'``
   falling back to full scan    geocode.py:190-202
-- S5 offset/recordCount pagination, batch 2000, outFields projection
-                               geocode.py:398-466
 - feature normalization: numeric attrs → strings, geometry x/y →
   lon/lat doubles              geocode.py:205-222
 
-Spark-first: pagination becomes *input partitions* — ``spark.range``
-over page offsets → ``mapInPandas`` fetch, so 1000 executors pull
-pages concurrently instead of the reference's sequential loop. The
-HTTP fetcher is injected, keeping the planner testable offline.
+The paged fetch itself (S5, geocode.py:398-466) is the
+``spark.read.format("esri")`` source in ``sources/esri_datasource.py``;
+``normalize_geocode_features`` maps its rows to the geocode extract.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: alternative source field names per canonical column (S6)
@@ -81,55 +78,19 @@ def requires_full_refresh(schema: LayerSchema, incremental_requested: bool) -> b
     return incremental_requested and not schema.supports_incremental
 
 
-def page_plan(spark: SparkSession, total_count: int, page_size: int = 2000) -> DataFrame:
-    """S5: pagination → input partitions. One row per page offset; each
-    Spark task fetches its page, so the scan parallelizes across the
-    cluster (the reference loops sequentially)."""
-    n_pages = max((total_count + page_size - 1) // page_size, 0)
-    return (
-        spark.range(0, n_pages)
-        .select(
-            (F.col("id") * page_size).alias("result_offset"),
-            F.lit(page_size).alias("record_count"),
-        )
-        .repartition(max(min(n_pages, 512), 1))
-    )
-
-
-def paged_feature_scan(
-    pages: DataFrame,
-    fetch_page: Callable[[int, int], list[dict]],
-    result_schema,
-) -> DataFrame:
-    """Distributed paged fetch: each partition pulls its offsets via the
-    injected ``fetch_page(offset, count)`` and yields normalized rows.
-    Retry/backoff/token-refresh live inside the fetcher (connector
-    concern, reference crud.py:19-24 / geocode.py:455-464)."""
-    import pandas as pd
-
-    from ..session import _ship_package
-
-    _ship_package(pages.sparkSession)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for off, cnt in zip(pdf["result_offset"], pdf["record_count"]):
-                out.extend(fetch_page(int(off), int(cnt)))
-            yield pd.DataFrame(out, columns=[f.name for f in result_schema.fields])
-
-    return pages.mapInPandas(run, result_schema)
-
-
 def normalize_geocode_features(features: DataFrame) -> DataFrame:
-    """ESRI feature struct → flat geocode row (geocode.py:205-222):
-    numeric attributes stringified (F7), geometry x/y → lon/lat."""
+    """``spark.read.format("esri")`` rows (objectid, pid, type, x, y) →
+    the geocode extract (geocode.py:205-222): numeric attributes
+    stringified (F7), type IRI → legacy code (F6), geometry x/y →
+    lon/lat; ``site_id`` and ``hash`` are filled in later by the run."""
     return features.select(
-        F.col("attributes.objectid").cast("string").alias("geocode_id"),
-        F.col("attributes.type").alias("geocode_type_iri"),
-        F.col("attributes.pid").cast("string").alias("address_pid"),
-        F.col("geometry.y").cast("double").alias("centoid_lat"),
-        F.col("geometry.x").cast("double").alias("centoid_lon"),
+        F.col("objectid").cast("string").alias("geocode_id"),
+        normalize_geocode_type(F.col("type")).alias("geocode_type"),
+        F.col("pid").cast("string").alias("address_pid"),
+        F.lit(None).cast("string").alias("site_id"),
+        F.col("y").cast("double").alias("centoid_lat"),
+        F.col("x").cast("double").alias("centoid_lon"),
+        F.lit(None).cast("string").alias("hash"),
     )
 
 

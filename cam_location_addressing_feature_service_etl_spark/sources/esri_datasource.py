@@ -12,12 +12,17 @@ This is the fully-idiomatic form of SURVEY §2.1 S5: the planner calls
 reference's count-before-scan, geocode.py:296-301) and executes
 ``read`` per partition across the cluster. Filter pushdown maps the
 incremental predicate into the ESRI ``where`` option (P5); column
-pruning maps to ``outFields`` via the ``fields`` option.
+pruning maps to ``outFields``, which are the read schema's field names.
 
-``mode=fake`` serves deterministic synthetic features so the source is
-fully testable offline (the real mode uses EsriClient's urllib
-transport). Each task builds its own client — nothing network-bound is
-serialized.
+Every read goes through ``EsriClient`` (``sources/esri_http.py``), built
+per task by ``_client`` — nothing network-bound is serialized.
+``mode=fake`` only swaps its urllib transport for a deterministic
+synthetic layer, so offline tests exercise the same count and
+``fetch_page`` calls as a live read.
+
+The page plan and the ``{"next": <row offset>}`` stream offset protocol
+(``PagePartition``, ``page_partitions``, ``OffsetStreamReader``) are
+shared with the SPARQL source (``sources/sparql_datasource.py``).
 """
 
 from __future__ import annotations
@@ -33,6 +38,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .esri_http import EsriClient, urllib_transport
+
 DEFAULT_SCHEMA = "objectid bigint, pid string, type string, x double, y double"
 
 
@@ -42,34 +49,126 @@ class PagePartition(InputPartition):
     count: int
 
 
-def _fake_count(options: dict) -> int:
-    return int(options.get("fake_count", "5000"))
+def page_partitions(total: int, page_size: int) -> list[PagePartition]:
+    """One partition per ``page_size`` window of a ``total``-row result;
+    an empty result still plans one (empty) partition."""
+    return [PagePartition(o, page_size) for o in range(0, max(total, 1), page_size)]
 
 
-def _fake_page(offset: int, count: int, total: int) -> list[tuple]:
-    rows = []
-    for i in range(offset, min(offset + count, total)):
-        rows.append(
-            (
-                i,
-                str(100000 + i),
-                f"https://linked.data.gov.au/def/geocode-types/type-{i % 7}",
-                138.0 + (i % 1600) / 100.0,
-                -29.0 + (i % 2000) / 100.0,
-            )
-        )
-    return rows
+class OffsetStreamReader(SimpleDataSourceStreamReader):
+    """Micro-batch offset protocol of both sources' stream readers. The
+    offset is ``{"next": <row offset>}``: each batch reads the next
+    ``page_size`` rows up to the source's current total, and
+    ``readBetweenOffsets`` replays any committed (start, end] range
+    through the same ``_rows``. A source supplies ``page_size``,
+    ``_total()`` and ``_rows(lo, hi)``; replay is exact only when
+    ``_rows`` pins a total order."""
+
+    def initialOffset(self) -> dict:
+        return {"next": 0}
+
+    def read(self, start: dict) -> tuple:
+        lo = int(start["next"])
+        hi = min(lo + self.page_size, self._total())
+        if hi <= lo:
+            return iter(()), {"next": lo}
+        return iter(self._rows(lo, hi)), {"next": hi}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return iter(self._rows(int(start["next"]), int(end["next"])))
 
 
-class EsriReader(DataSourceReader):
+def _fake_feature(i: int) -> dict:
+    """Feature i of the synthetic layer."""
+    return {
+        "attributes": {
+            "objectid": i,
+            "pid": str(100000 + i),
+            "type": f"https://linked.data.gov.au/def/geocode-types/type-{i % 7}",
+        },
+        "geometry": {"x": 138.0 + (i % 1600) / 100.0, "y": -29.0 + (i % 2000) / 100.0},
+    }
+
+
+def _fake_transport(options: dict):
+    """A FeatureServer transport serving ``fake_count`` synthetic
+    features (default 5000) in objectid order: ``returnCountOnly``
+    gets the count, paged queries get their ``features`` window. The
+    ``where`` clause is ignored — Spark re-applies every pushed
+    filter, so results stay exact."""
+    total = int(options.get("fake_count", "5000"))
+
+    def transport(_url: str, data: dict) -> dict:
+        if data.get("returnCountOnly") == "true":
+            return {"count": total}
+        lo = int(data["resultOffset"])
+        hi = min(lo + int(data["resultRecordCount"]), total)
+        return {"features": [_fake_feature(i) for i in range(lo, hi)]}
+
+    return transport
+
+
+def _client(options: dict) -> EsriClient:
+    fake = options.get("mode") == "fake"
+    return EsriClient(
+        layer_url="fake://" if fake else options["layer_url"],
+        token_url=options.get("token_url"),
+        username=options.get("username", ""),
+        password=options.get("password", ""),
+        transport=_fake_transport(options) if fake else urllib_transport,
+    )
+
+
+def _resolve_order_by(options: dict, schema) -> str:
+    """Order field for paged reads: an explicit ``order_by`` option wins
+    (empty string disables ordering for servers that reject it); else
+    ``objectid`` when the schema carries one; else the schema's FIRST
+    field — a layer whose OID is named differently (FID, OBJECTID_1)
+    must not be sent a field the server will reject."""
+    if "order_by" in options:
+        return options["order_by"]
+    names = [f.name for f in schema.fields]
+    return "objectid" if "objectid" in names else names[0]
+
+
+class _LayerPages:
+    """What the ESRI batch and stream readers share: the layer count and
+    one page of rows under ``self.where``, decoded in schema order
+    (geometry ``x``/``y`` from the feature geometry, every other field
+    from its attributes)."""
+
     def __init__(self, options: dict, schema: StructType):
         self.options = options
         self.schema = schema
         self.page_size = int(options.get("page_size", "2000"))
-        self.mode = options.get("mode", "live")
         self.where = options.get("where", "1=1")
-        self.pushed: list = []
 
+    def _total(self) -> int:
+        return _client(self.options).count(self.where)
+
+    def _rows(self, lo: int, hi: int) -> list[tuple]:
+        fields = [f.name for f in self.schema.fields]
+        features = _client(self.options).fetch_page(
+            lo,
+            hi - lo,
+            where=self.where,
+            out_fields=fields,
+            # pinned order: partitions and replays page the same layer
+            # at different times; without orderByFields the server may
+            # return overlapping/missing rows across page boundaries
+            order_by=_resolve_order_by(self.options, self.schema),
+        )
+        out = []
+        for feat in features:
+            attrs = feat.get("attributes", {})
+            geom = feat.get("geometry", {})
+            out.append(
+                tuple(geom.get(f) if f in ("x", "y") else attrs.get(f) for f in fields)
+            )
+        return out
+
+
+class EsriReader(_LayerPages, DataSourceReader):
     def pushFilters(self, filters):
         """Best-effort pushdown (P5 at the DSv2 layer): supported
         comparison filters are translated into the server-side ``where``
@@ -147,57 +246,33 @@ class EsriReader(DataSourceReader):
                     pfx = f.value.replace("'", "''")
                     fragments.append(f"{col} LIKE '{pfx}%'")
         if fragments:
-            self.pushed = fragments
             self.where = " AND ".join([self.where, *fragments])
         return filters  # Spark re-applies everything (partial pushdown)
 
-    def _total(self) -> int:
-        if self.mode == "fake":
-            return _fake_count(self.options)
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        return EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        ).count(self.where)
-
     def partitions(self) -> Sequence[InputPartition]:
-        total = self._total()
-        return [
-            PagePartition(offset=o, count=self.page_size)
-            for o in range(0, max(total, 1), self.page_size)
-        ]
+        return page_partitions(self._total(), self.page_size)
 
     def read(self, partition: PagePartition) -> Iterator[tuple]:
-        if self.mode == "fake":
-            yield from _fake_page(partition.offset, partition.count, _fake_count(self.options))
-            return
-        from .esri_http import EsriClient  # pragma: no cover - network
+        return iter(self._rows(partition.offset, partition.offset + partition.count))
 
-        client = EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        )
-        fields = [f.name for f in self.schema.fields]
-        for feat in client.fetch_page(
-            partition.offset,
-            partition.count,
-            where=self.where,
-            out_fields=fields,
-            # pinned order: parallel partitions page the same layer at
-            # different times; without orderByFields the server may
-            # return overlapping/missing rows across page boundaries
-            order_by=_resolve_order_by(self.options, self.schema),
-        ):
-            attrs = feat.get("attributes", {})
-            geom = feat.get("geometry", {})
-            yield tuple(
-                geom.get(f) if f in ("x", "y") else attrs.get(f) for f in fields
-            )
+
+class EsriStreamReader(_LayerPages, OffsetStreamReader):
+    """Micro-batch incremental scan of the layer: each batch fetches
+    the next ``page_size`` features past the committed row offset —
+    the streaming twin of the reference's incremental
+    last_edited_date pull (geocode.py:469-488), expressed as a
+    PySpark 4 streaming Python data source.
+
+    Pages are read with ``orderByFields=<order_by>`` (default
+    ``objectid``) pinning a total order — ESRI row order without an
+    explicit order is not contractual, so unordered offset pages could
+    replay different rows than originally committed. With the order
+    pinned, replay is exact for STATIC or APPEND-ONLY layers (new
+    features get higher objectids and land past the watermark). A live
+    layer that DELETES features can still shift rows below the
+    watermark between read and replay — offset-based paging cannot be
+    exactly-once there; freeze mutable layers with a ``where`` snapshot
+    predicate instead."""
 
 
 class EsriDataSource(DataSource):
@@ -213,96 +288,5 @@ class EsriDataSource(DataSource):
     def reader(self, schema: StructType) -> DataSourceReader:
         return EsriReader(dict(self.options), schema)
 
-    def simpleStreamReader(self, schema: StructType) -> "EsriStreamReader":
+    def simpleStreamReader(self, schema: StructType) -> EsriStreamReader:
         return EsriStreamReader(dict(self.options), schema)
-
-
-
-def _resolve_order_by(options: dict, schema) -> str:
-    """Order field for paged reads: an explicit ``order_by`` option wins
-    (empty string disables ordering for servers that reject it); else
-    ``objectid`` when the schema carries one; else the schema's FIRST
-    field — a layer whose OID is named differently (FID, OBJECTID_1)
-    must not be sent a field the server will reject."""
-    if "order_by" in options:
-        return options["order_by"]
-    names = [f.name for f in schema.fields]
-    return "objectid" if "objectid" in names else names[0]
-
-
-class EsriStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch incremental scan of the layer: each batch fetches
-    the next ``page_size`` features past the committed objectid
-    watermark — the streaming twin of the reference's incremental
-    last_edited_date pull (geocode.py:469-488), expressed as a
-    PySpark 4 streaming Python data source.
-
-    The offset is ``{"next": <row offset>}``; ``readBetweenOffsets``
-    replays any (start, end] range from the paged API with
-    ``orderByFields=<order_by>`` (default ``objectid``) pinning a total
-    order — ESRI row order without an explicit order is not
-    contractual, so unordered offset pages could replay different rows
-    than originally committed. With the order pinned, replay is
-    exact for STATIC or APPEND-ONLY layers (new features get higher
-    objectids and land past the watermark). A live layer that DELETES
-    features can still shift rows below the watermark between read and
-    replay — offset-based paging cannot be exactly-once there; freeze
-    mutable layers with a ``where`` snapshot predicate instead."""
-
-    def __init__(self, options: dict, schema: StructType):
-        self.options = options
-        self.schema = schema
-        self.page_size = int(options.get("page_size", "2000"))
-        self.mode = options.get("mode", "live")
-
-    def _total(self) -> int:
-        if self.mode == "fake":
-            return _fake_count(self.options)
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        return EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        ).count(self.options.get("where", "1=1"))
-
-    def initialOffset(self) -> dict:
-        return {"next": 0}
-
-    def read(self, start: dict) -> tuple:
-        lo = int(start["next"])
-        hi = min(lo + self.page_size, self._total())
-        if hi <= lo:
-            return iter(()), {"next": lo}
-        return iter(self._rows(lo, hi)), {"next": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._rows(int(start["next"]), int(end["next"])))
-
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        if self.mode == "fake":
-            return _fake_page(lo, hi - lo, _fake_count(self.options))
-        from .esri_http import EsriClient  # pragma: no cover - network
-
-        client = EsriClient(
-            layer_url=self.options["layer_url"],
-            token_url=self.options.get("token_url"),
-            username=self.options.get("username", ""),
-            password=self.options.get("password", ""),
-        )
-        fields = [f.name for f in self.schema.fields]
-        out = []
-        for feat in client.fetch_page(
-            lo,
-            hi - lo,
-            where=self.options.get("where", "1=1"),
-            out_fields=fields,
-            order_by=_resolve_order_by(self.options, self.schema),
-        ):
-            attrs = feat.get("attributes", {})
-            geom = feat.get("geometry", {})
-            out.append(
-                tuple(geom.get(f) if f in ("x", "y") else attrs.get(f) for f in fields)
-            )
-        return out

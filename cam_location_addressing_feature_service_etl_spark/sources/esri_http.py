@@ -12,11 +12,10 @@ Reproduces the reference's connector behaviors
 
 Transport is injected (``send(url, data) -> dict``) so everything is
 testable offline; the default transport uses stdlib urllib — no
-third-party HTTP dependency. In the engine, an ``EsriClient`` bound to
-a layer becomes the ``fetch_page`` callable for
-``sources.esri.paged_feature_scan`` — each Spark task constructs its
-own client (connections are not serializable; the closure captures
-only the config).
+third-party HTTP dependency. In the engine, the ``spark.read.format
+("esri")`` readers (``sources/esri_datasource.py``) construct one
+client per Spark task from their options (connections are not
+serializable, so only the config travels).
 """
 
 from __future__ import annotations

@@ -21,16 +21,16 @@ its own client — nothing network-bound is serialized):
   ``orderByFields``).
 - **keys**: the reference's keys-then-details shape
   (``address_etl/pls/tables.py:401-472``: an address-keys query, then
-  detail queries VALUES-batched ≤10k keys). The planner runs
-  ``keys_query``, chunks the distinct keys into ``key_batch``-sized
+  detail queries VALUES-batched ≤10k keys). The planner pages
+  ``keys_query`` in ``ORDER BY ?key_var`` windows of ``page_size``
+  until a short page, chunks the distinct keys into ``key_batch``-sized
   partitions, and each partition substitutes its
   ``VALUES ?key {{ <k1> <k2> ... }}`` block for the ``{values}``
   placeholder in the query — the reference's Jinja template loop,
   re-expressed as partition planning so the detail fetch fans out
   across the cluster instead of looping on one driver.
 
-Unbound OPTIONAL variables surface as NULLs (P6), matching
-``sources/sparql.py flatten_bindings``.
+Unbound OPTIONAL variables surface as NULLs (P6).
 
 ``mode=fake`` serves a deterministic synthetic endpoint (count, paging,
 VALUES batches, an ``_opt``-suffixed sometimes-unbound variable) so the
@@ -44,19 +44,11 @@ import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-
-@dataclass
-class PagePartition(InputPartition):
-    offset: int
-    count: int
+from .esri_datasource import OffsetStreamReader, PagePartition, page_partitions
+from .sparql_http import SparqlClient, urllib_sparql_transport
 
 
 @dataclass
@@ -245,9 +237,7 @@ def _variables(options: dict) -> list[str]:
     return out
 
 
-def _client(options: dict):
-    from .sparql_http import SparqlClient, urllib_sparql_transport
-
+def _client(options: dict) -> SparqlClient:
     if options.get("mode") == "fake":
         return SparqlClient("fake://", transport=_fake_transport_factory(options))
     return SparqlClient(  # pragma: no cover - network
@@ -255,20 +245,40 @@ def _client(options: dict):
     )
 
 
-class SparqlReader(DataSourceReader):
+class _ResultPages:
+    """What the SPARQL batch and stream readers share: the server-side
+    COUNT and one ORDER BY-pinned page of the (filtered) query, decoded
+    in projection order with unbound variables as None."""
+
     def __init__(self, options: dict, schema: StructType):
         self.options = options
         self.schema = schema
         self.variables = _variables(options)
         self.page_size = int(options.get("page_size", "10000"))
-        self.key_batch = int(options.get("key_batch", "10000"))
         self.query = options["query"]
-        self.keys_query = options.get("keys_query")
-        self.key_var = options.get("key_var", self.variables[0])
         # OFFSET paging is only a stable order when the query is
         # ordered; default to the first projection variable
         self.order_var = options.get("order_var", self.variables[0])
         self.filter_frags: list[str] = []
+
+    def _tuples(self, bindings: list[dict]) -> list[tuple]:
+        return [tuple(r.get(v, {}).get("value") for v in self.variables) for r in bindings]
+
+    def _total(self) -> int:
+        q = _count_query(self.query, self.filter_frags)
+        return int(_client(self.options).query(q)[0]["n"]["value"])
+
+    def _rows(self, lo: int, hi: int) -> list[tuple]:
+        q = _page_query(self.query, self.order_var, hi - lo, lo, self.filter_frags)
+        return self._tuples(_client(self.options).query(q))
+
+
+class SparqlReader(_ResultPages, DataSourceReader):
+    def __init__(self, options: dict, schema: StructType):
+        super().__init__(options, schema)
+        self.key_batch = int(options.get("key_batch", "10000"))
+        self.keys_query = options.get("keys_query")
+        self.key_var = options.get("key_var", self.variables[0])
 
     def pushFilters(self, filters):
         """Filter pushdown at the DSv2 layer (the SPARQL twin of the
@@ -289,55 +299,43 @@ class SparqlReader(DataSourceReader):
         return back
 
     # -- planning ----------------------------------------------------------
+    def _keys(self) -> list[str]:
+        """Every distinct key ``keys_query`` binds, sorted. Paged with
+        the same subselect wrap and ORDER BY pin as the detail pages, so
+        a keys query with its own modifiers stays valid and no key is
+        skipped between pages; stops at the first short page."""
+        client = _client(self.options)
+        keys: set[str] = set()
+        offset = 0
+        while True:
+            page = client.query(
+                _page_query(self.keys_query, self.key_var, self.page_size, offset)
+            )
+            keys.update(r[self.key_var]["value"] for r in page if self.key_var in r)
+            if len(page) < self.page_size:
+                return sorted(keys)
+            offset += self.page_size
+
     def partitions(self) -> Sequence[InputPartition]:
-        if self.keys_query is not None:
-            keys = [
-                r[self.key_var]["value"]
-                for r in _client(self.options).query_paged(
-                    self.keys_query, page_size=self.page_size
-                )
-                if self.key_var in r
-            ]
-            keys = sorted(set(keys))
-            return [
-                KeyBatchPartition(keys=tuple(keys[o : o + self.key_batch]))
-                for o in range(0, max(len(keys), 1), self.key_batch)
-            ]
-        total = int(
-            _client(self.options).query(
-                _count_query(self.query, self.filter_frags)
-            )[0]["n"]["value"]
-        )
+        if self.keys_query is None:
+            return page_partitions(self._total(), self.page_size)
+        keys = self._keys()
         return [
-            PagePartition(offset=o, count=self.page_size)
-            for o in range(0, max(total, 1), self.page_size)
+            KeyBatchPartition(keys=tuple(keys[o : o + self.key_batch]))
+            for o in range(0, max(len(keys), 1), self.key_batch)
         ]
 
     # -- execution ---------------------------------------------------------
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        client = _client(self.options)
-        if isinstance(partition, KeyBatchPartition):
-            if not partition.keys:
-                # empty key universe: an empty VALUES {} block is
-                # invalid SPARQL — the one planned partition is empty
-                return
-            block = " ".join(f"<{k}>" for k in partition.keys)
-            q = self.query.replace(
-                "{values}", f"VALUES ?{self.key_var} {{ {block} }}"
-            )
-            rows = client.query(q)
-        else:
-            rows = client.query(
-                _page_query(
-                    self.query,
-                    self.order_var,
-                    partition.count,
-                    partition.offset,
-                    self.filter_frags,
-                )
-            )
-        for r in rows:
-            yield tuple(r.get(v, {}).get("value") for v in self.variables)
+        if isinstance(partition, PagePartition):
+            return iter(self._rows(partition.offset, partition.offset + partition.count))
+        if not partition.keys:
+            # empty key universe: an empty VALUES {} block is invalid
+            # SPARQL — the one planned partition is empty
+            return iter(())
+        block = " ".join(f"<{k}>" for k in partition.keys)
+        q = self.query.replace("{values}", f"VALUES ?{self.key_var} {{ {block} }}")
+        return iter(self._tuples(_client(self.options).query(q)))
 
 
 class SparqlDataSource(DataSource):
@@ -353,56 +351,20 @@ class SparqlDataSource(DataSource):
     def reader(self, schema: StructType) -> DataSourceReader:
         return SparqlReader(dict(self.options), schema)
 
-    def simpleStreamReader(self, schema: StructType) -> "SparqlStreamReader":
+    def simpleStreamReader(self, schema: StructType) -> SparqlStreamReader:
         return SparqlStreamReader(dict(self.options), schema)
 
 
-class SparqlStreamReader(SimpleDataSourceStreamReader):
+class SparqlStreamReader(_ResultPages, OffsetStreamReader):
     """Micro-batch incremental scan of a SPARQL result set — the
     symmetry twin of ``EsriStreamReader`` (``spark.readStream
     .format("sparql")``): each batch fetches the next ``page_size``
     rows past the committed row-offset watermark with ORDER BY pinned
     (the same stability discipline as the batch reader — OFFSET
     without ORDER BY is not a stable order, so replay could deliver
-    different rows than originally committed). The offset is
-    ``{"next": <row offset>}``; ``readBetweenOffsets`` replays any
-    (start, end] range exactly for a STATIC or APPEND-AT-END result
+    different rows than originally committed). Replay of any
+    committed range is exact for a STATIC or APPEND-AT-END result
     set — a store whose earlier bindings mutate between read and
     replay cannot be exactly-once under offset paging (freeze with a
     snapshot graph/named-graph predicate instead, the analogue of the
     ESRI ``where`` snapshot)."""
-
-    def __init__(self, options: dict, schema: StructType):
-        self.options = options
-        self.schema = schema
-        self.variables = _variables(options)
-        self.page_size = int(options.get("page_size", "10000"))
-        self.query = options["query"]
-        self.order_var = options.get("order_var", self.variables[0])
-
-    def _total(self) -> int:
-        return int(
-            _client(self.options).query(_count_query(self.query))[0]["n"][
-                "value"
-            ]
-        )
-
-    def initialOffset(self) -> dict:
-        return {"next": 0}
-
-    def read(self, start: dict) -> tuple:
-        lo = int(start["next"])
-        hi = min(lo + self.page_size, self._total())
-        if hi <= lo:
-            return iter(()), {"next": lo}
-        return iter(self._rows(lo, hi)), {"next": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._rows(int(start["next"]), int(end["next"])))
-
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        q = _page_query(self.query, self.order_var, hi - lo, lo)
-        return [
-            tuple(r.get(v, {}).get("value") for v in self.variables)
-            for r in _client(self.options).query(q)
-        ]

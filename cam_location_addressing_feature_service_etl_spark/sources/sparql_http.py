@@ -2,15 +2,10 @@
 
 Mirrors ``address_etl/crud.py:25-48``: POST the query text, parse the
 JSON bindings, exponential backoff on transport errors. Transport is
-injected; the default uses stdlib urllib. Used with
-``sources.sparql.bindings_df``/``flatten_bindings`` to land results as
-columnar DataFrames.
-
-The reference's two-phase VALUES batching (keys query → ≤10k-key
-detail queries) is NOT reproduced — in Spark the detail join is a
-broadcast semi-join (J3) against the full key DataFrame, so a single
-detail query per entity suffices; ``fetch_bindings`` just pages
-through it with LIMIT/OFFSET when the endpoint caps result sizes.
+injected; the default uses stdlib urllib. The ``spark.read.format
+("sparql")`` readers (``sources/sparql_datasource.py``) build one client
+per task and do all paging, COUNT planning and the reference's
+two-phase keys → VALUES-batched detail extract on top of ``query``.
 """
 
 from __future__ import annotations
@@ -61,16 +56,3 @@ class SparqlClient:
                 time.sleep(min(delay, self.max_backoff_seconds - waited))
                 waited += delay
                 delay *= 2
-
-    def query_paged(
-        self, query_text: str, page_size: int = 10000, max_pages: int = 10000
-    ) -> list[dict[str, dict[str, str]]]:
-        """LIMIT/OFFSET paging for endpoints that cap result sizes."""
-        out: list[dict] = []
-        for page in range(max_pages):
-            q = f"{query_text}\nLIMIT {page_size}\nOFFSET {page * page_size}"
-            rows = self.query(q)
-            out.extend(rows)
-            if len(rows) < page_size:
-                break
-        return out

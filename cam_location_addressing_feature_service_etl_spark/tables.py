@@ -94,7 +94,3 @@ def load(
             # unix_millis/unix_micros require the LTZ type.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TESTDATA_TABLES}

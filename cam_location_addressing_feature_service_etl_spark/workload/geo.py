@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.fuzzy import passjoin_candidates, passjoin_link
+from ..operators.spatial_join import haversine_km
 from ..session import tune
 from ..tables import load
 from . import register
@@ -53,16 +54,6 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
         (-29.0 + (F.col("c_custkey") % 2000) / 100.0).alias("lat"),
         (138.0 + ((F.col("c_custkey") * 7) % 1600) / 100.0).alias("lon"),
     )
-
-
-def haversine_km(lat1, lon1, lat2, lon2):
-    """Great-circle distance (km) as a pure column expression."""
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = F.pow(F.sin(dlat / 2), 2) + F.cos(F.radians(lat1)) * F.cos(
-        F.radians(lat2)
-    ) * F.pow(F.sin(dlon / 2), 2)
-    return F.lit(2 * 6371.0088) * F.asin(F.sqrt(a))
 
 
 @register(

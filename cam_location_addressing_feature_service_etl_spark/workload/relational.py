@@ -28,9 +28,10 @@ Reference semantics being reproduced (file:line into /root/reference):
 Scale notes: all small dimension sides are explicitly ``broadcast()``;
 grouped-max is a partial-aggregatable ``max`` (map-side combine);
 window-based latest-row shuffles once on the partition key; the
-surrogate-id assignment avoids ``monotonically_increasing_id`` (not
-dense/stable) in favour of max(id)+row_number over a deterministic
-ordering, which is a single extra shuffle on the (small) new-keys set.
+surrogate-id assignment (``assign_surrogate_ids_bulk``) range-sorts
+the (small) new-keys set once, reads its per-partition counts and the
+carried max(id) on the driver, and numbers every new key in one narrow
+projection — dense and stable, with no single-partition window.
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """The ESRI Python Data Source read end-to-end through
-spark.read.format("esri") in fake mode: partition planning from the
-count, per-page reads, schema, and downstream plan composition."""
+spark.read.format("esri") in fake mode — EsriClient over a synthetic
+transport: partition planning from the count, per-page reads, schema,
+and downstream plan composition."""
 
 from __future__ import annotations
 
@@ -158,10 +159,14 @@ def test_esri_stream_reader_replay_between_offsets(spark):
     from pyspark.sql.types import StructType
 
     from cam_location_addressing_feature_service_etl_spark.sources.esri_datasource import (
+        DEFAULT_SCHEMA,
         EsriStreamReader,
     )
 
-    r = EsriStreamReader({"mode": "fake", "fake_count": "50", "page_size": "20"}, StructType())
+    r = EsriStreamReader(
+        {"mode": "fake", "fake_count": "50", "page_size": "20"},
+        StructType.fromDDL(DEFAULT_SCHEMA),
+    )
     it, off1 = r.read({"next": 0})
     first = list(it)
     assert off1 == {"next": 20} and len(first) == 20
@@ -173,31 +178,34 @@ def test_esri_stream_reader_replay_between_offsets(spark):
 
 def test_stream_reader_pins_fetch_order(monkeypatch):
     """The replay contract needs a pinned server-side order: _rows must
-    pass order_by (default objectid) through to EsriClient.fetch_page."""
+    send orderByFields (default objectid) through EsriClient.fetch_page,
+    along with the reader's where and the schema's outFields."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from cam_location_addressing_feature_service_etl_spark.sources import (
-        esri_datasource,
-        esri_http,
-    )
+    from cam_location_addressing_feature_service_etl_spark.sources import esri_datasource
 
-    calls = {}
+    sent = []
+    fake = esri_datasource._fake_transport
 
-    class FakeClient:
-        def __init__(self, **kw):
-            pass
+    def recording(options):
+        serve = fake(options)
 
-        def fetch_page(self, offset, count, where="1=1", out_fields=None, order_by=None):
-            calls["order_by"] = order_by
-            return []
+        def transport(url, data):
+            sent.append(dict(data))
+            return serve(url, data)
 
-    monkeypatch.setattr(esri_http, "EsriClient", FakeClient)
+        return transport
+
+    monkeypatch.setattr(esri_datasource, "_fake_transport", recording)
     reader = esri_datasource.EsriStreamReader(
-        {"layer_url": "http://x", "mode": "live"},
+        {"mode": "fake", "where": "objectid >= 0"},
         StructType([StructField("objectid", LongType(), True)]),
     )
-    reader._rows(0, 10)
-    assert calls["order_by"] == "objectid"
+    assert reader._rows(0, 10) == [(i,) for i in range(10)]
+    assert sent[-1]["orderByFields"] == "objectid"
+    assert sent[-1]["outFields"] == "objectid"
+    assert sent[-1]["where"] == "objectid >= 0"
+    assert (sent[-1]["resultOffset"], sent[-1]["resultRecordCount"]) == ("0", "10")
 
 
 def test_resolve_order_by_falls_back_to_first_field():

@@ -145,7 +145,7 @@ def test_run_etl_increment_through_dsv2_reader(spark, tmp_path):
     the DSv2 reader: page partitioning, per-page reads, and the
     normalize mapping feed the same run_etl contract."""
     from cam_location_addressing_feature_service_etl_spark.sources.esri import (
-        normalize_geocode_type,
+        normalize_geocode_features,
     )
     from cam_location_addressing_feature_service_etl_spark.sources.esri_datasource import (
         EsriDataSource,
@@ -161,18 +161,7 @@ def test_run_etl_increment_through_dsv2_reader(spark, tmp_path):
     )
     assert feats.rdd.getNumPartitions() == 2  # proves the page plan ran
 
-    # flat DSv2 rows → geocode extract shape (normalize_geocode_features
-    # is for the struct-shaped paged scan; the DSv2 reader already
-    # flattens attributes/geometry into columns)
-    fetched_geocodes = feats.select(
-        F.col("objectid").cast("string").alias("geocode_id"),
-        normalize_geocode_type(F.col("type")).alias("geocode_type"),
-        F.col("pid").cast("string").alias("address_pid"),
-        F.lit(None).cast("string").alias("site_id"),
-        F.col("y").alias("centoid_lat"),
-        F.col("x").alias("centoid_lon"),
-        F.lit(None).cast("string").alias("hash"),
-    )
+    fetched_geocodes = normalize_geocode_features(feats)
 
     r = run_etl(
         spark,

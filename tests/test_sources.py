@@ -12,8 +12,6 @@ import pytest
 from cam_location_addressing_feature_service_etl_spark.sources.esri import (
     incremental_where,
     normalize_geocode_features,
-    page_plan,
-    paged_feature_scan,
     requires_full_refresh,
     resolve_layer_schema,
 )
@@ -24,10 +22,6 @@ from cam_location_addressing_feature_service_etl_spark.sources.snapshot import (
     read_snapshot_table,
     snapshot_dir,
     write_snapshot,
-)
-from cam_location_addressing_feature_service_etl_spark.sources.sparql import (
-    bindings_df,
-    flatten_bindings,
 )
 
 
@@ -58,57 +52,20 @@ def test_incremental_where_and_fallback():
     assert not requires_full_refresh(inc, incremental_requested=True)
 
 
-# --- S5 paged scan ----------------------------------------------------------
-
-def test_page_plan_offsets(spark):
-    pages = page_plan(spark, total_count=4500, page_size=2000)
-    offsets = sorted(r["result_offset"] for r in pages.collect())
-    assert offsets == [0, 2000, 4000]
-
-
-def test_paged_feature_scan_with_fake_fetcher(spark):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [StructField("objectid", LongType()), StructField("pid", StringType())]
-    )
-
-    def fetch_page(offset: int, count: int) -> list[dict]:
-        upper = min(offset + count, 4500)
-        return [{"objectid": i, "pid": str(1000 + i)} for i in range(offset, upper)]
-
-    pages = page_plan(spark, total_count=4500, page_size=2000)
-    df = paged_feature_scan(pages, fetch_page, schema)
-    assert df.count() == 4500
-    assert df.agg(F.min("objectid"), F.max("objectid")).collect()[0][:] == (0, 4499)
-
+# --- feature normalization -------------------------------------------------
 
 def test_normalize_geocode_features(spark):
     features = spark.createDataFrame(
-        [((1, 444541, "https://linked.data.gov.au/def/geocode-types/property-centroid"),
-          (153.1, -27.6))],
-        "attributes struct<objectid:long,pid:long,type:string>, "
-        "geometry struct<x:double,y:double>",
+        [(1, 444541, "https://linked.data.gov.au/def/geocode-types/property-centroid",
+          153.1, -27.6)],
+        "objectid long, pid long, type string, x double, y double",
     )
     row = normalize_geocode_features(features).collect()[0]
     assert row["geocode_id"] == "1"          # F7 str-cast
     assert row["address_pid"] == "444541"    # F7 str-cast
+    assert row["geocode_type"] == "PC"       # F6 initialism fallback
     assert row["centoid_lat"] == -27.6 and row["centoid_lon"] == 153.1
-
-
-# --- SPARQL binding flattening ----------------------------------------------
-
-def test_flatten_bindings_nulls_for_unbound_optionals(spark):
-    rows = [
-        {"addr_iri": {"value": "https://example.com/address/1"},
-         "addr_id": {"value": "addr-1"},
-         "unit_no": {"value": "5"}},
-        {"addr_iri": {"value": "https://example.com/address/2"},
-         "addr_id": {"value": "addr-2"}},  # unit_no unbound (OPTIONAL)
-    ]
-    df = flatten_bindings(bindings_df(spark, rows), ["addr_iri", "addr_id", "unit_no"])
-    got = {r["addr_id"]: r["unit_no"] for r in df.collect()}
-    assert got == {"addr-1": "5", "addr-2": None}
+    assert row["site_id"] is None and row["hash"] is None
 
 
 # --- snapshot lifecycle -----------------------------------------------------

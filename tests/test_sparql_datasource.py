@@ -156,6 +156,54 @@ def test_reader_values_block_substitution():
     ]
 
 
+def test_keys_listing_pages_wrapped_and_ordered(monkeypatch):
+    """The keys query is paged like the detail query: subselect-wrapped
+    (so its own ORDER BY/LIMIT stays valid SPARQL) with ORDER BY
+    ?key_var pinned before each LIMIT/OFFSET window (so no key is
+    skipped between pages), until a short page — and every key is
+    planned into a VALUES batch."""
+    import re
+
+    from pyspark.sql.types import StructType
+
+    import cam_location_addressing_feature_service_etl_spark.sources.sparql_datasource as m
+    from cam_location_addressing_feature_service_etl_spark.sources.sparql_http import (
+        SparqlClient,
+    )
+
+    keys_query = "SELECT ?pid WHERE { ?pid a :Address } ORDER BY ?pid LIMIT 50000"
+    store = [{"pid": {"value": f"urn:pid:{i:02d}"}} for i in range(25)]
+    seen: list[str] = []
+
+    def transport(_url, form):
+        q = form["query"]
+        seen.append(q)
+        # the outermost (last) LIMIT/OFFSET is the page window
+        limit = int(re.findall(r"LIMIT (\d+)", q)[-1])
+        offset = int(re.findall(r"OFFSET (\d+)", q)[-1] if "OFFSET" in q else 0)
+        return {"results": {"bindings": store[offset : offset + limit]}}
+
+    monkeypatch.setattr(m, "_client", lambda _o: SparqlClient("x", transport=transport))
+    reader = SparqlReader(
+        {
+            "query": "SELECT ?pid ?s WHERE { {values} ?pid :s ?s }",
+            "variables": "pid,s",
+            "keys_query": keys_query,
+            "page_size": "10",
+            "key_batch": "10",
+        },
+        StructType(),
+    )
+    parts = reader.partitions()
+    assert seen == [
+        f"SELECT * WHERE {{\n{keys_query}\n}}\nORDER BY ?pid\nLIMIT 10\nOFFSET {o}"
+        for o in (0, 10, 20)
+    ]
+    planned = [k for p in parts for k in p.keys]
+    assert planned == [r["pid"]["value"] for r in store]
+    assert [len(p.keys) for p in parts] == [10, 10, 5]
+
+
 def test_missing_variables_option_raises():
     with pytest.raises(Exception, match="variables"):
         SparqlDataSource(options={"query": _Q}).schema()

@@ -1,14 +1,7 @@
-"""SparqlClient against a fake transport: bindings parse, backoff,
-LIMIT/OFFSET paging, and integration into flatten_bindings."""
+"""SparqlClient against a fake transport: bindings parse and backoff."""
 
 from __future__ import annotations
 
-import pytest
-
-from cam_location_addressing_feature_service_etl_spark.sources.sparql import (
-    bindings_df,
-    flatten_bindings,
-)
 from cam_location_addressing_feature_service_etl_spark.sources.sparql_http import (
     SparqlClient,
 )
@@ -21,24 +14,12 @@ ROWS = [
 class FakeTransport:
     def __init__(self):
         self.fail_next = 0
-        self.queries = []
 
     def __call__(self, url, form):
-        self.queries.append(form["query"])
         if self.fail_next > 0:
             self.fail_next -= 1
             raise ConnectionError("transient")
-        q = form["query"]
-        limit = offset = None
-        for line in q.splitlines():
-            if line.startswith("LIMIT"):
-                limit = int(line.split()[1])
-            if line.startswith("OFFSET"):
-                offset = int(line.split()[1])
-        rows = ROWS
-        if offset is not None:
-            rows = rows[offset : offset + limit]
-        return {"results": {"bindings": rows}}
+        return {"results": {"bindings": ROWS}}
 
 
 def test_query_parses_bindings():
@@ -52,17 +33,3 @@ def test_backoff_then_success():
     c = SparqlClient("https://example.com/sparql", transport=t, max_backoff_seconds=5)
     assert len(c.query("SELECT ...")) == 25
 
-
-def test_paged_query_reassembles():
-    t = FakeTransport()
-    c = SparqlClient("https://example.com/sparql", transport=t)
-    rows = c.query_paged("SELECT ...", page_size=10)
-    assert rows == ROWS
-    assert len(t.queries) == 3  # 10 + 10 + 5
-
-
-def test_client_rows_flow_into_flatten(spark):
-    c = SparqlClient("https://example.com/sparql", transport=FakeTransport())
-    df = flatten_bindings(bindings_df(spark, c.query("SELECT ...")), ["iri", "name"])
-    assert df.count() == 25
-    assert df.filter("name = 'n7'").collect()[0]["iri"] == "https://x/7"

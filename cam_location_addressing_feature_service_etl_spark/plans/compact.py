@@ -51,8 +51,10 @@ import math
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from .. import store
 
 
 @dataclass(frozen=True)
@@ -62,35 +64,19 @@ class CompactionStats:
     rows: int
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hadoop_path, jvm
-
-
 def _parquet_files(spark: SparkSession, path: str) -> list[str]:
     """Immediate (non-recursive) parquet files under ``path``."""
-    fs, hadoop_path, _ = _hadoop_fs(spark, path)
-    if not fs.exists(hadoop_path):
-        return []
     return sorted(
-        str(st.getPath())
-        for st in fs.listStatus(hadoop_path)
-        if st.isFile() and str(st.getPath().getName()).endswith(".parquet")
+        p for p, is_dir in store.listing(spark, path) if not is_dir and p.endswith(".parquet")
     )
 
 
 def _subdirs(spark: SparkSession, path: str) -> list[str]:
     """Immediate non-hidden subdirectories of ``path``."""
-    fs, hadoop_path, _ = _hadoop_fs(spark, path)
-    if not fs.exists(hadoop_path):
-        return []
     return sorted(
-        str(st.getPath())
-        for st in fs.listStatus(hadoop_path)
-        if st.isDirectory()
-        and not str(st.getPath().getName()).startswith(("_", "."))
+        p
+        for p, is_dir in store.listing(spark, path)
+        if is_dir and not os.path.basename(p).startswith(("_", "."))
     )
 
 
@@ -197,7 +183,7 @@ def compact_partitions(
             f"no '{prefix}*' partition directories under {root!r}"
         )
     staging_root = os.path.join(root, "_compact_tmp")
-    fs, staging_path, jvm = _hadoop_fs(spark, staging_root)
+    fs, staging_path = store.filesystem(spark, staging_root)
     out: dict[str, CompactionStats] = {}
     for part_dir in part_dirs:
         leaf = os.path.basename(part_dir.rstrip("/"))
@@ -207,8 +193,8 @@ def compact_partitions(
         stats = compact_parquet(
             spark, part_dir, staging, sort_cols, target_rows_per_file
         )
-        src_p = jvm.org.apache.hadoop.fs.Path(part_dir)
-        stg_p = jvm.org.apache.hadoop.fs.Path(staging)
+        _, src_p = store.filesystem(spark, part_dir)
+        _, stg_p = store.filesystem(spark, staging)
         if not fs.delete(src_p, True):
             raise IOError(f"failed to delete {part_dir!r} for swap")
         if not fs.rename(stg_p, src_p):

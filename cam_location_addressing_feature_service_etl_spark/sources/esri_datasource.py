@@ -128,6 +128,11 @@ def _resolve_order_by(options: dict, schema) -> str:
     if "order_by" in options:
         return options["order_by"]
     names = [f.name for f in schema.fields]
+    if not names:
+        raise ValueError(
+            "paged reads need an order field, but the read schema has no "
+            "fields (no 'objectid', no first field): set the 'order_by' option"
+        )
     return "objectid" if "objectid" in names else names[0]
 
 

@@ -4,41 +4,40 @@ The reference versions whole-database snapshots under timestamped S3
 keys and restores the *latest* by descending-lex key sort
 (``address_etl/s3.py:13-46,111-121``; restore ``main_pls.py:101-186``).
 Here a snapshot is a directory ``<root>/snapshot_ts=<ts>/<table>/``
-of parquet tables plus a commit marker file; "latest" is the max
-committed partition value (O1). Listing is O(#snapshots), not O(data).
+of parquet tables, committed by an empty ``_COMMITTED`` marker inside
+it; "latest" is the max committed timestamp (O1). Listing, commit and
+withdrawal go through ``store.py``, the one committed-version store
+the versioned folds share, so a snapshot root is any Hadoop
+FileSystem path (a local path, ``file://``, ``hdfs://``, ``s3a://``).
+Listing is O(#snapshots), not O(data). The path-only functions take
+the session from ``SparkSession.active()``.
 """
 
 from __future__ import annotations
 
 import os
-import re
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-_TS_RE = re.compile(r"^snapshot_ts=(.+)$")
+from .. import store
+
+_PREFIX = "snapshot_ts="
 #: empty file marking a snapshot directory complete (see write_snapshot)
 COMMIT_MARKER = "_COMMITTED"
 
 
 def snapshot_dir(root: str, ts: str) -> str:
-    return os.path.join(root, f"snapshot_ts={ts}")
+    return os.path.join(root, f"{_PREFIX}{ts}")
 
 
 def list_snapshots(root: str) -> list[str]:
     """All committed snapshot timestamps, ascending. A snapshot
     directory without its commit marker (a publish that failed or is
     still running) is not a snapshot."""
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in os.listdir(root):
-        m = _TS_RE.match(name)
-        if m and os.path.exists(os.path.join(root, name, COMMIT_MARKER)):
-            out.append(m.group(1))
-    return sorted(out)
+    return store.committed(SparkSession.active(), root, _PREFIX, COMMIT_MARKER)
 
 
 def latest_snapshot(root: str, prefix: str = "") -> str | None:
@@ -49,7 +48,7 @@ def latest_snapshot(root: str, prefix: str = "") -> str | None:
 
 
 def has_snapshot_table(root: str, ts: str, name: str) -> bool:
-    return os.path.isdir(os.path.join(snapshot_dir(root, ts), name))
+    return store.exists(SparkSession.active(), os.path.join(snapshot_dir(root, ts), name))
 
 
 def write_snapshot(
@@ -91,10 +90,9 @@ def write_snapshot(
             f"sort_specs names tables not being written: {sorted(unknown)} "
             f"(writing: {sorted(tables)})"
         )
+    spark = SparkSession.active()
     base = snapshot_dir(root, ts)
-    marker = os.path.join(base, COMMIT_MARKER)
-    if os.path.exists(marker):
-        os.remove(marker)
+    store.withdraw(spark, base, COMMIT_MARKER)
 
     def write_table(name: str, df: DataFrame) -> None:
         sc = df.sparkSession.sparkContext
@@ -111,7 +109,7 @@ def write_snapshot(
         ]
     for f in futures:
         f.result()
-    open(marker, "w").close()
+    store.commit(spark, base, COMMIT_MARKER)
     return base
 
 

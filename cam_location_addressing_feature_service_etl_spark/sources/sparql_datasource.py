@@ -84,12 +84,17 @@ def _fake_binding(variables: Sequence[str], i: int) -> dict:
 def _fake_transport_factory(options: dict):
     """A SPARQL transport serving the synthetic store. Recognizes the
     three query shapes the reader emits: COUNT wrap, VALUES-batched
-    detail, and plain SELECT with LIMIT/OFFSET paging."""
+    detail, and plain SELECT with LIMIT/OFFSET paging. The page window
+    is the trailing ``LIMIT n OFFSET m`` that ``_page_query`` appends;
+    a ``LIMIT`` inside the user's query only caps the row universe."""
     total = _fake_rows(options)
     variables = _variables(options)
 
     def transport(_url: str, form: dict) -> dict:
         q = form["query"]
+        window = re.search(r"\bLIMIT\s+(\d+)\s+OFFSET\s+(\d+)\s*$", q)
+        if window:
+            q = q[: window.start()]
         values = re.search(r"VALUES\s+\?\w+\s*\{([^}]*)\}", q)
         if values:
             keys = re.findall(r"<([^>]+)>", values.group(1))
@@ -97,6 +102,9 @@ def _fake_transport_factory(options: dict):
             rows = [_fake_binding(variables, i) for i in sorted(idx) if i < total]
         else:
             rows = [_fake_binding(variables, i) for i in range(total)]
+        inner = re.search(r"\bLIMIT\s+(\d+)", q)
+        if inner:
+            rows = rows[: int(inner.group(1))]
         # honor pushed-down equality/BOUND filters so the COUNT a
         # pushdown plans against genuinely shrinks (the live server
         # does the same; anything fancier Spark re-applies anyway)
@@ -106,11 +114,10 @@ def _fake_transport_factory(options: dict):
             rows = [r for r in rows if v in r]
         if "(COUNT(*) AS ?n)" in q:
             return {"results": {"bindings": [{"n": {"value": str(len(rows))}}]}}
-        limit = re.search(r"\bLIMIT\s+(\d+)", q)
-        offset = re.search(r"\bOFFSET\s+(\d+)", q)
-        lo = int(offset.group(1)) if offset else 0
-        hi = lo + int(limit.group(1)) if limit else len(rows)
-        return {"results": {"bindings": rows[lo:hi]}}
+        if not window:
+            return {"results": {"bindings": rows}}
+        lo = int(window.group(2))
+        return {"results": {"bindings": rows[lo : lo + int(window.group(1))]}}
 
     return transport
 

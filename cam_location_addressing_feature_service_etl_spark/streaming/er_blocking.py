@@ -39,7 +39,7 @@ from ..workload.geo import (
     blocking_quality_audit,
     blocking_true_pairs,
 )
-from .versioned import _versions, fold_version, read_latest, run_fold_stream
+from .versioned import fold_version, read_latest, run_fold_stream
 
 FEED_SCHEMA = "fn string"
 MASTER_SCHEMA = "mn string"
@@ -51,19 +51,6 @@ def _dirs(state_dir: str) -> tuple[str, str, str]:
     return root + "/feed", root + "/master", root + "/pairs"
 
 
-def _prior(
-    spark: SparkSession, state_dir: str, schema: str, batch_id: int
-) -> DataFrame:
-    """The latest committed version STRICTLY BEFORE ``batch_id`` —
-    the same read ``fold_version`` performs, exposed here because the
-    pairs fold must see the name states as they were before this
-    batch (a replay may find v=batch_id already committed)."""
-    prior_ids = [v for v in _versions(spark, state_dir) if v < batch_id]
-    if prior_ids:
-        return spark.read.parquet(f"{state_dir}/v={prior_ids[-1]}")
-    return spark.createDataFrame([], schema)
-
-
 def apply_part_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
     """Fold one part micro-batch into the three versioned states.
     Idempotent under foreachBatch replay: every derived frame reads
@@ -72,8 +59,10 @@ def apply_part_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:
 
     spark = batch.sparkSession
     f_dir, m_dir, p_dir = _dirs(state_dir)
-    prior_f = _prior(spark, f_dir, FEED_SCHEMA, batch_id)
-    prior_m = _prior(spark, m_dir, MASTER_SCHEMA, batch_id)
+    # the name states as they were before this batch: a replay may
+    # find v=batch_id already committed
+    prior_f = read_latest(spark, f_dir, FEED_SCHEMA, before=batch_id)
+    prior_m = read_latest(spark, m_dir, MASTER_SCHEMA, before=batch_id)
     # new names only (re-ingest is identity); materialized — each
     # feeds two PassJoin legs and its own state union
     new_f = materialize(

@@ -27,6 +27,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.upsert import upsert_by_key
+from .versioned import Fold
+
 #: physical schema of events.parquet when ts is TIMESTAMP(NANOS) read
 #: as long under nanosAsLong (older generator); newer data carries a
 #: real µs timestamp — read_event_stream probes the footer and adapts.
@@ -176,57 +179,19 @@ def click_purchase_stream_join(
     ).select("click_id", "user_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value")
 
 
-def upsert_snapshot_sink(
-    stream_df: DataFrame,
-    snapshot_dir: str,
-    key_cols: list[str],
-    query_name: str = "upsert_sink",
-):
-    """foreachBatch upsert sink: every micro-batch is MERGEd into a
-    parquet snapshot with last-write-wins semantics (operators.upsert
-    — the streaming twin of the reference's per-page ESRI upsert,
-    SURVEY §2.9 M1/M2). Each batch rewrites the snapshot via
-    read → merge → write to a temp dir → rename-aside swap: the old
-    snapshot is renamed to ``.bak`` (single rename), the new one
-    renamed into place (single rename), then the backup dropped — a
-    crash between the renames leaves a recoverable ``.bak``, which the
-    next batch restores automatically. POSIX rename is atomic per
-    directory entry, so no crash point loses both copies (a concurrent
-    reader can still observe the sub-second gap between the two
-    renames; Delta/Iceberg's MERGE INTO removes even that).
-
-    Returns the started StreamingQuery (availableNow trigger).
-    """
-    import os
-    import shutil
-
-    from ..operators.upsert import upsert_by_key
-
-    bak = snapshot_dir + ".bak"
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not os.path.isdir(snapshot_dir) and os.path.isdir(bak):
-            os.rename(bak, snapshot_dir)  # crash recovery
-        updates = batch_df.dropDuplicates(key_cols)
-        if os.path.isdir(snapshot_dir):
-            base = spark.read.parquet(snapshot_dir)
-            merged = upsert_by_key(base, updates, key_cols)
-        else:
-            merged = updates
-        tmp = snapshot_dir + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(bak, ignore_errors=True)
-        if os.path.isdir(snapshot_dir):
-            os.rename(snapshot_dir, bak)
-        os.rename(tmp, snapshot_dir)
-        shutil.rmtree(bak, ignore_errors=True)
-
-    return (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+def upsert_snapshot_sink(schema: str, key_cols: list[str]) -> Fold:
+    """foreachBatch upsert sink: a ``Fold`` over the stream's
+    ``schema`` that MERGEs every micro-batch into the keyed state with
+    last-write-wins semantics (``operators.upsert`` — the streaming
+    twin of the reference's per-page ESRI upsert, SURVEY §2.9 M1/M2).
+    Within a batch one row per key survives. ``.stream(events,
+    state_dir, checkpoint_dir)`` runs it, ``.read(spark, state_dir)``
+    returns the current state. Each batch commits a new version, so a
+    reader always sees a whole state and a replayed batch folds
+    exactly once (``streaming/versioned.py``)."""
+    return Fold(
+        schema,
+        lambda prior, batch: upsert_by_key(prior, batch.dropDuplicates(key_cols), key_cols),
     )
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .versioned import Fold, _versions, parquet_stream
+from .versioned import Fold, parquet_stream
 
 DELTA_SCHEMA = "user_id bigint, dn bigint, dv bigint"
 

@@ -13,6 +13,9 @@ construction (the delta-log discipline of a transactional table
 format, reduced to the one sequence number foreachBatch already
 guarantees monotone). Readers take the max committed version; versions
 beyond a retention count are pruned (time travel for free until then).
+Listing, commit markers and pruning go through ``store.py``, the one
+committed-version store the ETL snapshot shares, so a state dir is
+any Hadoop FileSystem path.
 
 The shared pieces:
 
@@ -30,10 +33,10 @@ The shared pieces:
 - ``parquet_stream(spark, path, schema)`` — the file-source stand-in
   for a topic that every fixed-schema stream reader returns.
 
-Two state layouts share the exactly-once rule:
+Two state layouts share the exactly-once rule and the store:
 
 - ``fold_version`` — each version is the FULL state as one parquet
-  dir. Right for kilobyte states (psi bands, fsem's 8 counts); wrong
+  dir, committed by the ``_SUCCESS`` file of Spark's job commit. Right for kilobyte states (psi bands, fsem's 8 counts); wrong
   for state that grows with the corpus, where rewriting everything per
   micro-batch makes fold IO O(|state|) even when the batch touched a
   sliver (the r12 verdict's watch-item #1).
@@ -41,7 +44,7 @@ Two state layouts share the exactly-once rule:
   key; a fold writes ONLY the partitions whose content changed and
   carries every untouched partition forward BY REFERENCE through a
   per-version manifest (pid → owning version), the delta-style
-  copy-forward layout. Fold write-IO is ∝ touched partitions; reads
+  copy-forward layout; the manifest is the version's commit marker. Fold write-IO is ∝ touched partitions; reads
   stitch the manifest. Changed-partition detection is a per-partition
   fingerprint (count + sum of row hashes) compared between the merged
   state and its predecessor — two partial-aggregated passes, no
@@ -59,38 +62,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .. import store
 from ..runtime import materialize, scoped_plan_refs
 
+_PREFIX = "v="
+#: the flat layout's commit marker, written by Spark's job commit
+_SUCCESS = "_SUCCESS"
+#: the partitioned layout's commit marker, written last (``store.commit``)
+_MANIFEST = "manifest.json"
 
-def _versions(spark: SparkSession, state_dir: str) -> list[int]:
-    """COMMITTED versions only: a version directory counts once its
-    ``_SUCCESS`` marker exists, so a reader racing a write (or a
+
+def _committed(spark: SparkSession, state_dir: str, marker: str) -> list[int]:
+    """Committed version ids, ascending: a version directory counts
+    once its ``marker`` exists, so a reader racing a write (or a
     version left half-written by a crash) never sees it as latest —
     the crashed batch's replay overwrites the partial dir."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return []
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.startswith("v=")
-            and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{name}/_SUCCESS")
-            )
-        ):
-            out.append(int(name[2:]))
-    return sorted(out)
+    return sorted(int(v) for v in store.committed(spark, state_dir, _PREFIX, marker))
 
 
-def read_latest(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:
-    """The current (max committed version) state; an empty frame with
-    ``schema`` when no version exists yet."""
-    versions = _versions(spark, state_dir)
+def _prune(spark: SparkSession, state_dir: str, keep: set[int]) -> None:
+    store.prune(spark, state_dir, _PREFIX, {str(v) for v in keep})
+
+
+def read_latest(
+    spark: SparkSession, state_dir: str, schema: str, before: int | None = None
+) -> DataFrame:
+    """The current (max committed version) state; with ``before``, the
+    latest committed version with id < ``before`` — the replay-safe
+    prior a fold of batch ``before`` merges against. An empty frame
+    with ``schema`` when no such version exists."""
+    versions = [
+        v for v in _committed(spark, state_dir, _SUCCESS) if before is None or v < before
+    ]
     if not versions:
         return spark.createDataFrame([], schema)
     return spark.read.parquet(f"{state_dir}/v={versions[-1]}")
@@ -117,11 +120,7 @@ def fold_version(
         # (0 is worse still — it prunes the version just written.)
         raise ValueError(f"retain_versions must be >= 2, got {retain_versions}")
     spark = delta.sparkSession
-    prior_ids = [v for v in _versions(spark, state_dir) if v < batch_id]
-    if prior_ids:
-        prior = spark.read.parquet(f"{state_dir}/v={prior_ids[-1]}")
-    else:
-        prior = spark.createDataFrame([], schema)
+    prior = read_latest(spark, state_dir, schema, before=batch_id)
     # scoped plan-ref retention: any materialize() inside merge() has
     # its final action run by the write below, so the refs (which keep
     # SQLMetrics registered — runtime._PLAN_REFS) are needed only for
@@ -130,14 +129,7 @@ def fold_version(
         merge(prior, delta).write.mode("overwrite").parquet(
             f"{state_dir}/v={batch_id}"
         )
-    keep = set(_versions(spark, state_dir)[-retain_versions:])
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(conf)
-    for v in _versions(spark, state_dir):
-        if v not in keep:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v={v}"), True)
+    _prune(spark, state_dir, set(_committed(spark, state_dir, _SUCCESS)[-retain_versions:]))
 
 
 def run_fold_stream(
@@ -225,57 +217,8 @@ class Fold:
 # ---------------------------------------------------------------------------
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf), p
-
-
-def _write_manifest(spark: SparkSession, vdir: str, manifest: dict) -> None:
-    """Write ``manifest.json`` (the version's COMMIT MARKER) via a
-    tmp-file + rename — atomic on HDFS and local filesystems, so a
-    reader never sees a half-written manifest."""
-    jvm, fs, _ = _fs(spark, vdir)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{vdir}/manifest.json.tmp")
-    out = fs.create(tmp, True)
-    out.write(json.dumps(manifest, sort_keys=True).encode("utf-8"))
-    out.close()
-    final = jvm.org.apache.hadoop.fs.Path(f"{vdir}/manifest.json")
-    fs.delete(final, False)
-    fs.rename(tmp, final)
-
-
-def _read_manifest(spark: SparkSession, vdir: str) -> dict:
-    jvm, fs, p = _fs(spark, f"{vdir}/manifest.json")
-    stream = fs.open(p)
-    try:
-        content = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(content)
-
-
-def _versions_partitioned(spark: SparkSession, state_dir: str) -> list[int]:
-    """Committed versions of the partitioned layout: a version counts
-    once its ``manifest.json`` exists (written last, atomically)."""
-    jvm, fs, path = _fs(spark, state_dir)
-    if not fs.exists(path):
-        return []
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.startswith("v=")
-            and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{state_dir}/{name}/manifest.json"
-                )
-            )
-        ):
-            out.append(int(name[2:]))
-    return sorted(out)
+def _manifest(spark: SparkSession, state_dir: str, version: int) -> dict:
+    return json.loads(store.marker_content(spark, f"{state_dir}/v={version}", _MANIFEST))
 
 
 def _stitch(
@@ -307,11 +250,10 @@ def read_latest_partitioned(
 ) -> DataFrame:
     """The current state of a partitioned-layout dir; empty frame with
     ``schema`` when no version was ever committed."""
-    versions = _versions_partitioned(spark, state_dir)
+    versions = _committed(spark, state_dir, _MANIFEST)
     if not versions:
         return spark.createDataFrame([], schema)
-    manifest = _read_manifest(spark, f"{state_dir}/v={versions[-1]}")
-    return _stitch(spark, state_dir, manifest, schema)
+    return _stitch(spark, state_dir, _manifest(spark, state_dir, versions[-1]), schema)
 
 
 def fold_version_partitioned(
@@ -425,15 +367,13 @@ def read_version_before_partitioned(
     ``batch_id`` — the replay-safe prior read (a crashed/replayed
     attempt at ``batch_id`` itself is never its own predecessor).
     Returns an empty frame and a fresh manifest when none exists."""
-    prior_ids = [
-        v for v in _versions_partitioned(spark, state_dir) if v < batch_id
-    ]
+    prior_ids = [v for v in _committed(spark, state_dir, _MANIFEST) if v < batch_id]
     if not prior_ids:
         return (
             spark.createDataFrame([], schema),
             {"num_partitions": num_partitions, "pids": {}},
         )
-    prior_manifest = _read_manifest(spark, f"{state_dir}/v={prior_ids[-1]}")
+    prior_manifest = _manifest(spark, state_dir, prior_ids[-1])
     if prior_manifest["num_partitions"] != num_partitions:
         raise ValueError(
             f"state dir {state_dir} was folded with num_partitions="
@@ -472,8 +412,7 @@ def commit_version_partitioned(
     # decommit a previous (crashed or replayed) attempt at this version
     # BEFORE touching its data, so no reader sees committed-but-
     # rewriting state
-    jvm, fs, _ = _fs(spark, vdir)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{vdir}/manifest.json"), False)
+    store.withdraw(spark, vdir, _MANIFEST)
 
     cols = spark.createDataFrame([], schema).columns
     pid = F.pmod(F.xxhash64(*key_cols), F.lit(num_partitions)).cast("int")
@@ -530,20 +469,11 @@ def commit_version_partitioned(
         if int(p) not in touched
     }
     pids |= {str(p): batch_id for p in live_touched}
-    _write_manifest(
-        spark, vdir, {"num_partitions": num_partitions, "pids": pids}
-    )
+    manifest = {"num_partitions": num_partitions, "pids": pids}
+    store.commit(spark, vdir, _MANIFEST, json.dumps(manifest, sort_keys=True).encode("utf-8"))
 
-    versions = _versions_partitioned(spark, state_dir)
-    keep = set(versions[-retain_versions:])
+    keep = set(_committed(spark, state_dir, _MANIFEST)[-retain_versions:])
     referenced = {
-        int(owner)
-        for v in keep
-        for owner in _read_manifest(spark, f"{state_dir}/v={v}")[
-            "pids"
-        ].values()
+        int(owner) for v in keep for owner in _manifest(spark, state_dir, v)["pids"].values()
     }
-    keep |= referenced
-    for v in versions:
-        if v not in keep:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v={v}"), True)
+    _prune(spark, state_dir, keep | referenced)

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from . import TESTDATA_TABLES
+from .session import tune
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -94,3 +95,10 @@ def load(
             # unix_millis/unix_micros require the LTZ type.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_tuned(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """``session.tune`` the session, then ``load`` each named table —
+    the preamble of a workload query builder."""
+    tune(spark)
+    return [load(spark, sf_dir, n) for n in names]

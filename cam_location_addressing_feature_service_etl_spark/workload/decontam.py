@@ -32,7 +32,8 @@ from pyspark.sql.window import Window
 from ..operators.topk import ASC, DESC, global_topk_ranked
 
 from ..operators.dedup import exact_dedup, shingle_postings, tokens_col
-from .llm_text import _STOPWORDS, TOKENS_SQL, _shingle_cte, _t
+from ..tables import load_tuned
+from .llm_text import _STOPWORDS, TOKENS_SQL, _shingle_cte
 from . import register
 from ..runtime import materialize
 
@@ -117,7 +118,7 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc. The corpus side is never shuffled on the n-gram key, so
     hot n-grams cannot skew; at real scale the broadcast becomes a
     bloom filter pushed into the scan."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     # both the benchmark branch and the corpus branch consume the
     # postings: materialize the tokenize+shingle+explode subtree once
     # (it runs twice otherwise — ~2× warm wall-time at sf0.1)
@@ -159,7 +160,7 @@ def text_train_order_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global ordering stage); the final global sort is left to the
     writer, where Spark range-partitions it across the cluster.
     Changing the epoch re-keys everything by seed string alone."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.lit(_EPOCH_SEED + ":"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("source").orderBy("shuffle_key", "doc_id")
     return (
@@ -217,7 +218,7 @@ def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile window (partitioned by source, no global stage); the sample
     filter is a pure column predicate, so it pushes into the scan
     when the score/bin are materialized columns in a real layout."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     scored = documents.select(
         "doc_id",
         "source",
@@ -281,7 +282,7 @@ def text_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ``quantile_cont`` — so the oracle matches bit-for-bit after
     rounding. At 100 TB use ``approx_percentile`` (mergeable t-digest)
     instead: exact percentile materializes each group's values."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     aggs = [F.count(F.lit(1)).alias("n_docs")] + [
         F.round(F.percentile("n_chars", F.lit(p)), 6).alias(f"p{int(p * 100)}")
         for p in _LQ_PCTS
@@ -353,7 +354,7 @@ def llm_corpus_prep_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination join is broadcast on the benchmark n-gram set;
     the final rollup is a partial-aggregatable groupBy on source.
     Nothing quadratic, no global stage."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     nonbench = documents.filter(F.col("doc_id") % _DC_BENCH_MOD != 0)
     kept = exact_dedup(nonbench, text_col="text", id_col="doc_id")
     sh = shingle_postings(documents, "doc_id", "text", _DC_N).transform(materialize)
@@ -480,7 +481,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     float is one final ROUND. Scale: both LM count tables are
     vocabulary-sized broadcasts joined onto one token pass; the rank
     window sees one row per doc."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     tok = documents.select(
         "doc_id", "lang", F.explode(tokens_col(F.col("text"))).alias("tok")
     ).transform(materialize)
@@ -586,7 +587,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully oracle-checked. Scale: map-only key computation, then the
     distributed top-k of operators/topk.py (TakeOrderedAndProject +
     windowless k-row rank) — the corpus is never globally sorted."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = documents.select("doc_id", tokens_col(F.col("text")).alias("_toks"))
     w = F.greatest(F.size("_toks").cast("long"), F.lit(1).cast("long"))
     u = (

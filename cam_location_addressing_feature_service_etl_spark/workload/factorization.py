@@ -22,7 +22,7 @@ from ..operators.factorization import (
     power_iteration,
     pq_codes,
 )
-from .llm_similarity import _t
+from ..tables import load_tuned
 from . import register
 from ..runtime import materialize
 
@@ -87,7 +87,7 @@ def emb_pca_power_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant direction. The classic pre-step for whitening / spectral
     filtering of an embedding corpus before ANN or clustering; at
     100 TB only the first and last stage touch the data, each once."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     xs = micro_array(embeddings, "vec_id", "embedding").transform(materialize)
     x = xs.select("vec_id", F.posexplode("xs").alias("pos0", "xi")).select(
         "vec_id", (F.col("pos0") + 1).alias("pos"), "xi"
@@ -136,7 +136,7 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation ANN indexes rerank against; the codebook side is
     broadcast and the argmin is a lexicographic struct MIN, so the
     plan is two partial-aggregatable groupBys with no window."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     x = micro_components(embeddings, "vec_id", "embedding")
     return pq_codes(x, codebook_ids=_PQ_CODEBOOK, sub_dims=_PQ_SUB_DIMS).select(
         "vec_id",
@@ -214,7 +214,7 @@ def emb_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same two partial-aggregatable groupBys as emb_pq_codes."""
     from ..operators.factorization import ivfpq_index
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     # the array frame fans out into centroid / member / codebook
     # branches — materialize once instead of re-scanning per branch
     xs = micro_array(embeddings, "vec_id", "embedding").transform(materialize)
@@ -316,7 +316,7 @@ def sim_ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ann_ivf_nprobe2 property-test pattern)."""
     from ..operators.factorization import ivfpq_adc_search
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     xs = micro_array(embeddings, "vec_id", "embedding").transform(materialize)
     queries = xs.filter(
         (F.col("vec_id") >= _ADC_QUERY_LO) & (F.col("vec_id") < _ADC_QUERY_HI)
@@ -381,7 +381,7 @@ def sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_factorization.py (adc <= rerank <= ceiling)."""
     from ..operators.factorization import ivfpq_adc_rerank
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     xs = micro_array(embeddings, "vec_id", "embedding").transform(materialize)
     queries = xs.filter(
         (F.col("vec_id") >= _ADC_QUERY_LO) & (F.col("vec_id") < _ADC_QUERY_HI)
@@ -445,7 +445,7 @@ def sim_ann_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     still never scanned."""
     from ..operators.factorization import ivfpq_adc_search
 
-    embeddings, docs = _t(spark, sf_dir, "embeddings", "documents")
+    embeddings, docs = load_tuned(spark, sf_dir, "embeddings", "documents")
     allowed = docs.filter(F.col("lang") == _FILTER_LANG).select(
         F.col("doc_id").alias("vec_id")
     )
@@ -490,7 +490,7 @@ def emb_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a corpus re-cluster."""
     from ..operators.factorization import _ivfpq_parts, ivfpq_encode_increment
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     xs = micro_array(embeddings, "vec_id", "embedding").transform(materialize)
     base = xs.filter(F.col("vec_id") < _INC_SPLIT)
     new = xs.filter(F.col("vec_id") >= _INC_SPLIT)

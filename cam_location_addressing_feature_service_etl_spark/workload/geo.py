@@ -1715,6 +1715,15 @@ _FS_EM_ROUNDS = 3
 _FS_EM_INIT = (0.5, 0.8, 0.2)  # p0, m0, u0 literals, both engines
 
 
+def _sum_sql(terms: list[str]) -> str:
+    """``terms`` summed as an EXPLICIT left-associative fold
+    ``((t0 + t1) + t2) ...``: both engines then add in the same order."""
+    out = terms[0]
+    for x in terms[1:]:
+        out = f"({out} + {x})"
+    return out
+
+
 def _fs_em_layers(
     rounds: int = _FS_EM_ROUNDS,
 ) -> list[list[tuple[str, str]]]:
@@ -1736,12 +1745,6 @@ def _fs_em_layers(
         + [(f"u{i}_0", repr(u0)) for i in range(3)]
     ]
 
-    def fold(terms: list[str]) -> str:
-        out = terms[0]
-        for x in terms[1:]:
-            out = f"({out} + {x})"
-        return out
-
     for t in range(1, rounds + 1):
         pt, wl, sums, params = f"p_{t-1}", [], [], []
         for k in range(8):
@@ -1761,17 +1764,17 @@ def _fs_em_layers(
                 ]
             )
             wl.append((f"w{t}_{k}", f"({pm}) / (({pm}) + ({pu}))"))
-        sums.append((f"sw_{t}", fold([f"n{k} * w{t}_{k}" for k in range(8)])))
+        sums.append((f"sw_{t}", _sum_sql([f"n{k} * w{t}_{k}" for k in range(8)])))
         sums.append(
-            (f"sl_{t}", fold([f"n{k} * (1.0 - w{t}_{k})" for k in range(8)]))
+            (f"sl_{t}", _sum_sql([f"n{k} * (1.0 - w{t}_{k})" for k in range(8)]))
         )
         for i in range(3):
             on = [k for k in range(8) if (k >> (2 - i)) & 1]
             sums.append(
-                (f"swg{i}_{t}", fold([f"n{k} * w{t}_{k}" for k in on]))
+                (f"swg{i}_{t}", _sum_sql([f"n{k} * w{t}_{k}" for k in on]))
             )
             sums.append(
-                (f"slg{i}_{t}", fold([f"n{k} * (1.0 - w{t}_{k})" for k in on]))
+                (f"slg{i}_{t}", _sum_sql([f"n{k} * (1.0 - w{t}_{k})" for k in on]))
             )
         # M-step with the standard probability clamp: a degenerate
         # evidence set (e.g. every pair agreeing on one field — real
@@ -1949,12 +1952,6 @@ def _fs_decision_layers(r: int = _FS_EM_ROUNDS) -> list[list[tuple[str, str]]]:
             for i, b in enumerate(bits)
         )
 
-    def fold(terms: list[str]) -> str:
-        out = terms[0]
-        for x in terms[1:]:
-            out = f"({out} + {x})"
-        return out
-
     probs = [
         (f"mp_{k}", f"({prob('m', k)})") for k in range(8)
     ] + [(f"up_{k}", f"({prob('u', k)})") for k in range(8)]
@@ -1968,7 +1965,7 @@ def _fs_decision_layers(r: int = _FS_EM_ROUNDS) -> list[list[tuple[str, str]]]:
             (f"mq_{k}", f"CAST(FLOOR(mp_{k} * {_FS_Q} + 0.5) AS BIGINT)")
             for k in range(8)
         ]
-        + [("np", fold([f"n{k}" for k in range(8)]))]
+        + [("np", _sum_sql([f"n{k}" for k in range(8)]))]
     )
     cums = []
     for k in range(8):
@@ -1987,8 +1984,8 @@ def _fs_decision_layers(r: int = _FS_EM_ROUNDS) -> list[list[tuple[str, str]]]:
                 cm_terms.append(
                     f"CASE WHEN lr_{j} {below} lr_{k} THEN mq_{j} ELSE 0 END"
                 )
-        cums.append((f"cu_{k}", fold(cu_terms)))
-        cums.append((f"cm_{k}", fold(cm_terms)))
+        cums.append((f"cu_{k}", _sum_sql(cu_terms)))
+        cums.append((f"cm_{k}", _sum_sql(cm_terms)))
     decisions = [
         (
             f"dec_{k}",

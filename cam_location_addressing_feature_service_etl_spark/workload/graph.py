@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 
 from ..operators.labelprop import label_propagation
 from ..operators.pagerank import pagerank
-from .llm_text import _t
+from ..tables import load_tuned
 from . import register
 from ..runtime import materialize
 
@@ -75,7 +75,7 @@ def graph_pagerank_3round(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a node-keyed join + partial-aggregatable groupBy via
     ``operators/pagerank.py`` — no global stage, AQE splits hub
     skew."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     pairs = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
@@ -161,7 +161,7 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topk import ASC, DESC, global_topk_ranked
     from ..operators.triangles import triangle_counts_per_node
 
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     # both sides of the co-occurrence self-join consume the distinct
     # (part, supplier) projection — materialize it once (Spark does not
     # reuse exchanges across self-join branches)
@@ -258,7 +258,7 @@ def graph_kcore_peel3(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregatable degree groupBy + two broadcast anti-joins on the peeled frontier."""
     from ..operators.kcore import kcore_peel
 
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     edges = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .groupBy(
@@ -473,7 +473,7 @@ def graph_copurchase_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     such a sampler is validated against. Membership is gated on the
     integer co-occurrence count; the cosine is one mirrored
     sqrt-divide ROUNDed at the output edge."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     cp = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
@@ -565,7 +565,7 @@ def graph_copurchase_cosine_dimsum(spark: SparkSession, sf_dir: str) -> DataFram
     basket frame (item-cardinality-sized); the sample filter is a pure
     column predicate applied BEFORE the self-join shuffle; everything
     downstream matches the exact twin's bounded-pair shape."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     cp = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
@@ -650,7 +650,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     every stage map-side combines and hub skew is an AQE split, not a
     sort spill. Lineage truncated per round, edges materialized once.
     """
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     pairs = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
@@ -801,7 +801,7 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as there: at web scale the DIMSUM 1/√deg sampler slots in
     front unchanged (the AA weight rides the sampled rows, its
     Horvitz-Thompson correction mirroring cooc's)."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     cp = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
@@ -940,7 +940,7 @@ def graph_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hub-node skew ships ONE array row per hub per join instead of
     deg(hub) ranked rows. The walk table feeds skip-gram windows
     exactly like ``text_train_order_interleave`` feeds packing."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     pairs = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
@@ -1249,7 +1249,7 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: see ``node2vec_walk_frame`` — the extra cost over
     first-order is exactly one (prev, dst) edge-set probe per hop."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     pairs = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
@@ -1317,7 +1317,7 @@ def graph_walk_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count is one partial-aggregatable groupBy on (center,
     context) — vocabulary-sized output no matter how many walks;
     longer walks or windows only widen the exploded array."""
-    (orders, lineitem) = _t(spark, sf_dir, "orders", "lineitem")
+    (orders, lineitem) = load_tuned(spark, sf_dir, "orders", "lineitem")
     pairs = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(

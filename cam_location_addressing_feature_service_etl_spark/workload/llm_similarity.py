@@ -22,8 +22,7 @@ from ..operators.similarity import (
     norm_col,
     cosine_pairs_above,
 )
-from ..session import tune
-from ..tables import load
+from ..tables import load_tuned
 from . import register
 from ..runtime import materialize
 
@@ -31,11 +30,6 @@ _COS_SQL = (
     "ROUND(list_dot_product({a}, {b}) / "
     "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tune(spark)
-    return [load(spark, sf_dir, n) for n in names]
 
 
 @register(
@@ -60,7 +54,7 @@ FROM ranked WHERE rank <= 5
 )
 def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 10 query vectors — the ANN baseline."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < 10)
     return brute_force_topk(embeddings, queries, k=5)
 
@@ -106,7 +100,7 @@ def sim_ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     own cell — the bucketed scale path (nprobe=1)."""
     from ..operators.similarity import _assign_with_vec
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     centroids = embeddings.filter(F.col("vec_id") < _IVF_CENTROIDS)
     members = embeddings.filter(F.col("vec_id") >= _IVF_CENTROIDS)
     # map-side cell assignment CARRYING the member vector+norm — the
@@ -192,7 +186,7 @@ def sim_ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 0.275 → 0.512 recall@5 going nprobe 1→2 at sf0.001)."""
     from ..operators.similarity import ivf_search
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     centroids = embeddings.filter(F.col("vec_id") < _IVF_CENTROIDS)
     members = embeddings.filter(F.col("vec_id") >= _IVF_CENTROIDS)
     queries = members.filter(
@@ -268,7 +262,7 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches directly; the label can be any metadata column."""
     from ..operators.similarity import ivf_search
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     centroids = embeddings.filter(F.col("vec_id") < _IVF_CENTROIDS)
     members = embeddings.filter(F.col("vec_id") >= _IVF_CENTROIDS)
     queries = members.filter(
@@ -365,7 +359,7 @@ def sim_kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance or a rank-stability check instead of exact equality."""
     from ..operators.kmeans import lloyd
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     return lloyd(embeddings, k=8, iterations=2, round_digits=6)
 
 
@@ -482,7 +476,7 @@ def sim_kmeans_cohesion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         lloyd_train,
     )
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     v = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -620,7 +614,7 @@ def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import lloyd_train
     from ..operators.similarity import ivf_search
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     cent = lloyd_train(
         embeddings, k=_KM_K, iterations=_IVT_ROUNDS, round_digits=6
     ).select(
@@ -671,7 +665,7 @@ def sim_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import lloyd_train
     from ..operators.similarity import ivf_search
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     cent = lloyd_train(
         embeddings, k=_IVS_K, iterations=_IVT_ROUNDS, round_digits=6
     ).select(
@@ -765,7 +759,7 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import lloyd_train
     from ..operators.similarity import ivf_search
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     queries = embeddings.filter(F.col("vec_id") < _IVT_QUERIES)
     exact = materialize(
         brute_force_topk(embeddings, queries, k=_IVT_K).select(
@@ -867,7 +861,7 @@ def sim_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import lloyd
     from ..operators.similarity import normalized_col, semdedup_keep_first
 
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     assigns = lloyd(embeddings, k=_KM_K, iterations=2, round_digits=6)
     nv = embeddings.select(
         "vec_id", normalized_col(as_double_array(F.col("embedding"))).alias("e")
@@ -913,7 +907,7 @@ def sample_cluster_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import lloyd
     from pyspark.sql.window import Window
 
-    embeddings, docs = _t(spark, sf_dir, "embeddings", "documents")
+    embeddings, docs = load_tuned(spark, sf_dir, "embeddings", "documents")
     assigns = lloyd(embeddings, k=8, iterations=2, round_digits=6)
     joined = assigns.join(
         docs.select("doc_id", "n_chars"),
@@ -955,7 +949,7 @@ def sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine ≥ 0.4), computed
     as a broadcast-matrix numpy GEMM inside mapInPandas — the oracle
     is the sequential-fold brute force, proving equivalence."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     return cosine_pairs_above(embeddings, threshold=_NEARDUP_THRESHOLD)
 
 
@@ -1003,7 +997,7 @@ def sim_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear shuffle, never O(n²); P[same bucket] = (1 - θ/π)^8, so the
     candidate mass concentrates on near-parallel vectors. Plane
     coefficients are deterministic literals, identical in the oracle."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     v = embeddings.select(
         "vec_id", as_double_array(F.col("embedding")).alias("e")
     )
@@ -1078,7 +1072,7 @@ def sim_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_max); the integer code vector is hash-verified against the
     oracle bit-for-bit, no float tolerance needed. At 100 TB this
     stage has zero shuffle."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     v = embeddings.select(
         "vec_id", as_double_array(F.col("embedding")).alias("e")
     )
@@ -1149,7 +1143,7 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-then-prune semantic dedup at corpus scale (swap the LSH
     bucket for k-means cell ids when a trained codebook exists). The
     prune decision compares the ROUNDed cosine on both engines."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     v = embeddings.select("vec_id", as_double_array(F.col("embedding")).alias("e"))
     bucket = None
     for j in range(_HP_PLANES):
@@ -1238,7 +1232,7 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     get before recall breaks — answered with the same brute-force
     scoring plan twice (broadcast queries, one corpus scan each) and a
     per-query overlap count."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     half = embeddings.select(
         "vec_id", F.slice(F.col("embedding"), 1, _MRL_DIMS).alias("embedding")
     )
@@ -1347,7 +1341,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(k·c) sims REGARDLESS of corpus size, and queries parallelize
     embarrassingly — the standard production deployment reranks
     millions of query shortlists per hour on exactly this shape."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     v = embeddings.select("vec_id", as_double_array(F.col("embedding")).alias("e"))
     q = v.filter(F.col("vec_id") == _MMR_QID).select(F.col("e").alias("qe"))
     packed = (
@@ -1467,7 +1461,7 @@ def sim_mmr_rerank_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no further shuffle — per-query cost is O(k·c·|sel|·dims)
     map-side scalar ops, so adding queries widens partitions instead
     of adding jobs or rounds."""
-    (embeddings,) = _t(spark, sf_dir, "embeddings")
+    (embeddings,) = load_tuned(spark, sf_dir, "embeddings")
     v = embeddings.select("vec_id", as_double_array(F.col("embedding")).alias("e"))
     q = v.filter(F.col("vec_id") < _MMRG_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
@@ -1616,7 +1610,7 @@ def _rrf_corpus(
 ) -> tuple[DataFrame, DataFrame]:
     """(qset, corp): docs carrying BOTH text and an embedding, split
     into the query set (id < {q}) and the searched corpus."""
-    documents, embeddings = _t(spark, sf_dir, "documents", "embeddings")
+    documents, embeddings = load_tuned(spark, sf_dir, "documents", "embeddings")
     fused = documents.join(
         embeddings, documents["doc_id"] == embeddings["vec_id"]
     ).select(F.col("doc_id").alias("id"), "text", "embedding")

@@ -35,7 +35,7 @@ from ..operators.dedup import (
 )
 from ..operators.topk import ASC, DESC, global_topk_ranked
 from ..session import tune
-from ..tables import load
+from ..tables import load, load_tuned
 from . import register
 from ..runtime import materialize
 
@@ -67,11 +67,6 @@ shingle AS (
 )"""
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tune(spark)
-    return [load(spark, sf_dir, n) for n in names]
-
-
 # ---------------------------------------------------------------------------
 # Exact dedup + fingerprint
 # ---------------------------------------------------------------------------
@@ -88,7 +83,7 @@ SELECT doc_id, md5(text) AS content_hash FROM (
 )
 def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy, keep lowest doc_id per content hash."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     kept = exact_dedup(documents, text_col="text", id_col="doc_id")
     return kept.select("doc_id", F.md5("text").alias("content_hash"))
 
@@ -105,7 +100,7 @@ FROM documents
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive document fingerprint: md5 over the sorted
     distinct token set (robust to token shuffling, unlike md5(text))."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     return documents.select(
         "doc_id",
@@ -171,7 +166,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-token shingles. 4-row bands put the collision knee near J≈0.6:
     planted near-dups (J≳0.8) are caught w.p. ~99%, while background
     pairs (J≈0.1) collide at ~4e-4 — shuffle stays linear in docs."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     sigs = minhash_signatures(
         documents, id_col="doc_id", text_col="text",
         num_hashes=_MH_HASHES, shingle_n=_MH_SHINGLE_N,
@@ -211,7 +206,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing side is the persisted band index (bucket-partitioned);
     the new batch's bands hash-join into it, shuffle ∝ batch size,
     not corpus size."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     sigs = minhash_signatures(
         documents, id_col="doc_id", text_col="text",
         num_hashes=_MH_HASHES, shingle_n=_MH_SHINGLE_N,
@@ -259,7 +254,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-trigram Jaccard pairs ≥ 0.6 via inverted index.
     Trigram shingles keep posting lists short (bigram postings explode
     on small vocabularies — measured 25× slower at sf0.1)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(
         documents, id_col="doc_id", text_col="text",
         threshold=_NJ_THRESHOLD, shingle_n=_NJ_SHINGLE_N,
@@ -276,7 +271,7 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, sub-quadratic candidate volume (the 100 TB path)."""
     from ..operators.dedup import ngram_jaccard_pairs_prefix
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return ngram_jaccard_pairs_prefix(
         documents, id_col="doc_id", text_col="text",
         threshold=_NJ_THRESHOLD, shingle_n=_NJ_SHINGLE_N,
@@ -303,7 +298,7 @@ _NJB_ORACLE = _nj_oracle(text_col=f"text || '{_BOILER_FOOTER}'")
 
 
 def _boiler_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return documents.withColumn("text", F.concat(F.col("text"), F.lit(_BOILER_FOOTER)))
 
 
@@ -364,7 +359,7 @@ def text_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge."""
     from ..operators.dedup import shingle_postings
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     sh = shingle_postings(documents, "doc_id", "text", _NJ_SHINGLE_N).transform(materialize)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
@@ -417,7 +412,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     result via chunk indexing (hamming ≤ 1 ⇒ one of the two 16-bit
     halves is identical), never an O(n²) scan. The DuckDB oracle IS
     the brute force, proving the index loses nothing."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     postings = shingle_postings(documents, "doc_id", "text", _SH_SHINGLE_N)
     sh = simhash_from_postings(postings, id_col="doc_id", bits=_SH_BITS)
     return simhash_pairs_exact(
@@ -467,7 +462,7 @@ FROM scored
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram-heuristic language ID: marker-token counts per language,
     argmax with a deterministic precedence chain."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     df = documents.select("doc_id", toks.alias("toks"))
     for lang, markers in _LANG_MARKERS.items():
@@ -678,7 +673,7 @@ def text_nb_langid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     defined. The oracle restates training and scoring in pure SQL with
     a rank window."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return nb_train_score(documents, _NB_TEST_MOD)
 
 
@@ -718,7 +713,7 @@ def text_langid_confusion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the learning behavior itself is pinned by the signal-bearing
     fixture test."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     preds = materialize(nb_train_score(documents, _NB_TEST_MOD))
     gt = preds.groupBy("gold_lang").agg(
         F.count(F.lit(1)).cast("long").alias("gold_total")
@@ -759,7 +754,7 @@ def text_nb_incremental_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     2) is arbitrary; any partition of the corpus merges to the same
     model because counting is associative-commutative."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     train = documents.filter(F.col("doc_id") % _NB_TEST_MOD != 0)
     batch_a = train.filter(F.col("doc_id") % 2 == 0)
     batch_b = train.filter(F.col("doc_id") % 2 != 0)
@@ -793,7 +788,7 @@ FROM tokl
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/punctuation/stopword-ratio features
     combined into a bounded [0,1] score."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     df = documents.select(
         "doc_id",
@@ -971,7 +966,7 @@ def text_lr_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     every step ON BOTH ENGINES, so the iteration stays on one float
     grid and the final per-doc probabilities hash-match."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return lr_train_score(documents, _NB_TEST_MOD)
 
 
@@ -993,7 +988,7 @@ FROM documents
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + a BPE-ish regex segmentation
     (letters runs / digit runs / single other glyphs)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return documents.select(
         "doc_id",
         F.size(tokens_col(F.col("text"))).cast("long").alias("ws_tokens"),
@@ -1065,7 +1060,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence; the oracle unrolls the same rounds as SQL."""
     from ..operators.dedup import connected_components
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     # edge stage: measured-gate choice between the naive count-join
     # and PPJoin prefix filtering (identical pair set either way, so
     # the oracle is unchanged) — prefix wins exactly when the corpus
@@ -1143,7 +1138,7 @@ def dedup_cc_star_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     property (exact per-round semantics vs converged fixed point)."""
     from ..operators.dedup import connected_components_star
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     # edge stage: measured-gate choice between the naive count-join
     # and PPJoin prefix filtering (identical pair set either way, so
     # the oracle is unchanged) — prefix wins exactly when the corpus
@@ -1204,7 +1199,7 @@ def sample_split_leakfree(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-only projection on the component label."""
     from ..operators.dedup import connected_components_star
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     # edge stage: measured-gate choice between the naive count-join
     # and PPJoin prefix filtering (identical pair set either way, so
     # the oracle is unchanged) — prefix wins exactly when the corpus
@@ -1294,7 +1289,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     after edits — the basis of copy detection at corpus scale. Pure
     column exprs + one explode; no shuffle until the final per-doc
     aggregation."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     from pyspark.sql.window import Window
 
     toks = documents.select("doc_id", tokens_col(F.col("text")).alias("t"))
@@ -1693,7 +1688,7 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort). At 100 TB this is exactly the job you iterate per merge
     round — counts are mergeable, so map-side combine does most of the
     work before the shuffle."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = documents.select(tokens_col(F.col("text")).alias("t"))
     pairs = (
         toks.filter(F.size("t") >= 2)
@@ -1752,7 +1747,7 @@ def text_chunk_for_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row per chunk with its token count and content hash. Explode +
     slice stay JVM-side; at 100 TB this is a map-only stage — no
     shuffle at all."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = documents.select("doc_id", tokens_col(F.col("text")).alias("t"))
     chunks = toks.filter(F.size("t") >= 1).select(
         "doc_id",
@@ -1822,7 +1817,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottleneck (the classic mistake is a corpus-wide window). For the
     keyless CORPUS-GLOBAL packing order see
     ``sample_pack_concat_chunks`` (two-phase distributed scan)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     from pyspark.sql.window import Window
 
     toks = documents.select(
@@ -1887,7 +1882,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is vocabulary-sized (≪ corpus) so AQE broadcasts it; ranking
     happens on the ROUNDed score (both engines) with a term tie-break
     so top-k is total-ordered."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     from pyspark.sql.window import Window
 
     tok = documents.select(
@@ -1941,7 +1936,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     gibberish/boilerplate before training. Two aggregations (corpus
     term counts, then per-doc mean over a vocab join); the frequency
     table is vocabulary-sized, so the join broadcasts."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     tok = documents.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
     )
@@ -1986,7 +1981,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash destroys doc_id locality. At scale this is one shuffle on the
     stratum key; the per-stratum top-k never materializes the full
     sort (rank + filter prunes early)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("lang").orderBy(
@@ -2042,7 +2037,7 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     source."""
     from pyspark.sql.window import Window
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     n = documents.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     w_int = n.select(
         "source",
@@ -2101,7 +2096,7 @@ def text_postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms. The posting cap bounds per-term state (a real index shards
     long posting lists); the top-k is TakeOrderedAndProject, not a
     full sort."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     dt = (
         documents.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
         .distinct()
@@ -2170,7 +2165,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary."""
     from ..operators.dedup import shingles_col
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     base = documents.select("doc_id", tokens_col(F.col("text")).alias("t"))
     n = F.size("t")
     distinct_ratio = F.round(
@@ -2373,7 +2368,7 @@ def text_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     at read — both sides call the SAME stage definitions
     (``funnel_doc_flags``), so a threshold can never drift between
     the audit and the monitor."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return funnel_table_from_counts(funnel_counts(funnel_doc_flags(documents)))
 
 
@@ -2462,7 +2457,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized, AQE-broadcast) count tables. Same determinism discipline
     as text_unigram_logprob: exact-integer count ratios inside ln,
     one rounded AVG at the output edge."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return bigram_doc_logprob(documents)
 
 
@@ -2516,7 +2511,7 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides so boundary docs bucket identically in both engines;
     a language with one scored doc has NULL σ and buckets middle by
     the CASE's ELSE in both."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     score = bigram_doc_logprob(documents)
     lab = score.join(documents.select("doc_id", "lang"), "doc_id").select(
         "doc_id", "lang", "avg_logprob"
@@ -2593,7 +2588,7 @@ def sample_ppl_bucket_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     a languages-sized total re-broadcast, a 3-row weight table. The
     plan itself never re-scans the corpus — the only corpus-sized
     stages are inside the bucket builder."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     bucketed = text_perplexity_buckets(spark, sf_dir)
     cell = (
         bucketed.join(documents.select("doc_id", "n_chars"), "doc_id")
@@ -2687,7 +2682,7 @@ def dedup_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(gram) instead, so the exchange never carries full n-grams."""
     from ..operators.dedup import duplicated_token_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return duplicated_token_spans(documents, "doc_id", "text", k=_SPAN_K)
 
 
@@ -2745,7 +2740,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals frame is an explicit broadcast."""
     from pyspark.sql.window import Window
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     tok = documents.select(
         "doc_id", F.posexplode(tokens_col(F.col("text"))).alias("pos", "tok")
     ).transform(materialize)
@@ -2854,7 +2849,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle); df and the corpus stats are 1-row / vocabulary-
     sized broadcasts; the top-k is TakeOrderedAndProject + the
     windowless k-row rank (operators/topk.py)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     tokl = documents.select(
         "doc_id", tokens_col(F.col("text")).alias("t")
     ).transform(materialize)
@@ -2962,7 +2957,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only candidate pairs — never all pairs."""
     from ..operators.dedup import shingle_postings
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     # one tokenize+shingle scan feeds BOTH the signature leg and the
     # exact-Jaccard postings leg (the scan is the dominant cost)
     sh = shingle_postings(
@@ -3060,7 +3055,7 @@ def text_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     split. One partial-aggregatable groupBy on the shard key; at
     100 TB the same expression IS the partitionBy column of the
     shard write."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     shard = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long")
@@ -3122,7 +3117,7 @@ def dedup_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-cardinality-sized; the rebuild partitions by doc."""
     from ..operators.dedup import remove_duplicated_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return remove_duplicated_spans(documents, "doc_id", "text", k=_SPAN_K)
 
 
@@ -3174,7 +3169,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-per-component frame, partitioned on the component key."""
     from ..operators.dedup import connected_components
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     # edge stage: measured-gate choice between the naive count-join
     # and PPJoin prefix filtering (identical pair set either way, so
     # the oracle is unchanged) — prefix wins exactly when the corpus
@@ -3277,7 +3272,7 @@ def dedup_incremental_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         empty_dedup_registry,
     )
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     registry = empty_dedup_registry(spark)
     postings = empty_dedup_postings(spark)
     # the additive df side state (r15): threading it between folds is
@@ -3348,7 +3343,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort, no unpartitioned window); the regression aggregates
     are a single-pass reduce to ONE row. Nothing here scales with
     corpus size except the map-side token count."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     freq = (
         documents.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
         .groupBy("tok")
@@ -3423,7 +3418,7 @@ def dq_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers per partition, mergeable across shards/batches (the
     streaming twin folds the same counts)."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     scored = lr_train_score(documents, _NB_TEST_MOD)
     b = scored.select(
         F.floor(F.col("p_quality") * 1000000 + 0.5)
@@ -3513,7 +3508,7 @@ def dq_classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame
     broadcasts. The confusion counts are mergeable, so the same audit
     runs incrementally over scoring batches."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     preds = nb_train_score(documents, _NB_TEST_MOD)
     # materialized: four branches (row marginals, column marginals,
     # totals, the chance term) consume the confusion matrix, and
@@ -3623,7 +3618,7 @@ def sample_mix_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row total broadcast — the plan is a metadata computation after
     the first aggregate, identical at any corpus size."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     avail = documents.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(tokens_col(F.col("text")))).cast("long").alias("avail_tokens"),
@@ -3763,7 +3758,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage cut per round; hub words (stopwords) are AQE skew
     territory, and a stopword filter slots in front unchanged."""
     tune(spark)
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = documents.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     pairs = (
         toks.filter(F.size("toks") >= 2)
@@ -3896,7 +3891,7 @@ def sample_pack_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle states the same scan as one SQL running sum —
     plan-free semantics, engine-checked window arithmetic."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = documents.select(
         "doc_id",
         (F.size(tokens_col(F.col("text"))) + 1).cast("long").alias("sz"),
@@ -4015,7 +4010,7 @@ def dedup_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards on the gram hash and needs no order."""
     from ..operators.dedup import shared_token_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return shared_token_spans(
         documents, "doc_id", "text", k=_SS_K, min_span=_SS_MIN_SPAN
     )
@@ -4094,7 +4089,7 @@ def dedup_shared_spans_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate corpus."""
     from ..operators.dedup import shared_token_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return shared_token_spans(
         documents, "doc_id", "text",
         k=_SS_K, min_span=_SS_MIN_SPAN, max_gram_df=_SS_CAP,
@@ -4127,7 +4122,7 @@ def dedup_shared_span_stopgrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ≤ |postings|/{cap} rows by construction."""
     from ..operators.dedup import shared_span_stop_grams
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return shared_span_stop_grams(
         documents, "doc_id", "text", k=_SS_K, max_gram_df=_SS_CAP
     )
@@ -4210,7 +4205,7 @@ def dedup_remove_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups by doc id. Nothing in the plan materializes doc pairs."""
     from ..operators.dedup import remove_shared_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return remove_shared_spans(
         documents, "doc_id", "text",
         k=_SS_K, min_span=_SS_MIN_SPAN, max_gram_df=_SS_CAP,
@@ -4276,7 +4271,7 @@ def dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``duplicated_token_spans`` discipline — same algebra)."""
     from ..operators.dedup import shingle_postings
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     sh = shingle_postings(documents, "doc_id", "text", _NJ_SHINGLE_N)
     bench = (
         sh.filter(F.col("doc_id") % _XC_MOD == 0)
@@ -4396,7 +4391,7 @@ def dedup_decontam_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     remove_contaminated_spans)."""
     from ..operators.dedup import remove_contaminated_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     bench = documents.filter(F.col("doc_id") % _XC_MOD == 0)
     train = documents.filter(F.col("doc_id") % _XC_MOD != 0)
     return remove_contaminated_spans(train, bench, "doc_id", "text", k=_XR_K)
@@ -4452,7 +4447,7 @@ def llm_curation_budget_composite(spark: SparkSession, sf_dir: str) -> DataFrame
     no global window."""
     from ..operators.dedup import remove_contaminated_spans
 
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     survivors = (
         funnel_doc_flags(documents).filter(F.col("p2")).select("doc_id")
     )
@@ -4561,7 +4556,7 @@ def sample_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     source on a single reducer); the salt phase replaces it with the
     CONSTANT bound cap × {salt} into the final re-rank, independent
     of task count."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     base = documents.select("source", "doc_id", "n_chars")
     return source_cap_phase2(source_cap_phase1(base))
 

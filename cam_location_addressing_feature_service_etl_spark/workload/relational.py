@@ -41,18 +41,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import tune
-from ..tables import load
+from ..tables import load, load_tuned
 from ..operators.upsert import upsert_by_key, upsert_with_reset
 from ..operators.dedup import dedup_first_wins, merge_fetched_wins
 from ..operators.id_map import assign_surrogate_ids_bulk
 from ..operators.topk import ASC as TOPK_ASC, DESC as TOPK_DESC, global_topk_ranked, rank_small_frame
 from . import register
 from ..runtime import materialize
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tune(spark)
-    return [load(spark, sf_dir, n) for n in names]
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +80,7 @@ WHERE l.rn = 1
 """,
 )
 def flagship_current_address(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, customer, nation = _t(spark, sf_dir, "orders", "customer", "nation")
+    orders, customer, nation = load_tuned(spark, sf_dir, "orders", "customer", "nation")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_orderdate"), F.desc("o_orderkey"))
     latest = (
         orders.withColumn("rn", F.row_number().over(w))
@@ -122,7 +117,7 @@ def flagship_current_address(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p1_column_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1: column pruning must reach the scan (ReadSchema shows 3 cols)."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return lineitem.select("l_orderkey", "l_linenumber", "l_quantity")
 
 
@@ -136,7 +131,7 @@ FROM lineitem
 )
 def p2_computed_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2: (expr AS ?alias) computed projection."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return lineitem.select(
         "l_orderkey",
         "l_linenumber",
@@ -153,7 +148,7 @@ FROM lineitem WHERE l_returnflag = 'R'
 )
 def p3_typed_literal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3: FILTER(DATATYPE(?x) = <tag>) → equality filter on a tag column."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return lineitem.filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_linenumber", "l_returnflag"
     )
@@ -170,7 +165,7 @@ WHERE NOT EXISTS (
 )
 def p4_anti_join_open_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: FILTER NOT EXISTS {lifecycle hasEnd} → left_anti join."""
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_tuned(spark, sf_dir, "customer", "orders")
     ended = orders.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("c_custkey")
     )
@@ -186,7 +181,7 @@ FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-06-01'
 )
 def p5_incremental_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5: last_edited_date >= <prev run> — pushed to the parquet scan."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return (
         lineitem.filter(F.col("l_shipdate") >= F.lit("1998-06-01").cast("timestamp"))
         .select(
@@ -206,7 +201,7 @@ FROM events WHERE event_type = 'error' AND value IS NOT NULL
 )
 def p7_notnull_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7: IS NOT NULL probe filter."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_tuned(spark, sf_dir, "events")
     return events.filter(
         (F.col("event_type") == "error") & F.col("value").isNotNull()
     ).select("event_id", F.round("value", 4).alias("err_value"))
@@ -224,7 +219,7 @@ WHERE o_custkey IN ({", ".join(str(k) for k in _DEBUG_KEYS)})
 )
 def p8_debug_subset_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8: debug VALUES subsetting → semi-join against a literal DataFrame."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tuned(spark, sf_dir, "orders")
     keys = spark.createDataFrame([(k,) for k in _DEBUG_KEYS], "o_custkey long")
     return orders.join(F.broadcast(keys), "o_custkey", "left_semi").select(
         "o_orderkey", "o_custkey"
@@ -246,7 +241,7 @@ JOIN region r ON r.r_regionkey = n.n_regionkey
 )
 def j1_multiway_equijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: chained graph-pattern equi-joins; small dims broadcast."""
-    customer, nation, region = _t(spark, sf_dir, "customer", "nation", "region")
+    customer, nation, region = load_tuned(spark, sf_dir, "customer", "nation", "region")
     return (
         customer.join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
         .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
@@ -268,7 +263,7 @@ FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
 )
 def j2_optional_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: OPTIONAL pattern — unmatched rows surface NULL columns (P6)."""
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_tuned(spark, sf_dir, "customer", "orders")
     return customer.join(
         orders, customer["c_custkey"] == orders["o_custkey"], "left"
     ).select("c_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("total_price"))
@@ -284,7 +279,7 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 50)
 def j3_values_batch_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: the reference serializes ≤10k keys into a VALUES clause per
     batch; here the whole key set is one broadcast semi-join."""
-    lineitem, part = _t(spark, sf_dir, "lineitem", "part")
+    lineitem, part = load_tuned(spark, sf_dir, "lineitem", "part")
     keys = part.filter(F.col("p_size") == 50).select(F.col("p_partkey").alias("l_partkey"))
     return lineitem.join(F.broadcast(keys), "l_partkey", "left_semi").select(
         "l_orderkey", "l_partkey", "l_quantity"
@@ -301,7 +296,7 @@ WHERE o.o_orderkey IS NULL
 )
 def j5_left_join_unmapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: LEFT JOIN ... WHERE right.id IS NULL — rows lacking a mapping."""
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_tuned(spark, sf_dir, "customer", "orders")
     pending = orders.filter(F.col("o_orderstatus") == "P")
     return (
         customer.join(pending, customer["c_custkey"] == pending["o_custkey"], "left")
@@ -321,7 +316,7 @@ WHERE EXISTS (SELECT 1 FROM orders o
 def j6_prune_keep_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6: DELETE WHERE NOT EXISTS inverted to the Spark-idiomatic
     keep-side left_semi join."""
-    lineitem, orders = _t(spark, sf_dir, "lineitem", "orders")
+    lineitem, orders = load_tuned(spark, sf_dir, "lineitem", "orders")
     keep = orders.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_orderkey").alias("l_orderkey")
     )
@@ -343,7 +338,7 @@ WHERE c_custkey NOT IN (
 )
 def j7_anti_union_newkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7: pk NOT IN (SELECT iri FROM map UNION SELECT id FROM map)."""
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_tuned(spark, sf_dir, "customer", "orders")
     known = (
         orders.filter(F.col("o_orderstatus") == "O")
         .select(F.col("o_custkey").alias("c_custkey"))
@@ -367,7 +362,7 @@ FROM orders o LEFT JOIN customer c ON c.c_custkey = o.o_custkey
 def j8_update_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8: UPDATE t SET col = (SELECT ... ) rewritten as an immutable
     left join + coalesce — no rowid batching needed (pls/tables.py:856-882)."""
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = load_tuned(spark, sf_dir, "orders", "customer")
     mapping = customer.select(F.col("c_custkey").alias("o_custkey"), "c_mktsegment")
     return orders.join(mapping, "o_custkey", "left").select(
         "o_orderkey", F.coalesce("c_mktsegment", F.lit("NONE")).alias("segment")
@@ -385,7 +380,7 @@ JOIN part p ON p.p_partkey = l.l_partkey AND p.p_retailprice > 950
 def j9_lookup_join_miss_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9: per-batch dict probe with miss-skipping → broadcast inner join
     (misses drop out; the reference logs them, pls/tables.py:786-789)."""
-    lineitem, part = _t(spark, sf_dir, "lineitem", "part")
+    lineitem, part = load_tuned(spark, sf_dir, "lineitem", "part")
     lookup = part.filter(F.col("p_retailprice") > 950).select(
         F.col("p_partkey").alias("l_partkey"), F.col("p_name").alias("part_name")
     )
@@ -416,7 +411,7 @@ def j10_cache_merge_fetched_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J10: stored|fetched dict union, fetched wins on key collision
     (geocode.py:362-388). Precedence is explicit via a priority column —
     never rely on orderBy-before-dropDuplicates."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     stored = part.select(
         F.col("p_partkey").alias("key"),
         F.round("p_retailprice", 2).alias("price"),
@@ -448,7 +443,7 @@ FROM orders GROUP BY o_custkey
 def a1_grouped_max_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (agg form): SELECT key, MAX(start) GROUP BY key — partial-agg
     (map-side combine) makes this shuffle only one value per key."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tuned(spark, sf_dir, "orders")
     return orders.groupBy("o_custkey").agg(
         F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias("latest_start_time")
     )
@@ -467,7 +462,7 @@ SELECT o_custkey, o_orderkey, o_orderpriority FROM (
 )
 def a1_latest_row_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (window form): keep the whole latest row, not just the max."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tuned(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_orderdate"), F.desc("o_orderkey"))
     return (
         orders.withColumn("rn", F.row_number().over(w))
@@ -485,7 +480,7 @@ WHERE l_shipdate >= TIMESTAMP '1998-06-01'
 )
 def a2_count_with_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: ESRI returnCountOnly=true with a where clause."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return lineitem.filter(
         F.col("l_shipdate") >= F.lit("1998-06-01").cast("timestamp")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -501,7 +496,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 )
 def a4_rowcount_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: cursor.rowcount after DELETE → count of the pruned set."""
-    lineitem, orders = _t(spark, sf_dir, "lineitem", "orders")
+    lineitem, orders = load_tuned(spark, sf_dir, "lineitem", "orders")
     keep = orders.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_orderkey").alias("l_orderkey")
     )
@@ -519,7 +514,7 @@ def a4_rowcount_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
 )
 def d1_distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return lineitem.select("l_returnflag", "l_linestatus").distinct()
 
 
@@ -537,7 +532,7 @@ SELECT l_partkey, l_orderkey, l_linenumber FROM (
 def d2_first_wins_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2: seen-set first-wins dedup (pls/tables.py:421-446) — "first" made
     explicit as min (l_orderkey, l_linenumber) per key."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return dedup_first_wins(
         lineitem.select("l_partkey", "l_orderkey", "l_linenumber"),
         key_cols=["l_partkey"],
@@ -552,7 +547,7 @@ def d2_first_wins_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d3_distinct_keys_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: sorted({row[k] for row in rows}) before a lookup fetch
     (pls/tables.py:767-773) — distinct key extraction."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     return lineitem.select(F.col("l_suppkey").alias("key")).distinct().orderBy("key")
 
 
@@ -562,7 +557,7 @@ def d3_distinct_keys_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d4_distinct_values_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4: ESRI returnDistinctValues=true on one field (geocode.py:331-338)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_tuned(spark, sf_dir, "events")
     return events.select("event_type").distinct()
 
 
@@ -580,7 +575,7 @@ ORDER BY ts DESC, event_id DESC LIMIT 1
 def o1_latest_snapshot_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1: desc-lex sort + first = latest-snapshot selection (s3.py:37-46).
     Spark executes this as a TakeOrderedAndProject, no full sort."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_tuned(spark, sf_dir, "events")
     return (
         events.orderBy(F.desc("ts"), F.desc("event_id"))
         .limit(1)
@@ -594,7 +589,7 @@ def o1_latest_snapshot_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o2_limit_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2: LIMIT 1000 guard — made deterministic with a total order."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     return part.orderBy("p_partkey").limit(1000).select("p_partkey", "p_name")
 
 
@@ -612,7 +607,7 @@ SELECT c_custkey AS key FROM customer WHERE c_acctbal < 0
 )
 def u1_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: UNION (dedup) of two key extracts (id_map.py:40-44)."""
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = load_tuned(spark, sf_dir, "orders", "customer")
     a = orders.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("key"))
     b = customer.filter(F.col("c_acctbal") < 0).select(F.col("c_custkey").alias("key"))
     return a.union(b).distinct()
@@ -631,7 +626,7 @@ FROM orders WHERE o_orderstatus = 'O'
 def u2_carry_forward_reshape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: INSERT INTO t SELECT ... FROM previous.t with column
     reshaping/NULL-ing (geocode carry-forward, main_pls.py:123-133)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tuned(spark, sf_dir, "orders")
     carried = orders.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey",
         "o_custkey",
@@ -665,7 +660,7 @@ WHERE NOT EXISTS (SELECT 1 FROM updates u WHERE u.key = c.c_custkey)
 )
 def m1_upsert_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1: INSERT ... ON CONFLICT DO UPDATE → updates ∪ (base ⟕̸ updates)."""
-    (customer,) = _t(spark, sf_dir, "customer")
+    (customer,) = load_tuned(spark, sf_dir, "customer")
     base = customer.select(F.col("c_custkey").alias("key"), F.col("c_mktsegment").alias("val"))
     updates = (
         customer.filter(F.col("c_custkey") % 5 == 0)
@@ -690,7 +685,7 @@ WHERE NOT EXISTS (SELECT 1 FROM incoming i WHERE i.key = s.s_suppkey)
 def m2_upsert_reset_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2: check-then-upsert that resets the enrichment column to NULL on
     update (geocode.py:231-270: site_id reset on re-import)."""
-    (supplier,) = _t(spark, sf_dir, "supplier")
+    (supplier,) = load_tuned(spark, sf_dir, "supplier")
     base = supplier.select(
         F.col("s_suppkey").alias("key"),
         F.col("s_name").alias("name"),
@@ -737,7 +732,7 @@ def m3_stable_surrogate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes an id from monotonically_increasing_id (not dense, not
     stable).
     """
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     iris = part.select(
         F.concat(F.lit("iri/"), F.col("p_partkey").cast("string")).alias("iri"),
         "p_partkey",
@@ -800,7 +795,7 @@ def pipeline_prune_enrich_composite(spark: SparkSession, sf_dir: str) -> DataFra
         update_geocode_site_id,
     )
 
-    orders, customer = _t(spark, sf_dir, "orders", "customer")
+    orders, customer = load_tuned(spark, sf_dir, "orders", "customer")
     lf_address = orders.select(
         F.col("o_orderkey").cast("string").alias("addr_id"),
         F.col("o_custkey").cast("string").alias("address_pid"),
@@ -837,7 +832,7 @@ SELECT 'status_len1' AS rule, CAST(COUNT(*) FILTER (LENGTH(o_orderstatus) <> 1) 
 def f12_validation_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F12: DDL CHECK constraints (length(x) <= N, length(status) = 1,
     pls/tables.py:70-79) as a data-quality validation stage."""
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_tuned(spark, sf_dir, "customer", "orders")
     name_w = customer.agg(
         F.lit("name_width").alias("rule"),
         F.count(F.when(F.length("c_name") > 18, 1)).alias("violations"),
@@ -1093,7 +1088,7 @@ def j11_fuzzy_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks get AQE skew-split, and a production matcher would salt or
     sub-block (add a length band to the key) before relaxing the
     block."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     names = part.groupBy("p_name").agg(F.count(F.lit(1)).alias("n_parts"))
     b = names.select(
         "p_name",
@@ -1171,7 +1166,7 @@ def a9_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer count with the key as tiebreak. One partial-
     aggregatable groupBy + a 1-row broadcast total; the top-k window
     runs on the (already key-cardinality-sized) frequency table."""
-    (lineitem,) = _t(spark, sf_dir, "lineitem")
+    (lineitem,) = load_tuned(spark, sf_dir, "lineitem")
     freq = lineitem.groupBy(F.col("l_suppkey").alias("key")).agg(
         F.count(F.lit(1)).alias("cnt")
     ).transform(materialize)
@@ -1423,7 +1418,7 @@ def a13_theta_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     land within {t:.0%} (with lgNomEntries=16 both sides stay in exact
     mode below 64k distinct keys, so the flag is deterministic at the
     test scales — the bound, not a hope, covers the 100 TB regime)."""
-    customer, orders = _t(spark, sf_dir, "customer", "orders")
+    customer, orders = load_tuned(spark, sf_dir, "customer", "orders")
     nat_sk = customer.groupBy("c_nationkey").agg(
         F.theta_sketch_agg(F.col("c_custkey"), lgNomEntries=16).alias("sk"),
         F.count(F.lit(1)).alias("n_customers"),

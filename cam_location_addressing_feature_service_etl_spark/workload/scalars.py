@@ -21,14 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune
-from ..tables import load
+from ..tables import load_tuned
 from . import register
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tune(spark)
-    return [load(spark, sf_dir, n) for n in names]
 
 
 @register(
@@ -44,7 +38,7 @@ FROM part
 def f1_f2_synthetic_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1+F2+F4: CONCAT(STR(k),'/',code,'/',UCASE(name)) synthetic key
     plus a constant BIND column."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     return part.select(
         F.concat_ws(
             "/", F.col("p_partkey").cast("string"), F.upper("p_brand"), F.upper("p_type")
@@ -65,7 +59,7 @@ FROM part
 def f3_conditional_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: the reference's COALESCE(IF(cond,'9999',1/0), x) error-as-null
     trick is just when/otherwise in Spark."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.when(F.col("p_size") == 1, F.lit("9999"))
@@ -95,7 +89,7 @@ JOIN (VALUES {", ".join(f"('{k}', '{v}')" for k, v in _PRIORITY_VOCAB)}) v(pri, 
 def f5_vocab_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: concept-IRI → legacy code via a broadcast vocab DataFrame
     (the reference ships skos:notation lookups to the triplestore)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tuned(spark, sf_dir, "orders")
     vocab = spark.createDataFrame(_PRIORITY_VOCAB, "o_orderpriority string, priority_code string")
     return orders.join(F.broadcast(vocab), "o_orderpriority", "inner").select(
         "o_orderkey", "priority_code"
@@ -131,7 +125,7 @@ FROM base
 def f6_normalize_initialism(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6: geocode-type URI → ≤4-char code; known codes from a dict,
     unknown slugs fall back to word-initial letters (geocode.py:123-145)."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tuned(spark, sf_dir, "part")
     slug = F.replace(F.lower(F.col("p_type")), F.lit(" "), F.lit("-"))
     initials = F.substring(
         F.upper(F.array_join(F.transform(F.split(slug, "-"), lambda w: F.substring(w, 1, 1)), "")),
@@ -154,7 +148,7 @@ FROM orders
 )
 def f7_string_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7: ESRI numeric attributes normalized to strings."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tuned(spark, sf_dir, "orders")
     return orders.select(
         F.col("o_orderkey").cast("string").alias("objectid"),
         F.col("o_custkey").cast("string").alias("address_pid"),
@@ -176,7 +170,7 @@ def f8_f9_f10_time_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8 UTC→Australia/Brisbane (+10:00, no DST), F9 epoch-ms round trip,
     F10 the reference's three output formats (time_convert.py:6-19,
     main_pls.py:82-83)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_tuned(spark, sf_dir, "events")
     return events.select(
         "event_id",
         F.unix_millis("ts").alias("epoch_millis"),
@@ -200,7 +194,7 @@ FROM documents WHERE source LIKE 'src1%'
 )
 def f11_prefix_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F11: startswith filter + removeprefix/removesuffix reshaping."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     return documents.filter(F.col("source").startswith("src1")).select(
         "doc_id",
         F.regexp_replace("source", "^src", "").cast("long").alias("src_num"),
@@ -218,7 +212,7 @@ FROM events
 def f_json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured payload extraction (the reference parses nested
     JSON in Python at ingest; Spark keeps it columnar)."""
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_tuned(spark, sf_dir, "events")
     return events.select(
         "event_id", F.regexp_extract("props", "[0-9]+", 0).cast("long").alias("prop_k")
     )

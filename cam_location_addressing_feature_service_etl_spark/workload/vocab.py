@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from ..operators.bpe import JOIN_CH, bpe_rounds_seqs
 from ..operators.dedup import tokens_col
-from .llm_text import TOKENS_SQL, _t
+from ..tables import load_tuned
+from .llm_text import TOKENS_SQL
 from . import register
 from ..operators.topk import ASC, DESC, prefix_sum_small_frame
 
@@ -108,7 +109,7 @@ def text_bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer split (no posexplode, no per-round lead() window) — per
     round the only exchange is the map-side-combined pair count; the
     greedy-left rewrite is a map-side fold (operators/bpe.py)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     seqs = documents.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     rules, _ = bpe_rounds_seqs(seqs, rounds=_BPE_ROUNDS)
     return rules
@@ -155,7 +156,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full sort), a single-row total broadcast, and a windowless
     sorted-array cumulative over just the {k} surviving rows — the
     only single-reducer step touches {k} rows, not the corpus."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     toks = documents.select(F.explode(tokens_col(F.col("text"))).alias("tok"))
     cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     tot = cnt.agg(F.sum("cnt").alias("total"))
@@ -202,7 +203,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded stream (one more corpus shuffle) is gone. Empty docs are
     filtered exactly as the exploded form dropped them (no token rows
     → no group)."""
-    (documents,) = _t(spark, sf_dir, "documents")
+    (documents,) = load_tuned(spark, sf_dir, "documents")
     seqs = documents.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     _, out = bpe_rounds_seqs(seqs, rounds=_BPE_ROUNDS)
     return out.filter(F.size("toks") > 0).select(

@@ -59,17 +59,17 @@ def test_split_leakfree_no_straddle(spark):
     from cam_location_addressing_feature_service_etl_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
+    from cam_location_addressing_feature_service_etl_spark.tables import load_tuned
     from cam_location_addressing_feature_service_etl_spark.workload.llm_text import (
         _CC_THRESHOLD,
         _NJ_SHINGLE_N,
-        _t,
     )
 
     split = QUERIES["sample_split_leakfree"](spark, SF_SMOKE).toPandas()
     assert (split.groupby("group_id")["split"].nunique() <= 1).all()
     assert set(split["split"]) == {"train", "heldout"}
 
-    (documents,) = _t(spark, SF_SMOKE, "documents")
+    (documents,) = load_tuned(spark, SF_SMOKE, "documents")
     pairs = ngram_jaccard_pairs(
         documents,
         id_col="doc_id",

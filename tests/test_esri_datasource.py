@@ -221,3 +221,7 @@ def test_resolve_order_by_falls_back_to_first_field():
     assert _resolve_order_by({}, fid) == "fid"
     assert _resolve_order_by({"order_by": ""}, oid) == ""
     assert _resolve_order_by({"order_by": "pid"}, fid) == "pid"
+    # no field to fall back to: a message naming the option, not an IndexError
+    with pytest.raises(ValueError, match="objectid.*'order_by' option"):
+        _resolve_order_by({}, StructType())
+    assert _resolve_order_by({"order_by": "fid"}, StructType()) == "fid"

@@ -98,8 +98,17 @@ def _id_map(result, name="lf_parcel"):
 
 
 def test_two_run_lifecycle(spark, tmp_path):
-    root = str(tmp_path / "snaps")
+    _two_run_lifecycle(spark, str(tmp_path / "snaps"))
 
+
+def test_two_run_lifecycle_file_uri(spark, tmp_path):
+    """The same lifecycle over a ``file://`` snapshot root: the store
+    lists and commits through the Hadoop FileSystem, so the second run
+    restores the first run's snapshot and keeps every carried id."""
+    _two_run_lifecycle(spark, "file://" + str(tmp_path / "snaps"))
+
+
+def _two_run_lifecycle(spark, root):
     # ---- run 1: cold start
     r1 = run_etl(spark, snapshot_root=root, **_day1(spark))
     assert r1.previous_snapshot_ts is None

@@ -46,6 +46,23 @@ def test_paged_read_all_rows(registered):
     assert df.filter("street = 'street-7'").count() == 1
 
 
+def test_paged_read_with_inner_limit(registered):
+    """A query carrying its own LIMIT caps the row universe; every page
+    partition still reads only its own window of it."""
+    df = (
+        registered.read.format("sparql")
+        .option("mode", "fake")
+        .option("fake_rows", "450")
+        .option("page_size", "20")
+        .option("variables", "pid")
+        .option("query", "SELECT ?pid WHERE { ?pid a :A } ORDER BY ?pid LIMIT 50")
+        .load()
+    )
+    assert df.rdd.getNumPartitions() == 3  # ceil(50/20) pages
+    pids = [r["pid"] for r in df.collect()]
+    assert len(pids) == 50 and len(set(pids)) == 50
+
+
 def test_keys_then_details_partitioning(registered):
     """The reference's two-phase VALUES extract
     (pls/tables.py:401-472): keys query plans the partitions, each

@@ -104,29 +104,25 @@ def test_foreach_batch_upsert_sink(spark, tmp_path):
         upsert_snapshot_sink,
     )
 
+    schema = "k long, v string, batch int"
     src = tmp_path / "src"
     src.mkdir()
     snap = str(tmp_path / "snapshot")
-    base = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1)], "k long, v string, batch int"
-    )
-    upd = spark.createDataFrame(
-        [(2, "B", 2), (3, "c", 2)], "k long, v string, batch int"
-    )
+    ckpt = str(tmp_path / "ckpt")
+    base = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema)
+    upd = spark.createDataFrame([(2, "B", 2), (3, "c", 2)], schema)
     # plain parquet FILES (not spark output dirs): the file stream
     # source lists files, it does not recurse into part-dirs
     base.toPandas().to_parquet(str(src / "f1.parquet"))
     upd.toPandas().to_parquet(str(src / "f2.parquet"))
 
-    stream = (
-        spark.readStream.schema("k long, v string, batch int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q = upsert_snapshot_sink(stream, snap, key_cols=["k"])
-    q.awaitTermination(120)
+    def stream():
+        return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(str(src))
 
-    final = {r["k"]: (r["v"]) for r in spark.read.parquet(snap).collect()}
+    sink = upsert_snapshot_sink(schema, key_cols=["k"])
+    sink.stream(stream(), snap, ckpt).awaitTermination(120)
+
+    final = {r["k"]: (r["v"]) for r in sink.read(spark, snap).collect()}
     # last-write-wins per key; both batches' keys present
     assert final[1] == "a" and final[3] == "c"
     assert final[2] in ("b", "B")  # whichever file landed second wins
@@ -134,31 +130,12 @@ def test_foreach_batch_upsert_sink(spark, tmp_path):
     # order, so f2 (updates) lands in a later batch than f1 iff two
     # batches ran; with one batch, dropDuplicates keeps one of them.
 
-    # swap never leaves a .bak behind on clean exit
-    import os
-
-    assert not os.path.isdir(snap + ".bak")
-
-    # crash recovery: simulate a crash between the two swap renames
-    # (snapshot renamed aside, new one not yet in place) — the next
-    # batch must restore from .bak instead of starting empty
-    os.rename(snap, snap + ".bak")
-    # remove the original source files: keys 1..3 can now ONLY come
-    # from the .bak restore, not from reprocessing
-    os.remove(str(src / "f1.parquet"))
-    os.remove(str(src / "f2.parquet"))
-    late = spark.createDataFrame([(4, "d", 3)], "k long, v string, batch int")
-    late.toPandas().to_parquet(str(src / "f3.parquet"))
-    stream2 = (
-        spark.readStream.schema("k long, v string, batch int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q2 = upsert_snapshot_sink(stream2, snap, key_cols=["k"], query_name="upsert2")
-    q2.awaitTermination(120)
-    recovered = {r["k"]: r["v"] for r in spark.read.parquet(snap).collect()}
-    assert recovered[4] == "d" and recovered[1] == "a" and recovered[3] == "c"
-    assert not os.path.isdir(snap + ".bak")
+    # a restart from the same checkpoint folds only the new file onto
+    # the committed state
+    spark.createDataFrame([(4, "d", 3)], schema).toPandas().to_parquet(str(src / "f3.parquet"))
+    sink.stream(stream(), snap, ckpt).awaitTermination(120)
+    later = {r["k"]: r["v"] for r in sink.read(spark, snap).collect()}
+    assert later == {**final, 4: "d"}
 
 
 def test_stream_static_enrichment_join(spark, tmp_path):

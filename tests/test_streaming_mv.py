@@ -94,15 +94,13 @@ def test_mv_apply_is_idempotent_under_replay(spark, tmp_path):
 
 
 def test_mv_view_version_pruning(spark, tmp_path):
-    from cam_location_addressing_feature_service_etl_spark.streaming.mv import (
-        _versions,
-    )
+    from cam_location_addressing_feature_service_etl_spark import store
 
     b1, _ = _signed_deltas(spark)
     view_dir = str(tmp_path / "view")
     for bid in range(5):
         apply_delta_batch(b1, bid, view_dir, retain_versions=2)
-    assert _versions(spark, view_dir) == [3, 4]
+    assert store.committed(spark, view_dir, "v=", "_SUCCESS") == ["3", "4"]
 
 
 def test_uncommitted_version_is_invisible(spark, tmp_path):

@@ -62,7 +62,7 @@ def assign_surrogate_ids(
     job-free) if the increment exceeds ``max_new_keys``. A first/bulk
     load — where EVERY key is new — must use
     :func:`assign_surrogate_ids_bulk` (identical ids, distributed
-    spill-safe numbering); ``plans/pipeline.surrogate_id_pass`` does.
+    spill-safe numbering); ``plans/pipeline.run_post_extract_pipeline`` does.
     """
     distinct_keys = keys.select(key_col).distinct()
     new_keys = distinct_keys.join(existing_map.select(key_col), key_col, "left_anti")

@@ -14,11 +14,10 @@ internal names (``schemas.PLS_TABLES``) and the export names (e.g.
 ``place_name_status_code`` → ``pl_name_status_code``) happen here, at
 the edge — internal plans keep the DDL names.
 
-Scale notes: CSV is the contract's format, so the writer keeps
-Spark's distributed ``df.write.csv`` (one file per partition;
-``single_file=True`` coalesces for small contract tables). Width
-violations are checked BEFORE export via ``TableSpec.violations`` —
-the export must never truncate silently.
+Scale notes: CSV is the contract's format, one file per table, so
+the writer coalesces each table to one partition before
+``df.write.csv``. Width violations are checked BEFORE export via
+``TableSpec.violations`` — the export must never truncate silently.
 """
 
 from __future__ import annotations
@@ -190,14 +189,10 @@ def width_violations(df: DataFrame, contract: ExportTable) -> DataFrame:
     return wide.selectExpr(f"stack({len(names)}, {stacked}) AS (rule, violations)")
 
 
-def write_export(
-    df: DataFrame,
-    contract: ExportTable,
-    out_dir: str,
-    single_file: bool = True,
-) -> str:
-    """Write one contract CSV (header, spec order). Returns the output
-    path. Raises if any width check fails — the contract forbids
+def write_export(df: DataFrame, contract: ExportTable, out_dir: str) -> str:
+    """Write one contract CSV (header, spec order) as a single file, as
+    ``definitions.json`` specifies one CSV per table. Returns the
+    output path. Raises if any width check fails — the contract forbids
     silent truncation."""
     projected = export_projection(df, contract)
     # bounded collect: width_violations is a single global agg stacked
@@ -211,6 +206,5 @@ def write_export(
         rules = ", ".join(f"{r['rule']}={r['violations']}" for r in bad)
         raise ValueError(f"{contract.csv_name}: width violations: {rules}")
     path = f"{out_dir}/{contract.csv_name}"
-    writer = projected.coalesce(1) if single_file else projected
-    writer.write.mode("overwrite").option("header", True).csv(path)
+    projected.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     return path

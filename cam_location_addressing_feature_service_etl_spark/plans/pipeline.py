@@ -1,8 +1,8 @@
 """The reference's post-extract relational pipeline (SURVEY §3.1-§3.2)
 as pure DataFrame transforms. Each stage cites the reference semantics
 it reproduces; composition mirrors ``populate_tables`` →
-``prune_addresses`` → ``update_geocode_site_id`` →
-``prune_geocodes`` → surrogate-id pass (``pls/tables.py:911-938``).
+``prune_addresses`` → the geocode site-id update + ``prune_geocodes``
+(one join here) → surrogate-id pass (``pls/tables.py:911-938``).
 
 Everything is an immutable DataFrame→DataFrame rewrite; the reference
 mutates SQLite in place with batched UPDATE/DELETE — at 100 TB the
@@ -11,8 +11,6 @@ broadcast join when the mapping side is small.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,60 +49,26 @@ def prune_addresses_without_pid_mapping(
     return lf_address.join(keys, "address_pid", "left_semi")
 
 
-def update_geocode_site_id(geocodes: DataFrame, lf_address: DataFrame) -> DataFrame:
-    """J8: the reference stages a temp mapping table then UPDATEs
-    geocode.site_id in 50k-rowid batches (``pls/tables.py:833-882``).
-    Immutable rewrite: join the address_pid→site_id mapping, coalesce
-    onto the existing column. Addresses may map one pid to one site
-    (first wins deterministically by site_id) to avoid row fan-out."""
-    mapping = (
-        lf_address.select("address_pid", "site_id")
-        .groupBy("address_pid")
-        .agg(F.min("site_id").alias("_new_site_id"))
-    )
+def enrich_geocodes(geocodes: DataFrame, addresses: DataFrame) -> DataFrame:
+    """J8 then J6: the reference UPDATEs geocode.site_id from a staged
+    ``address_pid → site_id`` mapping in 50k-rowid batches, then
+    DELETEs geocodes lacking an address (``pls/tables.py:833-908``).
+    Here one inner join with the mapping (a pid's smallest site_id, so
+    no fan-out), coalesced onto site_id, does both: the mapping's keys
+    are exactly the non-null pids the prune kept, and a null key
+    matches in neither, so ``addresses`` is evaluated once."""
+    mapping = addresses.groupBy("address_pid").agg(F.min("site_id").alias("_new_site_id"))
     return (
-        geocodes.join(mapping, "address_pid", "left")
+        geocodes.join(mapping, "address_pid")
         .withColumn("site_id", F.coalesce("site_id", "_new_site_id"))
         .drop("_new_site_id")
     )
-
-
-def prune_geocodes_without_addresses(geocodes: DataFrame, lf_address: DataFrame) -> DataFrame:
-    """J6: DELETE geocodes lacking an address (``pls/tables.py:895-908``)."""
-    keys = lf_address.select("address_pid")
-    return geocodes.join(keys, "address_pid", "left_semi")
 
 
 def upsert_iri_pid_cache(stored: DataFrame, fetched: DataFrame) -> DataFrame:
     """M1: INSERT..ON CONFLICT DO UPDATE on address_iri — last write
     (the fresh fetch) wins (``address_iri_pid_map.py:121-137``)."""
     return upsert_by_key(stored, fetched, key_cols=["address_iri"])
-
-
-@dataclass
-class SurrogateIdResult:
-    table: DataFrame
-    id_map: DataFrame
-
-
-def surrogate_id_pass(
-    table: DataFrame, existing_map: DataFrame, pk_col: str
-) -> SurrogateIdResult:
-    """M3 for one entity table: extend the carried-forward map with
-    unseen keys (stable dense ids), then rewrite the text PK to the
-    integer id (``id_map.py:8-84``; invoked for five tables at
-    ``pls/tables.py:934-938``)."""
-    # the BULK numbering: on a first run (empty carried-forward map)
-    # every key of the table is "new", so this path must be the
-    # spill-safe distributed form, not the small-increment array rank.
-    # The new keys are sorted and counted once, while the plan is
-    # built; the rewritten table and the published map each number
-    # them with a narrow projection over that result.
-    full_map = assign_surrogate_ids_bulk(
-        table.select(F.col(pk_col).alias("iri")), existing_map
-    )
-    rewritten = rewrite_pk_to_id(table, full_map, pk_col=pk_col)
-    return SurrogateIdResult(table=rewritten, id_map=full_map)
 
 
 def run_post_extract_pipeline(
@@ -115,19 +79,27 @@ def run_post_extract_pipeline(
     id_maps: dict[str, DataFrame],
     tables_to_remap: dict[str, tuple[DataFrame, str]],
 ) -> dict[str, DataFrame]:
-    """§3.1 steps 5-6 composed: prune addresses → enrich geocodes →
-    prune geocodes → surrogate ids for every entity table.
+    """§3.1 steps 5-6 composed: prune addresses → enrich and prune
+    geocodes → surrogate ids for every entity table (M3, ``id_map.py:
+    8-84``, invoked for five tables at ``pls/tables.py:934-938``).
 
     ``tables_to_remap`` maps table name → (DataFrame, pk_col);
     ``id_maps`` holds the carried-forward maps (empty DataFrames with
     (iri, id) schema on a first run).
     """
     addresses = prune_addresses_without_pid_mapping(lf_address, iri_pid_map)
-    geo = update_geocode_site_id(geocodes, addresses)
-    geo = prune_geocodes_without_addresses(geo, addresses)
-    out: dict[str, DataFrame] = {"lf_address": addresses, "lf_geocode_sp_survey_point": geo}
+    out: dict[str, DataFrame] = {
+        "lf_address": addresses,
+        "lf_geocode_sp_survey_point": enrich_geocodes(geocodes, addresses),
+    }
     for name, (df, pk_col) in tables_to_remap.items():
-        result = surrogate_id_pass(df, id_maps[name], pk_col)
-        out[name] = result.table
-        out[f"{name}_id_map"] = result.id_map
+        # the BULK numbering: on a first run (empty carried-forward map)
+        # every key of the table is "new", so this path must be the
+        # spill-safe distributed form, not the small-increment array
+        # rank. The new keys are sorted and counted once, while the plan
+        # is built; the rewritten table and the published map each
+        # number them with a narrow projection over that result.
+        id_map = assign_surrogate_ids_bulk(df.select(F.col(pk_col).alias("iri")), id_maps[name])
+        out[name] = rewrite_pk_to_id(df, id_map, pk_col=pk_col)
+        out[f"{name}_id_map"] = id_map
     return out

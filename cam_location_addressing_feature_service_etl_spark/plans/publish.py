@@ -36,8 +36,8 @@ def format_kafka_timestamp(dt: datetime) -> str:
     return dt.astimezone(timezone.utc).isoformat()
 
 
-def artifact_key(end_time: datetime, artifact_name: str = "pls.db") -> str:
-    return f"{S3_FILE_PREFIX}{format_run_timestamp(end_time)}/{artifact_name}"
+def artifact_key(end_time: datetime) -> str:
+    return f"{S3_FILE_PREFIX}{format_run_timestamp(end_time)}/pls.db"
 
 
 def build_artifact_headers(

@@ -3,10 +3,12 @@ one orchestrated DataFrame program:
 
 1. restore latest committed snapshot (carry forward state + geocodes
    with the site_id/hash reset)             main_pls.py:101-186
+   Tables are read with the schemas the snapshot recorded (no Spark
+   job); a cold run restores empty ones and takes the same path.
 2. incremental-or-full ESRI pulls, merged into carried state via
    upsert (M1/M2/M5)                        geocode.py:469-488
-3. relational post-processing: prune → update-join enrich → prune →
-   surrogate ids                            pls/tables.py:911-938
+3. relational post-processing: prune → update-join enrich + prune
+   (one join) → surrogate ids               pls/tables.py:911-938
 4. publish: metadata row, snapshot write, artifact headers, Kafka
    message row                              main_pls.py:188-218
    The snapshot's tables are written concurrently and committed
@@ -26,13 +28,14 @@ from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.upsert import upsert_by_key
 from ..sources.snapshot import (
     carry_forward_geocodes,
-    has_snapshot_table,
     latest_snapshot,
     read_snapshot_table,
+    snapshot_schemas,
     write_snapshot,
 )
 from .pipeline import run_post_extract_pipeline, upsert_iri_pid_cache
@@ -73,37 +76,31 @@ def run_etl(
     extracts for this increment; ``lf_address`` the SPARQL-derived
     address rows; ``tables_to_remap`` the entity tables needing
     surrogate ids (name → (df, pk_col))."""
-    empty_map = spark.createDataFrame([], "iri string, id long")
-    empty_pid = spark.createDataFrame([], "address_iri string, address_pid string")
-
-    # 1. restore state from the previous snapshot (if any)
+    # 1. restore the previous snapshot's state. A table its record does
+    #    not list is empty: every table on a cold run (no snapshot), an
+    #    id map until its table is first remapped. A snapshot without
+    #    the cache or the geocodes fails the run (KeyError).
     prev_ts = latest_snapshot(snapshot_root)
-    if prev_ts is not None:
-        stored_pid = read_snapshot_table(spark, snapshot_root, prev_ts, "address_iri_pid_map")
-        prev_geo = read_snapshot_table(
-            spark, snapshot_root, prev_ts, "lf_geocode_sp_survey_point"
-        )
-        carried_geo = carry_forward_geocodes(prev_geo)
-        # a table first remapped in this run has no id map yet; any
-        # other read failure must surface — an empty map would renumber
-        # every carried key
-        id_maps = {
-            name: read_snapshot_table(spark, snapshot_root, prev_ts, f"{name}_id_map")
-            if has_snapshot_table(snapshot_root, prev_ts, f"{name}_id_map")
-            else empty_map
-            for name in tables_to_remap
-        }
-    else:
-        stored_pid, carried_geo = empty_pid, None
-        id_maps = {name: empty_map for name in tables_to_remap}
+    recorded = snapshot_schemas(snapshot_root, prev_ts) if prev_ts else {}
+
+    def restore(name: str, schema: StructType | str, required: bool = True) -> DataFrame:
+        if name in recorded or (required and prev_ts):
+            return read_snapshot_table(spark, snapshot_root, prev_ts, name)
+        return spark.createDataFrame([], schema)
+
+    stored_pid = restore("address_iri_pid_map", fetched_iri_pid.schema)
+    carried_geo = carry_forward_geocodes(
+        restore("lf_geocode_sp_survey_point", fetched_geocodes.schema)
+    )
+    id_maps = {
+        name: restore(f"{name}_id_map", "iri string, id long", required=False)
+        for name in tables_to_remap
+    }
 
     # 2. merge increments into carried state (M1 cache upsert; M2
     #    geocode upsert resets enrichment on update)
     iri_pid_map = upsert_iri_pid_cache(stored_pid, fetched_iri_pid)
-    if carried_geo is not None:
-        geocodes = upsert_by_key(carried_geo, fetched_geocodes, key_cols=["geocode_id"])
-    else:
-        geocodes = fetched_geocodes
+    geocodes = upsert_by_key(carried_geo, fetched_geocodes, key_cols=["geocode_id"])
 
     # 3. relational post-processing
     out = run_post_extract_pipeline(

@@ -94,10 +94,10 @@ def normalize_geocode_features(features: DataFrame) -> DataFrame:
     )
 
 
-def normalize_geocode_type(code_iri: F.Column, known: DataFrame | None = None) -> F.Column:
+def normalize_geocode_type(code_iri: F.Column) -> F.Column:
     """F6: geocode-type IRI → ≤4-char legacy code with initialism
-    fallback (geocode.py:123-145). ``known`` map joins are done by the
-    caller; this is the fallback expression."""
+    fallback (geocode.py:123-145). A join with a map of known codes is
+    the caller's; this is the fallback expression."""
     slug = F.regexp_replace(code_iri, "^.*geocode-types/", "")
     initials = F.array_join(
         F.transform(F.split(slug, "-"), lambda w: F.substring(w, 1, 1)), ""

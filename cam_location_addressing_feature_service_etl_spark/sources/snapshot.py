@@ -4,28 +4,31 @@ The reference versions whole-database snapshots under timestamped S3
 keys and restores the *latest* by descending-lex key sort
 (``address_etl/s3.py:13-46,111-121``; restore ``main_pls.py:101-186``).
 Here a snapshot is a directory ``<root>/snapshot_ts=<ts>/<table>/``
-of parquet tables, committed by an empty ``_COMMITTED`` marker inside
-it; "latest" is the max committed timestamp (O1). Listing, commit and
-withdrawal go through ``store.py``, the one committed-version store
-the versioned folds share, so a snapshot root is any Hadoop
-FileSystem path (a local path, ``file://``, ``hdfs://``, ``s3a://``).
-Listing is O(#snapshots), not O(data). The path-only functions take
-the session from ``SparkSession.active()``.
+of parquet tables, committed by a ``_COMMITTED`` marker inside it
+that records each table's schema, so the restore reads without
+inferring one; "latest" is the max committed timestamp (O1). Listing,
+commit and withdrawal go through ``store.py``, the one
+committed-version store the versioned folds share, so a snapshot root
+is any Hadoop FileSystem path (a local path, ``file://``, ``hdfs://``,
+``s3a://``). Listing is O(#snapshots), not O(data). The path-only
+functions take the session from ``SparkSession.active()``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from .. import store
 
 _PREFIX = "snapshot_ts="
-#: empty file marking a snapshot directory complete (see write_snapshot)
+#: the file marking a snapshot directory complete (see write_snapshot)
 COMMIT_MARKER = "_COMMITTED"
 
 
@@ -40,15 +43,18 @@ def list_snapshots(root: str) -> list[str]:
     return store.committed(SparkSession.active(), root, _PREFIX, COMMIT_MARKER)
 
 
-def latest_snapshot(root: str, prefix: str = "") -> str | None:
+def latest_snapshot(root: str) -> str | None:
     """O1: latest snapshot = max timestamp (desc-lex sort + first, as in
     s3.py:37-46 — ISO-8601 timestamps sort lexicographically)."""
-    candidates = [t for t in list_snapshots(root) if t.startswith(prefix)]
-    return candidates[-1] if candidates else None
+    snapshots = list_snapshots(root)
+    return snapshots[-1] if snapshots else None
 
 
-def has_snapshot_table(root: str, ts: str, name: str) -> bool:
-    return store.exists(SparkSession.active(), os.path.join(snapshot_dir(root, ts), name))
+def snapshot_schemas(root: str, ts: str) -> dict[str, StructType]:
+    """The tables committed snapshot ``ts`` holds, name → schema, as
+    its commit marker records them."""
+    record = store.marker_content(SparkSession.active(), snapshot_dir(root, ts), COMMIT_MARKER)
+    return {name: StructType.fromJson(s) for name, s in json.loads(record or "{}").items()}
 
 
 def write_snapshot(
@@ -68,12 +74,14 @@ def write_snapshot(
     Atomicity: the job commit protocol makes each table write
     all-or-nothing (replaces the reference's periodic-commit batching,
     pls/tables.py:454-457), and the snapshot as a whole becomes visible
-    to ``list_snapshots`` only through the empty ``COMMIT_MARKER`` file
-    written into its directory after every table write succeeded. A
-    repeat call into the same ``ts`` withdraws the marker first and
-    re-commits when its own writes succeed. If any write fails, every
-    started write is waited for, no marker is written and the first
-    failure (in ``tables`` order) is raised.
+    to ``list_snapshots`` only through the ``COMMIT_MARKER`` file
+    written into its directory after every table write succeeded; its
+    content is the record ``{table: schema}`` as JSON. A repeat call
+    into the same ``ts`` withdraws the marker and re-commits the
+    record with its own tables merged in, so a table-by-table publish
+    commits every table. If any write fails, every started write is
+    waited for, no marker is written and the first failure (in
+    ``tables`` order) is raised.
 
     ``sort_specs`` (table name → sort columns) opts a table into the
     clustered layout of ``plans/compact.py``: one
@@ -92,6 +100,7 @@ def write_snapshot(
         )
     spark = SparkSession.active()
     base = snapshot_dir(root, ts)
+    record = snapshot_schemas(root, ts) if ts in list_snapshots(root) else {}
     store.withdraw(spark, base, COMMIT_MARKER)
 
     def write_table(name: str, df: DataFrame) -> None:
@@ -109,12 +118,20 @@ def write_snapshot(
         ]
     for f in futures:
         f.result()
-    store.commit(spark, base, COMMIT_MARKER)
+    record.update({name: df.schema for name, df in tables.items()})
+    content = json.dumps({name: schema.jsonValue() for name, schema in record.items()})
+    store.commit(spark, base, COMMIT_MARKER, content.encode())
     return base
 
 
 def read_snapshot_table(spark: SparkSession, root: str, ts: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(snapshot_dir(root, ts), name))
+    """Table ``name`` of committed snapshot ``ts``, read with its
+    recorded schema (made nullable, as inference does) and so without
+    a Spark job; ``KeyError`` when the record does not list it."""
+    schema = snapshot_schemas(root, ts).get(name)
+    if schema is None:
+        raise KeyError(f"snapshot {ts} under {root} holds no table {name!r}")
+    return spark.read.schema(schema).parquet(os.path.join(snapshot_dir(root, ts), name))
 
 
 def carry_forward_geocodes(prev_geocodes: DataFrame) -> DataFrame:

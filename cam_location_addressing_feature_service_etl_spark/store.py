@@ -7,7 +7,8 @@ crash, a write in flight) is never seen. Three layouts share the
 protocol:
 
 - the ETL snapshot (``sources/snapshot.py``): ``snapshot_ts=<ts>``
-  directories committed by an empty ``_COMMITTED`` marker;
+  directories committed by a ``_COMMITTED`` marker whose content is
+  the snapshot's schema record (``{table: schema}`` JSON);
 - the flat versioned fold (``streaming/versioned.py::fold_version``):
   ``v=<batch>`` directories committed by the ``_SUCCESS`` file Spark's
   job commit writes;
@@ -24,24 +25,36 @@ from __future__ import annotations
 import posixpath
 from collections.abc import Collection
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
 def filesystem(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` of ``path``, the FileSystem resolved from
     its scheme (the default FileSystem for a plain path)."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def committed(spark: SparkSession, root: str, prefix: str, marker: str) -> list[str]:
     """Names (the part after ``prefix``) of the committed versions
-    under ``root``, sorted as strings; ``[]`` for a missing root."""
-    return sorted(
-        name
-        for name, path in _versions(spark, root, prefix)
-        if exists(spark, f"{path}/{marker}")
-    )
+    under ``root``, sorted as strings; ``[]`` for a missing root. Two
+    listings answer it, whatever the number of versions: the root's
+    ``<prefix>*`` entries, then the markers inside all of them."""
+    fs, p = filesystem(spark, root)
+    while fs.exists(p):
+        try:
+            markers = _children(spark, fs, _children(spark, fs, p, f"{prefix}*"), marker)
+        except Py4JJavaError as err:  # a version pruned between the listings: list again
+            if err.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+                raise
+            continue
+        # the paths as one string: one round trip, not one per path
+        text = _jclass(spark, "scala.collection.mutable.ArraySeq").make(markers).mkString("\n")
+        names = [posixpath.basename(posixpath.dirname(m)) for m in text.split("\n") if m]
+        return sorted(n[len(prefix):] for n in names)
+    return []
 
 
 def commit(spark: SparkSession, version_dir: str, marker: str, content: bytes = b"") -> None:
@@ -67,7 +80,7 @@ def marker_content(spark: SparkSession, version_dir: str, marker: str) -> str:
     fs, p = filesystem(spark, f"{version_dir}/{marker}")
     stream = fs.open(p)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return _jclass(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -85,15 +98,11 @@ def prune(spark: SparkSession, root: str, prefix: str, keep: Collection[str]) ->
     in ``keep``, committed or not. Only the root's one writer may call
     it, after its own commit: an uncommitted directory is then a
     crashed attempt, never a write in flight."""
-    for name, path in _versions(spark, root, prefix):
-        if name not in keep:
+    for path, _ in listing(spark, root):
+        name = posixpath.basename(path)
+        if name.startswith(prefix) and name[len(prefix):] not in keep:
             fs, p = filesystem(spark, path)
             fs.delete(p, True)
-
-
-def exists(spark: SparkSession, path: str) -> bool:
-    fs, p = filesystem(spark, path)
-    return bool(fs.exists(p))
 
 
 def listing(spark: SparkSession, path: str) -> list[tuple[str, bool]]:
@@ -105,10 +114,16 @@ def listing(spark: SparkSession, path: str) -> list[tuple[str, bool]]:
     return [(str(st.getPath()), bool(st.isDirectory())) for st in fs.listStatus(p)]
 
 
-def _versions(spark: SparkSession, root: str, prefix: str) -> list[tuple[str, str]]:
-    """``(name, path)`` of every ``<root>/<prefix><name>`` entry. The
-    paths are the listing's fully qualified ones (``file:/…``): a bare
-    name would not parse as a path, since a snapshot timestamp's ``:``
-    reads as a URI scheme."""
-    entries = [(posixpath.basename(path), path) for path, _ in listing(spark, root)]
-    return [(n[len(prefix):], path) for n, path in entries if n.startswith(prefix)]
+def _children(spark: SparkSession, fs, paths, pattern: str):
+    """``Path[]`` of the children of ``paths`` (a ``Path`` or a
+    ``Path[]``) whose names match the glob ``pattern``. Paths come from
+    the listing, fully qualified: a bare snapshot name would not parse,
+    since a timestamp's ``:`` reads as a URI scheme."""
+    names = _jclass(spark, "org.apache.hadoop.fs.GlobFilter")(pattern)
+    return _jclass(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(fs.listStatus(paths, names))
+
+
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """The JVM class ``name``, resolved without the one round trip per
+    package segment that ``spark._jvm.<a>.<b>…`` attribute access costs."""
+    return JavaClass(name, spark._jvm._gateway_client)

@@ -788,12 +788,10 @@ def pipeline_prune_enrich_composite(spark: SparkSession, sf_dir: str) -> DataFra
     """The reference's post-extract composite (§3.1 steps 5-6: prune
     addresses → update-join geocode enrichment → prune geocodes),
     composed from the actual plans.pipeline stage functions and modeled
-    on testdata (orders = addresses, customers = geocodes)."""
-    from ..plans.pipeline import (
-        prune_addresses_without_pid_mapping,
-        prune_geocodes_without_addresses,
-        update_geocode_site_id,
-    )
+    on testdata (orders = addresses, customers = geocodes). The engine
+    enriches and prunes in one join (``enrich_geocodes``); the oracle
+    keeps the reference's left join then semi-join."""
+    from ..plans.pipeline import enrich_geocodes, prune_addresses_without_pid_mapping
 
     orders, customer = load_tuned(spark, sf_dir, "orders", "customer")
     lf_address = orders.select(
@@ -810,8 +808,7 @@ def pipeline_prune_enrich_composite(spark: SparkSession, sf_dir: str) -> DataFra
         F.lit(None).cast("string").alias("site_id"),
     )
     addr = prune_addresses_without_pid_mapping(lf_address, pid_map)
-    geo = update_geocode_site_id(geocodes, addr)
-    geo = prune_geocodes_without_addresses(geo, addr)
+    geo = enrich_geocodes(geocodes, addr)
     return geo.select("geocode_id", "address_pid", "site_id")
 
 

@@ -202,6 +202,10 @@ PLAN_SHAPE_MAX: dict[str, tuple[int, int, int]] = {
     # materialized new keys (was (8, 1, 0): count exchanges, prefix-sum
     # aggregate, max-id cross join, _pid window)
     "m3_stable_surrogate_ids": (2, 0, 0),
+    # enrich and prune as one inner join with the address_pid → site_id
+    # mapping: one addresses subtree, one orders scan (was (5, 0, 0):
+    # a left join for the mapping, then a semi-join on addresses again)
+    "pipeline_prune_enrich_composite": (3, 0, 0),
 }
 
 #: Queries allowed to keep a Window with an EMPTY partition spec — the

@@ -9,9 +9,8 @@ from pyspark.sql import functions as F
 
 from cam_location_addressing_feature_service_etl_spark.plans.pipeline import (
     build_addresses_with_pid,
+    enrich_geocodes,
     prune_addresses_without_pid_mapping,
-    prune_geocodes_without_addresses,
-    update_geocode_site_id,
     upsert_iri_pid_cache,
 )
 
@@ -71,14 +70,8 @@ def test_update_geocode_site_id_then_prune(spark):
     lf_address = spark.createDataFrame(
         [("addr-1", "100", "site-1")], "addr_id string, address_pid string, site_id string"
     )
-    enriched = update_geocode_site_id(geocodes, lf_address)
-    got = {r["geocode_id"]: r["site_id"] for r in enriched.collect()}
-    assert got == {"geo-1": "site-1", "geo-2": None}
-
-    pruned = prune_geocodes_without_addresses(enriched, lf_address)
-    rows = pruned.collect()
-    assert [r["geocode_id"] for r in rows] == ["geo-1"]
-    assert rows[0]["site_id"] == "site-1"
+    got = {r["geocode_id"]: r["site_id"] for r in enrich_geocodes(geocodes, lf_address).collect()}
+    assert got == {"geo-1": "site-1"}
 
 
 def test_update_join_preserves_existing_site_id(spark):
@@ -94,7 +87,7 @@ def test_update_join_preserves_existing_site_id(spark):
         [("addr-1", "100", "site-NEW")],
         "addr_id string, address_pid string, site_id string",
     )
-    got = update_geocode_site_id(geocodes, lf_address).collect()[0]
+    got = enrich_geocodes(geocodes, lf_address).collect()[0]
     assert got["site_id"] == "site-OLD"
 
 

@@ -6,15 +6,19 @@ runs, and the publish contract."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
+from cam_location_addressing_feature_service_etl_spark import store
 from cam_location_addressing_feature_service_etl_spark.plans.run import run_etl
 from cam_location_addressing_feature_service_etl_spark.sources.snapshot import (
+    COMMIT_MARKER,
     latest_snapshot,
+    read_snapshot_table,
     write_snapshot,
 )
 from tests.test_sources import active_jobs_after_events
@@ -255,15 +259,58 @@ def test_unreadable_id_map_fails_the_run(spark, tmp_path):
         run_etl(spark, snapshot_root=root, **_day2(spark))
 
 
+def test_restore_reads_recorded_schemas_without_jobs(spark, tmp_path):
+    """Every table of a committed ``run_etl`` snapshot reads back with
+    the schema its commit record holds: no Spark job, and the same
+    schema as inferring it from the files."""
+    root = str(tmp_path / "snaps")
+    day1 = _day1(spark)
+    sites = spark.createDataFrame([("site-1", "S1")], "site_id string, name string")
+    day1["tables_to_remap"]["lf_site"] = (sites, "site_id")
+    r1 = run_etl(spark, snapshot_root=root, **day1)
+    ts = latest_snapshot(root)
+    assert len(r1.tables) == 8
+
+    sc = spark.sparkContext
+    group = f"restore-{tmp_path.name}"
+    sc.setJobGroup(group, "restore")
+    try:
+        restored = {name: read_snapshot_table(spark, root, ts, name).schema for name in r1.tables}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for name, schema in restored.items():
+        assert schema == spark.read.parquet(os.path.join(r1.snapshot_path, name)).schema, name
+
+
+def test_snapshot_without_geocodes_fails_the_run(spark, tmp_path):
+    """A committed snapshot whose record does not list the geocodes
+    fails the next run, naming the table, instead of restoring none."""
+    root = str(tmp_path / "snaps")
+    r1 = run_etl(spark, snapshot_root=root, **_day1(spark))
+    record = json.loads(store.marker_content(spark, r1.snapshot_path, COMMIT_MARKER))
+    del record["lf_geocode_sp_survey_point"]
+    store.commit(spark, r1.snapshot_path, COMMIT_MARKER, json.dumps(record).encode())
+    with pytest.raises(KeyError, match="lf_geocode_sp_survey_point"):
+        run_etl(spark, snapshot_root=root, **_day2(spark))
+
+
 #: Spark jobs of one incremental ``run_etl`` (``_day1`` → ``_day2``,
-#: one remapped table), counted by job group: the restore's reads, the
-#: new-key numbering run while the plan is built, and the concurrent
-#: publish. Set to the 41 measured on this tree; re-deriving the
-#: numbering in each write that consumes the id map and range-sorting
-#: the published maps took 52. A count above the ceiling means a write
-#: started recomputing shared state again — fix the plan, don't raise
-#: the ceiling without a job profile justifying it.
-INCREMENTAL_RUN_MAX_JOBS = 41
+#: one remapped table), counted by job group: the new-key numbering run
+#: while the plan is built (8 jobs), and the concurrent publish (28).
+#: The restore runs none: it reads each table with the schema the
+#: snapshot recorded. Measured on a 4-vCPU host: 36 in each of 22 runs
+#: in one Spark session, and in this test in each of two full suite runs.
+#: Earlier shapes ran more: 41 while the restore inferred each table's
+#: schema (3 jobs) and the geocode write enriched and pruned in two
+#: joins (13 jobs, now 11); 52 while each write that consumes the id
+#: map re-derived the numbering and the published maps were
+#: range-sorted. A count above the ceiling means a write started
+#: recomputing shared state again — fix the plan, don't raise the
+#: ceiling without a job profile justifying it.
+INCREMENTAL_RUN_MAX_JOBS = 36
 
 
 def test_incremental_run_job_ceiling(spark, tmp_path):

@@ -150,6 +150,33 @@ def test_failed_publish_is_not_a_snapshot(spark, tmp_path):
     write_snapshot({"t": ok}, root, ts, sort_specs={"t": ["k"]})
     assert latest_snapshot(root) == ts
     assert read_snapshot_table(spark, root, ts, "t").count() == 50
+    assert read_snapshot_table(spark, root, ts, "a").count() == 50  # the second call kept it
+
+
+def test_snapshot_pruned_mid_listing_reads_as_absent(spark, tmp_path, monkeypatch):
+    """A snapshot deleted between the root listing and the marker
+    listing is left out of the result instead of failing the listing."""
+    import shutil
+
+    from cam_location_addressing_feature_service_etl_spark import store
+
+    root = str(tmp_path)
+    stamps = ["2026-04-20T02:00:00+1000", "2026-04-21T02:00:00+1000", "2026-04-22T02:00:00+1000"]
+    for ts in stamps:
+        write_snapshot({"t": spark.range(1)}, root, ts)
+    listings = []
+    children = store._children
+
+    def prune_after_root_listing(spark_, fs, paths, pattern):
+        listings.append(pattern)
+        out = children(spark_, fs, paths, pattern)
+        if len(listings) == 1:
+            shutil.rmtree(snapshot_dir(root, stamps[0]))
+        return out
+
+    monkeypatch.setattr(store, "_children", prune_after_root_listing)
+    assert list_snapshots(root) == stamps[1:]
+    assert len(listings) == 4  # the first marker listing failed and both were taken again
 
 
 def test_publish_jobs_carry_table_label_and_caller_group(spark, tmp_path):

@@ -20,14 +20,19 @@ Scale: the incremental numbering ranks ONLY the *new* keys of one
 increment (small by definition in an incremental ETL) on a single
 reducer — via the windowless sorted-array rank of ``operators/topk``,
 which does not spill. ``assign_surrogate_ids_bulk`` is the
-corpus-sized path: range-partition and sort the new keys, read the
-per-partition counts on the driver (one row per partition), and number
-each row in one narrow projection from its partition's offset and its
-position within the partition — the numbering itself needs no window,
-exchange or join.
+corpus-sized path, and numbers the new keys of every table it is given
+in ONE pass: tag each key with its table, range-partition and sort the
+new keys on ``(table, key)``, read the per-``(partition, table)``
+counts and every carried ``max(id)`` on the driver in one read (one
+row each), and number each table's rows in one narrow projection from
+its partition's offset and its position within the partition — the
+numbering itself needs no window, exchange or join, and the number of
+Spark jobs does not grow with the number of tables.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -108,51 +113,95 @@ def assign_surrogate_ids(
     return existing_map.select(key_col, "id").unionByName(numbered)
 
 
-def assign_surrogate_ids_bulk(
-    keys: DataFrame, existing_map: DataFrame, key_col: str = "iri"
-) -> DataFrame:
-    """Bulk variant: same contract as ``assign_surrogate_ids`` but the
-    new-key numbering is distributed (no single-partition window).
+#: the column tagging each key with its table in the bulk numbering
+_TABLE = "_table"
 
-    Two-phase: range-partition and sort the new keys, read each
-    partition's row count and the carried ``max(id)`` on the driver,
-    then number every key in one narrow projection:
-    ``start + offset[partition] + position within partition + 1``.
-    Deterministic because range partitioning + in-partition sort give a
-    total order by key.
+
+def _union(frames) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def assign_surrogate_ids_bulk(
+    keys: dict[str, DataFrame], existing_maps: dict[str, DataFrame], key_col: str = "iri"
+) -> dict[str, DataFrame]:
+    """Bulk variant over several tables at once: for every table name
+    of ``keys``, the same map ``assign_surrogate_ids(keys[name],
+    existing_maps[name])`` returns, with the new-key numbering
+    distributed (no single-partition window) and shared by all tables.
+
+    One pass: tag each key with its table, range-partition and sort the
+    new keys on ``(table, key)`` and materialize them once; one driver
+    read returns each ``(partition, table)``'s row count and each
+    carried map's ``max(id)``; then each table numbers its keys in one
+    narrow projection, ``start + offset[partition] + position within
+    the partition's rows of that table + 1``. Deterministic because
+    range partitioning + in-partition sort give a total order by
+    ``(table, key)``. A key in two tables is numbered in each,
+    independently. Adding a table adds no Spark job.
+
+    EAGER: the sort and the driver read run here, so a caller that
+    must not block on them (``run_post_extract_pipeline``) defers the
+    call.
     """
-    # Materialize the range-partitioned sort ONCE: the counts and the
-    # numbering both read it, and cutting lineage makes each row's
+    names = list(keys)
+    carried = _union(
+        existing_maps[n].select(F.lit(t).alias(_TABLE), key_col, "id") for t, n in enumerate(names)
+    )
+    # a key is new when no carried row shares its (table, key): one
+    # aggregate over the keys and the carried maps together, not an
+    # anti-join, which the optimizer would split into one join (and
+    # one broadcast job) per table
+    tagged = _union(
+        [keys[n].select(F.lit(t).alias(_TABLE), key_col, F.lit(False).alias("_c"))
+         for t, n in enumerate(names)]
+        + [carried.select(_TABLE, key_col, F.lit(True).alias("_c"))]
+    )
+    # Materialize the range-partitioned sort ONCE: the counts and every
+    # table's numbering read it, and cutting lineage makes each row's
     # partition and in-partition position fixed. Under AQE the sort's
-    # shuffle stages already run here, while the plan is built, so the
-    # two driver reads below only scan the materialized frame and the
-    # carried map.
+    # shuffle stages already run here, while the plan is built.
     new_keys = (
-        keys.select(key_col)
-        .distinct()
-        .join(existing_map.select(key_col), key_col, "left_anti")
-        .repartitionByRange(F.col(key_col))
-        .sortWithinPartitions(key_col)
+        tagged.groupBy(_TABLE, key_col)
+        .agg(F.bool_or("_c").alias("_c"))
+        .filter(~F.col("_c"))
+        .select(_TABLE, key_col)
+        .repartitionByRange(_TABLE, key_col)
+        .sortWithinPartitions(_TABLE, key_col)
         .transform(materialize)
     )
     pid = F.spark_partition_id()
-    counts = dict(new_keys.groupBy(pid).count().collect())
-    start = existing_map.agg(F.max("id")).first()[0] or 0
-    # the id just before each partition's first, indexed by partition
-    # id; an empty range partition gets a slot that no row reads
-    bases = []
-    for p in range(max(counts, default=-1) + 1):
-        bases.append(start)
-        start += counts.get(p, 0)
+    # one driver read of one aggregate: each (partition, table)'s row
+    # count, and each table's carried max(id) under partition -1
+    stats = new_keys.select(pid.alias("p"), _TABLE, F.lit(None).cast("long").alias("id"))
+    stats = stats.unionByName(carried.select(F.lit(-1).alias("p"), _TABLE, "id"))
+    start, count = {}, {}
+    for p, t, n, top in stats.groupBy("p", _TABLE).agg(F.count("*"), F.max("id")).collect():
+        if p < 0:
+            start[t] = top or 0
+        else:
+            count[(t, p)] = n
+    n_parts = max((p for _, p in count), default=-1) + 1
     # position within the partition: monotonically_increasing_id puts
     # the partition id in the upper 31 bits and the record number in
-    # the lower 33 — only the record number is used, never the id
+    # the lower 33 — only the record number is used, never the id. It
+    # counts the rows reaching the projection, so behind the table
+    # filter it is the position among that table's rows.
     position = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
-    numbered = new_keys.select(
-        key_col,
-        (F.lit(bases).cast("array<bigint>")[pid] + position + 1).alias("id"),
-    )
-    return existing_map.select(key_col, "id").unionByName(numbered)
+    out = {}
+    for t, name in enumerate(names):
+        # the id just before the table's first row in each partition,
+        # indexed by partition id; a partition holding none of the
+        # table's rows gets a slot that no row reads
+        bases, base = [], start.get(t, 0)
+        for p in range(n_parts):
+            bases.append(base)
+            base += count.get((t, p), 0)
+        numbered = new_keys.filter(F.col(_TABLE) == t).select(
+            key_col,
+            (F.lit(bases).cast("array<bigint>")[pid] + position + 1).alias("id"),
+        )
+        out[name] = existing_maps[name].select(key_col, "id").unionByName(numbered)
+    return out
 
 
 def new_key_filter(table: DataFrame, existing_map: DataFrame, pk_col: str, key_col: str = "iri") -> DataFrame:

@@ -12,11 +12,17 @@ broadcast join when the mapping side is small.
 
 from __future__ import annotations
 
+import threading
+from typing import Callable, TypeVar
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.id_map import assign_surrogate_ids_bulk, rewrite_pk_to_id
 from ..operators.upsert import upsert_by_key
+
+T = TypeVar("T")
 
 
 def build_addresses_with_pid(
@@ -78,7 +84,7 @@ def run_post_extract_pipeline(
     iri_pid_map: DataFrame,
     id_maps: dict[str, DataFrame],
     tables_to_remap: dict[str, tuple[DataFrame, str]],
-) -> dict[str, DataFrame]:
+) -> dict[str, DataFrame | Callable[[], DataFrame]]:
     """§3.1 steps 5-6 composed: prune addresses → enrich and prune
     geocodes → surrogate ids for every entity table (M3, ``id_map.py:
     8-84``, invoked for five tables at ``pls/tables.py:934-938``).
@@ -86,20 +92,68 @@ def run_post_extract_pipeline(
     ``tables_to_remap`` maps table name → (DataFrame, pk_col);
     ``id_maps`` holds the carried-forward maps (empty DataFrames with
     (iri, id) schema on a first run).
+
+    The addresses and geocodes come back as DataFrames, built without
+    a Spark job. Each remapped table and its ``<name>_id_map`` come back
+    as a zero-argument callable returning the DataFrame: all of them
+    share ONE bulk numbering pass over every table's new keys, which
+    runs Spark jobs, so it waits until a callable is first called —
+    once, under a lock, on whichever thread asks first (the others
+    wait for it), with its jobs described ``number``. ``write_snapshot``
+    calls each inside that table's publish thread, so the writes that
+    need no id map start at once and run beside the numbering.
     """
     addresses = prune_addresses_without_pid_mapping(lf_address, iri_pid_map)
-    out: dict[str, DataFrame] = {
+    out: dict[str, DataFrame | Callable[[], DataFrame]] = {
         "lf_address": addresses,
         "lf_geocode_sp_survey_point": enrich_geocodes(geocodes, addresses),
     }
+    # the BULK numbering: on a first run (empty carried-forward map)
+    # every key of a table is "new", so this must be the spill-safe
+    # distributed form, not the small-increment array rank
+    numbered = _once(
+        lf_address.sparkSession.sparkContext,
+        lambda: assign_surrogate_ids_bulk(
+            {name: df.select(F.col(pk).alias("iri")) for name, (df, pk) in tables_to_remap.items()},
+            id_maps,
+        ),
+    )
+
+    def remapped(name: str, df: DataFrame, pk_col: str):
+        def id_map() -> DataFrame:
+            return numbered()[name]
+
+        def table() -> DataFrame:
+            return rewrite_pk_to_id(df, id_map(), pk_col=pk_col)
+
+        return table, id_map
+
     for name, (df, pk_col) in tables_to_remap.items():
-        # the BULK numbering: on a first run (empty carried-forward map)
-        # every key of the table is "new", so this path must be the
-        # spill-safe distributed form, not the small-increment array
-        # rank. The new keys are sorted and counted once, while the plan
-        # is built; the rewritten table and the published map each
-        # number them with a narrow projection over that result.
-        id_map = assign_surrogate_ids_bulk(df.select(F.col(pk_col).alias("iri")), id_maps[name])
-        out[name] = rewrite_pk_to_id(df, id_map, pk_col=pk_col)
-        out[f"{name}_id_map"] = id_map
+        out[name], out[f"{name}_id_map"] = remapped(name, df, pk_col)
     return out
+
+
+def _once(sc: SparkContext, compute: Callable[[], T]) -> Callable[[], T]:
+    """``compute``, run at most once, on the first thread to call the
+    returned function, with its Spark jobs described ``number``; every
+    call returns its result or raises its error."""
+    lock = threading.Lock()
+    done: list = []
+
+    def get() -> T:
+        with lock:
+            if not done:
+                desc = sc.getLocalProperty("spark.job.description")
+                sc.setLocalProperty("spark.job.description", "number")
+                try:
+                    done.append((compute(), None))
+                except Exception as exc:  # noqa: BLE001 - re-raised to every caller
+                    done.append((None, exc))
+                finally:
+                    sc.setLocalProperty("spark.job.description", desc)
+        result, error = done[0]
+        if error is not None:
+            raise error
+        return result
+
+    return get

@@ -21,6 +21,7 @@ from datetime import datetime, timezone
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 BRISBANE = ZoneInfo("Australia/Brisbane")
 S3_FILE_PREFIX = "pls-etl/"
@@ -63,16 +64,19 @@ def build_artifact_headers(
 
 
 def metadata_df(spark: SparkSession, start_time: datetime, end_time: datetime | None) -> DataFrame:
-    """M6: the singleton metadata row (CHECK id = 1)."""
-    return spark.createDataFrame(
-        [
-            (
-                1,
-                format_run_timestamp(start_time),
-                format_run_timestamp(end_time) if end_time else None,
-            )
-        ],
-        "id long, start_time string, end_time string",
+    """M6: the singleton metadata row (CHECK id = 1), built in the JVM
+    as one projection of a one-row range, so writing it starts no
+    Python worker. Each value is a CASE without ELSE on the range's row,
+    which keeps every column nullable, as the table has always been
+    written."""
+    row = F.col("id") == 0
+    values = [
+        ("id", "long", 1),
+        ("start_time", "string", format_run_timestamp(start_time)),
+        ("end_time", "string", format_run_timestamp(end_time) if end_time else None),
+    ]
+    return spark.range(1, numPartitions=1).select(
+        *(F.when(row, F.lit(v)).cast(t).alias(name) for name, t, v in values)
     )
 
 

@@ -9,10 +9,16 @@ one orchestrated DataFrame program:
    upsert (M1/M2/M5)                        geocode.py:469-488
 3. relational post-processing: prune → update-join enrich + prune
    (one join) → surrogate ids               pls/tables.py:911-938
+   Planned only: no Spark job runs before step 4. The surrogate-id
+   numbering (one pass for every remapped table) is deferred into
+   step 4, where the first remapped table's or id map's publish thread
+   runs it (jobs described ``number``).
 4. publish: metadata row, snapshot write, artifact headers, Kafka
    message row                              main_pls.py:188-218
    The snapshot's tables are written concurrently and committed
-   together: a publish that fails part-way raises and leaves no
+   together: the writes that need no id map (addresses, geocodes,
+   cache, metadata) start at once, beside the numbering. A publish
+   that fails part-way, numbering included, raises and leaves no
    snapshot the next run's step 1 would restore.
 
 The distributed-lock (S12) and presign (S9) edges stay with the
@@ -120,6 +126,9 @@ def run_etl(
     #    sampling job, a range exchange and a sort to each write.
     snap_ts = format_run_timestamp(end_time)
     snapshot_path = write_snapshot(out, snapshot_root, snap_ts)
+    # the remapped tables and id maps are callables over the numbering
+    # the publish already ran: resolving them runs no job
+    tables = {name: t() if callable(t) else t for name, t in out.items()}
     key = artifact_key(end_time)
     headers = build_artifact_headers(
         etl_started_at=start_time,
@@ -132,7 +141,7 @@ def run_etl(
     )
     message = kafka_message_df(spark, presigned_url or f"s3://{s3_bucket}/{key}", headers)
     return RunResult(
-        tables=out,
+        tables=tables,
         snapshot_path=snapshot_path,
         s3_key=key,
         headers=headers,

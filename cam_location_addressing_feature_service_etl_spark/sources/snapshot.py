@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,7 +59,7 @@ def snapshot_schemas(root: str, ts: str) -> dict[str, StructType]:
 
 
 def write_snapshot(
-    tables: dict[str, DataFrame],
+    tables: dict[str, DataFrame | Callable[[], DataFrame]],
     root: str,
     ts: str,
     sort_specs: dict[str, list[str]] | None = None,
@@ -69,7 +70,12 @@ def write_snapshot(
     one per table, so Spark's scheduler runs their jobs side by side
     instead of paying each job's fixed latency in turn. Each thread
     inherits the caller's job group and labels its jobs
-    ``publish <table>`` (``spark.job.description``).
+    ``publish <table>`` (``spark.job.description``). A table's value
+    may be a zero-argument callable returning its DataFrame: it is
+    called inside that table's thread, so work it does before the
+    write (``run_post_extract_pipeline``'s shared numbering) runs
+    beside the other tables' writes instead of ahead of them; a
+    callable that raises fails the publish like a failed write.
 
     Atomicity: the job commit protocol makes each table write
     all-or-nothing (replaces the reference's periodic-commit batching,
@@ -103,22 +109,23 @@ def write_snapshot(
     record = snapshot_schemas(root, ts) if ts in list_snapshots(root) else {}
     store.withdraw(spark, base, COMMIT_MARKER)
 
-    def write_table(name: str, df: DataFrame) -> None:
-        sc = df.sparkSession.sparkContext
+    sc = spark.sparkContext
+
+    def write_table(name: str, table: DataFrame | Callable[[], DataFrame]) -> StructType:
         sc.setLocalProperty("spark.job.description", f"publish {name}")
+        df = table() if callable(table) else table
         cols = (sort_specs or {}).get(name)
         if cols:
             df = df.repartitionByRange(sc.defaultParallelism, *cols).sortWithinPartitions(*cols)
         df.write.mode("overwrite").parquet(os.path.join(base, name))
+        return df.schema
 
     with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(df.sparkSession)(write_table), name, df)
-            for name, df in tables.items()
-        ]
-    for f in futures:
-        f.result()
-    record.update({name: df.schema for name, df in tables.items()})
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write_table), name, table)
+            for name, table in tables.items()
+        }
+    record.update({name: f.result() for name, f in futures.items()})
     content = json.dumps({name: schema.jsonValue() for name, schema in record.items()})
     store.commit(spark, base, COMMIT_MARKER, content.encode())
     return base

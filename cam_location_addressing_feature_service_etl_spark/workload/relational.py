@@ -28,10 +28,11 @@ Reference semantics being reproduced (file:line into /root/reference):
 Scale notes: all small dimension sides are explicitly ``broadcast()``;
 grouped-max is a partial-aggregatable ``max`` (map-side combine);
 window-based latest-row shuffles once on the partition key; the
-surrogate-id assignment (``assign_surrogate_ids_bulk``) range-sorts
-the (small) new-keys set once, reads its per-partition counts and the
-carried max(id) on the driver, and numbers every new key in one narrow
-projection — dense and stable, with no single-partition window.
+surrogate-id assignment (``assign_surrogate_ids_bulk``, here over one
+table) range-sorts the (small) new-keys set once, reads its
+per-partition counts and the carried max(id) on the driver in one
+read, and numbers every new key in one narrow projection — dense and
+stable, with no single-partition window.
 """
 
 from __future__ import annotations
@@ -749,7 +750,7 @@ def m3_stable_surrogate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["iri"],
         rank_name="id",
     )
-    full_map = assign_surrogate_ids_bulk(iris.select("iri"), seeded, key_col="iri")
+    full_map = assign_surrogate_ids_bulk({"part": iris.select("iri")}, {"part": seeded})["part"]
     return iris.join(full_map, "iri").select(
         F.col("id").alias("part_id"), F.col("p_name").alias("part_name")
     )

@@ -1,7 +1,8 @@
 """Mirrors the reference's surrogate-id tests (``tests/test_id_map.py``
 in /root/reference): empty-map and pre-seeded scenarios, dense stable
 ids, rewrite postcondition, and the NOT IN (iri UNION id) tolerance.
-Also proves the distributed bulk numbering variant is equivalent."""
+Also proves the distributed bulk numbering variant, which numbers
+several tables in one pass, is equivalent table by table."""
 
 from __future__ import annotations
 
@@ -95,11 +96,14 @@ BULK_SETTINGS = [
 
 
 def test_bulk_variant_matches_simple(spark, monkeypatch):
-    """The bulk numbering equals the single-reducer reference on every
-    input and whatever the partitioning or materialize mode: a seeded
-    map, an empty map (every key new), no new keys, and a few thousand
-    skewed keys (one hot key repeated, the carried map covering one
-    dense block) — each also over a layout with empty partitions."""
+    """The bulk numbering equals the single-reducer reference for every
+    table it numbers, whatever the partitioning or materialize mode:
+    a seeded map, an empty map (every key new) over the SAME keys (so
+    one key sits in two tables and must be numbered in each
+    independently), a table with no new keys, and a few thousand skewed
+    keys (one hot key repeated, the carried map covering one dense
+    block) — all four in one call, and each alone, each also over a
+    layout with empty partitions."""
     seeded = spark.createDataFrame(
         [(PARCEL_IRIS[0], 1), (PARCEL_IRIS[1], 2)], "iri string, id long"
     )
@@ -113,25 +117,35 @@ def test_bulk_variant_matches_simple(spark, monkeypatch):
         "no_new_keys": (PARCEL_IRIS[:2] * 3, seeded),
         "skewed": (skewed, carried),
     }
+    keys = {
+        name: spark.createDataFrame([(i,) for i in iris], "iri string")
+        for name, (iris, _) in cases.items()
+    }
+    maps = {name: existing for name, (_, existing) in cases.items()}
+    simple = {
+        name: sorted(assign_surrogate_ids(keys[name], maps[name]).collect()) for name in cases
+    }
+    calls = [list(cases)] + [[name] for name in cases]
     conf = spark.conf
     saved = {k: conf.get(k) for k in (
         "spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled"
     )}
     try:
-        for name, (iris, existing) in cases.items():
-            keys = spark.createDataFrame([(i,) for i in iris], "iri string")
-            simple = sorted(assign_surrogate_ids(keys, existing).collect())
-            for parts, coalesce, mode, layout in BULK_SETTINGS:
-                conf.set("spark.sql.shuffle.partitions", parts)
-                conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
-                monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
-                if layout is not None:
-                    monkeypatch.setattr(
-                        id_map, "materialize", lambda df: materialize(layout(df))
-                    )
-                bulk = sorted(assign_surrogate_ids_bulk(keys, existing).collect())
-                monkeypatch.undo()
-                assert bulk == simple, (name, parts, mode, layout)
+        for parts, coalesce, mode, layout in BULK_SETTINGS:
+            conf.set("spark.sql.shuffle.partitions", parts)
+            conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+            monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
+            if layout is not None:
+                monkeypatch.setattr(id_map, "materialize", lambda df: materialize(layout(df)))
+            for names in calls:
+                bulk = assign_surrogate_ids_bulk(
+                    {n: keys[n] for n in names}, {n: maps[n] for n in names}
+                )
+                assert list(bulk) == names
+                for name in names:
+                    got = sorted(bulk[name].collect())
+                    assert got == simple[name], (name, names, parts, mode, layout)
+            monkeypatch.undo()
     finally:
         for k, v in saved.items():
             conf.set(k, v)

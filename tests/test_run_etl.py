@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+from collections import Counter
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -298,38 +299,104 @@ def test_snapshot_without_geocodes_fails_the_run(spark, tmp_path):
 
 
 #: Spark jobs of one incremental ``run_etl`` (``_day1`` → ``_day2``,
-#: one remapped table), counted by job group: the new-key numbering run
-#: while the plan is built (8 jobs), and the concurrent publish (28).
-#: The restore runs none: it reads each table with the schema the
-#: snapshot recorded. Measured on a 4-vCPU host: 36 in each of 22 runs
-#: in one Spark session, and in this test in each of two full suite runs.
-#: Earlier shapes ran more: 41 while the restore inferred each table's
-#: schema (3 jobs) and the geocode write enriched and pruned in two
-#: joins (13 jobs, now 11); 52 while each write that consumes the id
-#: map re-derived the numbering and the published maps were
-#: range-sorted. A count above the ceiling means a write started
-#: recomputing shared state again — fix the plan, don't raise the
-#: ceiling without a job profile justifying it.
-INCREMENTAL_RUN_MAX_JOBS = 36
+#: one remapped table), counted by job group: every one runs inside the
+#: concurrent publish — 28 table-write jobs (``publish <table>``) and
+#: the 5 of the shared new-key numbering (``number``), which the first
+#: remapped table's publish thread runs. The restore runs none: it reads
+#: each table with the schema the snapshot recorded. Measured on a
+#: 4-vCPU host: 33 in each of 22 runs in one Spark session (numbering 5
+#: in each). Earlier shapes ran more: 36 while the numbering ran before
+#: the publish with a separate count and max(id) read (8 jobs per
+#: remapped table); 41 while the restore inferred each table's schema
+#: (3 jobs) and the geocode write enriched and pruned in two joins (13
+#: jobs, now 11); 52 while each write that consumes the id map
+#: re-derived the numbering and the published maps were range-sorted.
+#: A count above the ceiling means a write started recomputing shared
+#: state again — fix the plan, don't raise the ceiling without a job
+#: profile justifying it.
+INCREMENTAL_RUN_MAX_JOBS = 33
+
+#: Spark jobs of the one numbering pass (label ``number``) whatever the
+#: number of remapped tables: 5 with one, two and five tables alike
+#: (materialize the sorted new keys: 3; one driver read: 2). Numbering
+#: each table on its own ran 8 per table, 40 for the reference's five.
+NUMBERING_MAX_JOBS = 5
 
 
-def test_incremental_run_job_ceiling(spark, tmp_path):
-    """An incremental run stays within its pinned Spark job count."""
-    root = str(tmp_path / "snaps")
-    run_etl(spark, snapshot_root=root, **_day1(spark))
-    day2 = _day2(spark)
+def _run_job_labels(spark, group: str, **kwargs) -> Counter:
+    """Run ``run_etl`` in job group ``group``; its jobs counted by
+    description."""
     sc = spark.sparkContext
-    group = f"incremental-run-{tmp_path.name}"
-    sc.setJobGroup(group, "incremental run_etl")
+    sc.setJobGroup(group, "run_etl")
     try:
-        run_etl(spark, snapshot_root=root, **day2)
+        run_etl(spark, **kwargs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= INCREMENTAL_RUN_MAX_JOBS, (
-        f"an incremental run_etl ran {len(jobs)} Spark jobs, over the "
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    labels = Counter()
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            labels[job.description().get() if job.description().isDefined() else None] += 1
+    return labels
+
+
+def _only_publish_and_number(labels: Counter, tables: list[str]) -> None:
+    allowed = {"number", *(f"publish {t}" for t in tables)}
+    assert set(labels) <= allowed, f"jobs outside the publish: {set(labels) - allowed}"
+
+
+def test_incremental_run_job_ceiling(spark, tmp_path):
+    """An incremental run stays within its pinned Spark job count, and
+    every job runs inside the publish: a table's write or the shared
+    numbering."""
+    root = str(tmp_path / "snaps")
+    r1 = run_etl(spark, snapshot_root=root, **_day1(spark))
+    labels = _run_job_labels(
+        spark, f"incremental-run-{tmp_path.name}", snapshot_root=root, **_day2(spark)
+    )
+    _only_publish_and_number(labels, list(r1.tables))
+    jobs = sum(labels.values())
+    assert jobs <= INCREMENTAL_RUN_MAX_JOBS, (
+        f"an incremental run_etl ran {jobs} Spark jobs ({dict(labels)}), over the "
         f"pinned ceiling of {INCREMENTAL_RUN_MAX_JOBS}"
     )
+    assert labels["number"] <= NUMBERING_MAX_JOBS, dict(labels)
 
+
+#: the reference's five remapped entity tables (pls/tables.py:934-938)
+FIVE_TABLES = ("lf_locality", "lf_road", "lf_parcel", "lf_site", "lf_place_name")
+
+
+def _remap_five(spark, day: int) -> dict[str, tuple]:
+    """Five entity tables for day ``day``: two keys each, one of them
+    new on day 2, and the same key text in every table."""
+    second = "key-B" if day == 1 else "key-C"
+    return {
+        t: (spark.createDataFrame([("key-A", t), (second, t)], "pk string, name string"), "pk")
+        for t in FIVE_TABLES
+    }
+
+
+def test_five_remapped_tables_number_in_one_pass(spark, tmp_path):
+    """With the reference's five remapped tables the numbering runs no
+    more jobs than with one: the new keys of every table are numbered
+    in one pass. Each table's ids are its own (the same key text gets
+    an id in every table), and every job runs inside the publish."""
+    root = str(tmp_path / "snaps")
+    day1 = {**_day1(spark), "tables_to_remap": _remap_five(spark, 1)}
+    r1 = run_etl(spark, snapshot_root=root, **day1)
+    for t in FIVE_TABLES:
+        assert _id_map(r1, t) == {"key-A": 1, "key-B": 2}
+    day2 = {**_day2(spark), "tables_to_remap": _remap_five(spark, 2)}
+    labels = _run_job_labels(spark, f"five-tables-{tmp_path.name}", snapshot_root=root, **day2)
+    _only_publish_and_number(labels, list(r1.tables))
+    assert labels["number"] <= NUMBERING_MAX_JOBS, dict(labels)
+    ts = latest_snapshot(root)
+    for t in FIVE_TABLES:
+        ids = {r["iri"]: r["id"] for r in read_snapshot_table(spark, root, ts, f"{t}_id_map").collect()}
+        assert ids == {"key-A": 1, "key-B": 2, "key-C": 3}, t
+        published = read_snapshot_table(spark, root, ts, t).collect()
+        assert sorted(r["pk"] for r in published) == [1, 3], t

@@ -16,6 +16,7 @@ from cam_location_addressing_feature_service_etl_spark.sources.esri import (
     resolve_layer_schema,
 )
 from cam_location_addressing_feature_service_etl_spark.sources.snapshot import (
+    COMMIT_MARKER,
     carry_forward_geocodes,
     latest_snapshot,
     list_snapshots,
@@ -132,7 +133,8 @@ def test_failed_publish_is_not_a_snapshot(spark, tmp_path):
     """One table failing at execution, next to healthy ones: the error
     is raised after every write has finished, and the partial
     directory is never listed, so the previous snapshot stays latest.
-    A repeat publish into the same ts then commits it."""
+    The same holds for a table given as a callable that raises. A
+    repeat publish into the same ts then commits it."""
     root = str(tmp_path)
     ok = spark.range(50).withColumnRenamed("id", "k")
     write_snapshot({"t": ok}, root, "2026-04-22T02:00:00+1000")
@@ -143,6 +145,17 @@ def test_failed_publish_is_not_a_snapshot(spark, tmp_path):
     assert active_jobs_after_events(spark) == []
     assert os.path.isdir(snapshot_dir(root, ts))  # the partial write is there...
     assert list_snapshots(root) == ["2026-04-22T02:00:00+1000"]  # ...but not listed
+    assert latest_snapshot(root) == "2026-04-22T02:00:00+1000"
+
+    # a table given as a callable that raises, as a failed numbering
+    # does, fails the publish the same way
+    def failed_numbering():
+        raise RuntimeError("numbering boom")
+
+    with pytest.raises(RuntimeError, match="numbering boom"):
+        write_snapshot({"a": ok, "ids": failed_numbering, "t": lambda: ok}, root, ts)
+    assert active_jobs_after_events(spark) == []
+    assert not os.path.exists(os.path.join(snapshot_dir(root, ts), COMMIT_MARKER))
     assert latest_snapshot(root) == "2026-04-22T02:00:00+1000"
 
     # one table per call into the same ts, as a table-by-table replay does

@@ -4,7 +4,8 @@ one orchestrated DataFrame program:
 1. restore latest committed snapshot (carry forward state + geocodes
    with the site_id/hash reset)             main_pls.py:101-186
    Tables are read with the schemas the snapshot recorded (no Spark
-   job); a cold run restores empty ones and takes the same path.
+   job; the record is read once for every table); a cold run restores
+   empty ones and takes the same path.
 2. incremental-or-full ESRI pulls, merged into carried state via
    upsert (M1/M2/M5)                        geocode.py:469-488
 3. relational post-processing: prune → update-join enrich + prune
@@ -91,7 +92,7 @@ def run_etl(
 
     def restore(name: str, schema: StructType | str, required: bool = True) -> DataFrame:
         if name in recorded or (required and prev_ts):
-            return read_snapshot_table(spark, snapshot_root, prev_ts, name)
+            return read_snapshot_table(spark, snapshot_root, prev_ts, name, recorded=recorded)
         return spark.createDataFrame([], schema)
 
     stored_pid = restore("address_iri_pid_map", fetched_iri_pid.schema)

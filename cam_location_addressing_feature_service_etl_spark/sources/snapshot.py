@@ -131,11 +131,25 @@ def write_snapshot(
     return base
 
 
-def read_snapshot_table(spark: SparkSession, root: str, ts: str, name: str) -> DataFrame:
+def read_snapshot_table(
+    spark: SparkSession,
+    root: str,
+    ts: str,
+    name: str,
+    *,
+    recorded: dict[str, StructType] | None = None,
+) -> DataFrame:
     """Table ``name`` of committed snapshot ``ts``, read with its
     recorded schema (made nullable, as inference does) and so without
-    a Spark job; ``KeyError`` when the record does not list it."""
-    schema = snapshot_schemas(root, ts).get(name)
+    a Spark job; ``KeyError`` when the record does not list it.
+
+    ``recorded`` is the snapshot's record as ``snapshot_schemas``
+    returned it: a caller restoring several tables passes it so the
+    commit marker is opened once, not once per table (on an object
+    store each open is a round trip before the first job)."""
+    if recorded is None:
+        recorded = snapshot_schemas(root, ts)
+    schema = recorded.get(name)
     if schema is None:
         raise KeyError(f"snapshot {ts} under {root} holds no table {name!r}")
     return spark.read.schema(schema).parquet(os.path.join(snapshot_dir(root, ts), name))

@@ -11,7 +11,11 @@ For each run it prints one JSON line: the wall time, the Spark job
 count, and per job description (``publish <table>``, ``number``) the
 first job's start, the last job's end (both in seconds from the run's
 start), the job count and the tasks' summed executor run time, all
-taken from the Spark event log.
+taken from the Spark event log. It also holds what the run cost the
+driver JVM, as deltas over the run: ``codegen_compiles`` (generated
+classes compiled by Janino, ``CodegenMetrics``), ``jit_compile_s``
+(``CompilationMXBean`` total compilation time) and ``classes_loaded``
+(``ClassLoadingMXBean`` total loaded classes).
 
 Usage: python scripts/etl_scale_probe.py --sf 0.01 [--runs 4] [--seed 7] [--work DIR]
 
@@ -93,6 +97,18 @@ def job_events(log_dir: str, group: str) -> list[dict]:
     return list(jobs.values())
 
 
+def jvm_counters(spark) -> dict:
+    """Cumulative compile and class-loading counters of the driver JVM."""
+    jvm = spark._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    mx = jvm.java.lang.management.ManagementFactory
+    return {
+        "codegen_compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+        "jit_compile_s": mx.getCompilationMXBean().getTotalCompilationTime() / 1000,
+        "classes_loaded": mx.getClassLoadingMXBean().getTotalLoadedClassCount(),
+    }
+
+
 def record(kind: str, i: int, wall_s: float, t0_ms: float, jobs: list[dict]) -> dict:
     labels: dict[str, dict] = {}
     for job in jobs:
@@ -159,6 +175,7 @@ def main(argv=None) -> int:
             kwargs = run_kwargs(spark, os.path.join(work, "inputs", day), start)
             group = f"etl-scale-probe-{i}"
             sc.setJobGroup(group, kind)
+            before = jvm_counters(spark)
             t0 = time.time()
             try:
                 result = run_etl(spark, snapshot_root=root, **kwargs)
@@ -166,9 +183,10 @@ def main(argv=None) -> int:
                 wall = time.time() - t0
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
+            jvm = {k: round(v - before[k], 3) for k, v in jvm_counters(spark).items()}
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             rec = record(kind, i, wall, t0 * 1000, job_events(log_dir, group))
-            print(json.dumps({"sf": args.sf, "addresses": addresses, **rec}), flush=True)
+            print(json.dumps({"sf": args.sf, "addresses": addresses, **rec, **jvm}), flush=True)
             if base is None:
                 base = result.snapshot_path
             else:

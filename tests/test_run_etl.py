@@ -286,6 +286,25 @@ def test_restore_reads_recorded_schemas_without_jobs(spark, tmp_path):
         assert schema == spark.read.parquet(os.path.join(r1.snapshot_path, name)).schema, name
 
 
+def test_restore_reads_commit_record_once(spark, tmp_path, monkeypatch):
+    """An incremental run opens the restored snapshot's commit marker
+    once for all of its tables; a cold run, which has no snapshot and
+    publishes into a new one, opens none."""
+    calls = []
+    marker_content = store.marker_content
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return marker_content(*args, **kwargs)
+
+    monkeypatch.setattr(store, "marker_content", spy)
+    root = str(tmp_path / "snaps")
+    run_etl(spark, snapshot_root=root, **_day1(spark))
+    assert len(calls) == 0
+    run_etl(spark, snapshot_root=root, **_day2(spark))
+    assert len(calls) == 1
+
+
 def test_snapshot_without_geocodes_fails_the_run(spark, tmp_path):
     """A committed snapshot whose record does not list the geocodes
     fails the next run, naming the table, instead of restoring none."""

@@ -35,15 +35,14 @@ def merge_asof(
     right_ts: str,
     right_seq: str,
     payload: list[str],
-    prefix: str = "asof_",
 ) -> DataFrame:
     """Left as-of join: every ``left`` row, enriched with ``payload``
     columns from the latest ``right`` row at or before ``left_ts``
     (ties on ``right_ts`` broken by highest ``right_seq``); NULLs when
     no right row precedes.
 
-    Output columns: all of ``left``'s, then ``{prefix}ts`` (the
-    matched right timestamp) and one ``{prefix}<c>`` per payload col.
+    Output columns: all of ``left``'s, then ``asof_ts`` (the matched
+    right timestamp) and one ``asof_<c>`` per payload col.
     """
     pay_struct = F.struct(
         F.col(right_ts).alias("ts"), *[F.col(c).alias(c) for c in payload]
@@ -82,8 +81,8 @@ def merge_asof(
         .filter(F.col("_side") == 1)
     )
     out = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    out.append(F.col("_last.ts").alias(f"{prefix}ts"))
-    out.extend(F.col(f"_last.{c}").alias(f"{prefix}{c}") for c in payload)
+    out.append(F.col("_last.ts").alias("asof_ts"))
+    out.extend(F.col(f"_last.{c}").alias(f"asof_{c}") for c in payload)
     return matched.select(*out)
 
 
@@ -95,7 +94,6 @@ def merge_asof_salted(
     right_ts: str,
     right_seq: str,
     payload: list[str],
-    prefix: str = "asof_",
     bucket_ms: int = 3_600_000,
 ) -> DataFrame:
     """Skew-hardened ``merge_asof``: identical output, but the window
@@ -182,6 +180,6 @@ def merge_asof_salted(
         .filter(F.col("_side") == 1)
     )
     out = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    out.append(F.col("_last.ts").alias(f"{prefix}ts"))
-    out.extend(F.col(f"_last.{c}").alias(f"{prefix}{c}") for c in payload)
+    out.append(F.col("_last.ts").alias("asof_ts"))
+    out.extend(F.col(f"_last.{c}").alias(f"asof_{c}") for c in payload)
     return matched.select(*out)

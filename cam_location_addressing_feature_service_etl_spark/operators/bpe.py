@@ -41,37 +41,35 @@ JOIN_CH = "_"
 def bpe_merge_rules(
     tokens: DataFrame,
     rounds: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Run ``rounds`` merge rounds over ``tokens`` (columns: id_col,
+    """Run ``rounds`` merge rounds over ``tokens`` (columns: ``doc_id``,
     ``pos`` long, ``tok`` string; pos need only be ordered, not dense)
     and return the learned rules: (round, pair_a, pair_b, pair_count).
     """
-    rules, _ = bpe_rounds_seqs(_collect_seqs(tokens, id_col), rounds, id_col)
+    rules, _ = bpe_rounds_seqs(_collect_seqs(tokens), rounds)
     return rules
 
 
 def bpe_apply(
     tokens: DataFrame,
     rounds: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The ENCODE side of BPE: the token stream after ``rounds``
     greedy-left merge rounds (rules re-learned from the same corpus —
     train→apply as one deterministic pipeline). Returns (id, pos, tok)
     with pos renumbered dense per doc."""
-    _, seqs = bpe_rounds_seqs(_collect_seqs(tokens, id_col), rounds, id_col)
+    _, seqs = bpe_rounds_seqs(_collect_seqs(tokens), rounds)
     return seqs.select(
-        F.col(id_col), F.posexplode("toks").alias("pos", "tok")
-    ).select(id_col, (F.col("pos") + 1).alias("pos"), "tok")
+        F.col("doc_id"), F.posexplode("toks").alias("pos", "tok")
+    ).select("doc_id", (F.col("pos") + 1).alias("pos"), "tok")
 
 
-def _collect_seqs(tokens: DataFrame, id_col: str) -> DataFrame:
+def _collect_seqs(tokens: DataFrame) -> DataFrame:
     """Collapse exploded ``(id, pos, tok)`` rows to one pos-ordered
     ``toks`` array per document (compat shim for exploded-input
     callers; array-native callers skip straight to
     :func:`bpe_rounds_seqs`)."""
-    return tokens.groupBy(id_col).agg(
+    return tokens.groupBy("doc_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "tok"))),
             lambda s: s["tok"],
@@ -82,15 +80,11 @@ def _collect_seqs(tokens: DataFrame, id_col: str) -> DataFrame:
 def bpe_rounds_seqs(
     seqs: DataFrame,
     rounds: int,
-    id_col: str = "doc_id",
-    seq_col: str = "toks",
 ) -> tuple[DataFrame, DataFrame]:
-    """Array-native BPE rounds over ``(id_col, seq_col array<string>)``.
+    """Array-native BPE rounds over ``(doc_id, toks array<string>)``.
     Returns ``(rules, final_seqs)`` where rules = (merge_round, pair_a,
     pair_b, pair_count) and final_seqs keeps the input shape."""
-    expl = seqs.select(F.col(id_col), F.col(seq_col).alias("toks")).transform(
-        materialize
-    )
+    expl = seqs.select("doc_id", "toks").transform(materialize)
     rules = None
     for r in range(1, rounds + 1):
         # adjacent pairs map-side: zip the array with itself shifted by
@@ -136,7 +130,7 @@ def bpe_rounds_seqs(
             expl.join(
                 F.broadcast(top.select("pair_a", "pair_b")), F.lit(True), "left"
             )
-            .select(F.col(id_col), _merge_fold().alias("toks"))
+            .select(F.col("doc_id"), _merge_fold().alias("toks"))
             .transform(materialize)
         )
     return rules, expl

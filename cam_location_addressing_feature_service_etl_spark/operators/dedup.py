@@ -573,7 +573,6 @@ def near_dup_edges(
     text_col: str,
     threshold: float,
     shingle_n: int = 3,
-    prefix_gain: float = NEAR_DUP_PREFIX_GAIN,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs with a MEASURED choice of pair
     stage — the edge source the CC/canonical dedup family uses.
@@ -610,7 +609,7 @@ def near_dup_edges(
        boilerplate EXCEEDS the 1−τ prefix fraction must keep hot
        shingles inside their prefixes, so prefix would pay its
        recount for no candidate reduction. Prefix runs only when it
-       wins by ``prefix_gain``×.
+       wins by ``NEAR_DUP_PREFIX_GAIN``×.
 
     Each stage is one bounded scalar action (the convergence-check
     pattern). At 100 TB the df profile is a metadata-scale statistic
@@ -661,23 +660,19 @@ def near_dup_edges(
         F.sum("df").alias("full"),
         F.sum(F.when(F.col("rn") <= plen, F.col("df"))).alias("pre"),
     ).collect()[0]
-    if st2["pre"] is not None and st2["pre"] * prefix_gain <= st2["full"]:
+    if st2["pre"] is not None and st2["pre"] * NEAR_DUP_PREFIX_GAIN <= st2["full"]:
         return _nj_pairs_prefix(sh, ranked, id_col, threshold)
     return _nj_pairs_naive(sh, id_col, threshold)
 
 
-def connected_components(
-    edges: DataFrame,
-    iterations: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def connected_components(edges: DataFrame, iterations: int) -> DataFrame:
     """Fixed-iteration min-label propagation over an undirected edge
-    set: each node's label starts as itself and each round becomes the
-    minimum of its own and its neighbors' labels. After ``iterations``
-    rounds the label is the component minimum for every node within
-    that graph distance of its component's minimum — the dedup-cluster
-    representative (union-find, but set-based and distributed).
+    set ``(id_a, id_b)``: each node's label starts as itself and each
+    round becomes the minimum of its own and its neighbors' labels.
+    After ``iterations`` rounds the label is the component minimum for
+    every node within that graph distance of its component's minimum —
+    the dedup-cluster representative (union-find, but set-based and
+    distributed).
 
     Determinism: the result after exactly N rounds is a pure function
     of the edge set, so a fixed N yields an oracle-checkable result
@@ -698,7 +693,7 @@ def connected_components(
     # Jaccard candidate+verify pipeline) is replicated into each of
     # those plan branches and recomputed per branch. Measured at
     # sf0.1: full query 12.6s → 3.7s from this one line.
-    e = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).transform(materialize)
+    e = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).transform(materialize)
 
     # Single-partition fast path for SMALL edge sets (r17 — the
     # connected_components_star discipline, see _STAR_LOCAL_MAX): a
@@ -768,14 +763,14 @@ def connected_components(
 #: anyway, so the gate costs no extra pass over the data.
 _STAR_LOCAL_MAX = 131072
 
+#: star rounds before connected_components_star gives up; convergence
+#: is O(log n) rounds, so 25 is ample for any real graph
+_STAR_MAX_ROUNDS = 25
 
-def connected_components_star(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 25,
-) -> DataFrame:
-    """Connected components via LARGE-STAR / SMALL-STAR alternation
+
+def connected_components_star(edges: DataFrame) -> DataFrame:
+    """Connected components of the edge set ``(id_a, id_b)`` via
+    LARGE-STAR / SMALL-STAR alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     the O(log n)-round scale path that ``connected_components``'s
     docstring promises for 100 TB graphs, run to convergence.
@@ -803,11 +798,10 @@ def connected_components_star(
     materialize inside the next check's action either way, so each
     skipped check is one fewer blocking scheduler round-trip.
 
-    Raises ``RuntimeError`` if ``max_rounds`` is exhausted before the
-    fixed point: callers (and the recursive-CTE parity oracle) assume
-    converged labels, so returning a non-converged edge set would be
-    silently wrong — a node could carry conflicting labels. O(log n)
-    convergence makes the default 25 rounds ample for any real graph.
+    Raises ``RuntimeError`` if ``_STAR_MAX_ROUNDS`` is exhausted before
+    the fixed point: callers (and the recursive-CTE parity oracle)
+    assume converged labels, so returning a non-converged edge set
+    would be silently wrong — a node could carry conflicting labels.
 
     Returns (node, label) for every node incident to an edge, label =
     component minimum — identical to converged min-label propagation.
@@ -821,7 +815,7 @@ def connected_components_star(
         )
 
     e = canon(
-        edges.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     ).transform(materialize)
 
     # Single-partition fast path for SMALL edge sets (r17; guide §2.4
@@ -875,7 +869,7 @@ def connected_components_star(
 
     wu = Window.partitionBy("u")
     converged = False
-    for rnd in range(1, max_rounds + 1):
+    for rnd in range(1, _STAR_MAX_ROUNDS + 1):
         # LARGE-STAR: every strictly-larger neighbor of u re-attaches
         # to u's neighborhood minimum (including u itself). The
         # neighborhood minimum is a partition-wide window min — ONE
@@ -912,16 +906,16 @@ def connected_components_star(
             .transform(materialize)
         )
         e = small
-        # check schedule: {2, 3, 5, 7, ...} ∪ {max_rounds}
-        if rnd == 2 or (rnd >= 3 and rnd % 2 == 1) or rnd == max_rounds:
+        # check schedule: {2, 3, 5, 7, ...} ∪ {_STAR_MAX_ROUNDS}
+        if rnd == 2 or (rnd >= 3 and rnd % 2 == 1) or rnd == _STAR_MAX_ROUNDS:
             if non_flat_count(e) == 0:
                 converged = True
                 break
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not reach a fixed point in "
-            f"{max_rounds} rounds; labels would be unreliable — raise "
-            f"max_rounds (convergence is O(log n) rounds)"
+            f"{_STAR_MAX_ROUNDS} rounds; labels would be unreliable — raise "
+            f"_STAR_MAX_ROUNDS (convergence is O(log n) rounds)"
         )
     # converged stars: u -> component minimum; centers label themselves
     return e.select(F.col("u").alias("node"), F.col("v").alias("label")).unionByName(

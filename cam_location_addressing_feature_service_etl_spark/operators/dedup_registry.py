@@ -131,6 +131,8 @@ DEDUP_REGISTRY_SCHEMA = (
 )
 DEDUP_POSTINGS_SCHEMA = "doc_id bigint, sh string"
 DEDUP_DFREQ_SCHEMA = "sh string, df bigint"
+#: the batch's document id and text columns
+_ID_COL, _TEXT_COL = "doc_id", "text"
 
 #: broadcast the batch-derived probe/lookup frames only while they are
 #: measurably bounded (rows; ~32-byte md5 keys ⇒ ≲ 150 MB at the cap).
@@ -166,7 +168,6 @@ def _fold_pairs_prefix(
     sz_a: DataFrame,
     sz_b: DataFrame,
     threshold: float,
-    id_col: str,
     bcast_batch: bool,
 ) -> DataFrame:
     """ONE-SIDED prefix probe + exact verify — the fold's pair stage in
@@ -179,12 +180,12 @@ def _fold_pairs_prefix(
     index is STREAMED, never shuffled: shuffle volume is the collision
     output, ∝ the batch's rare-shingle collisions."""
     a = ranked.filter(F.col("_rn") <= plen).select(
-        F.col(id_col).alias("id_a"), "sh"
+        F.col(_ID_COL).alias("id_a"), "sh"
     )
     pall = postings.unionByName(bp)
     cand = (
         _maybe_bcast(a, bcast_batch)
-        .join(pall.select(F.col(id_col).alias("id_b"), "sh"), "sh")
+        .join(pall.select(F.col(_ID_COL).alias("id_b"), "sh"), "sh")
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
             F.least(F.col("id_a"), F.col("id_b")).alias("id_a"),
@@ -215,8 +216,8 @@ def _fold_pairs_prefix(
     # in-memory form (the partitioned layout prunes it to the
     # endpoints' doc-hash buckets), the shuffle is not.
     ep_b = candf.select("id_b").distinct()
-    pa = pall.select(F.col(id_col).alias("id_a"), "sh")
-    pb = pall.select(F.col(id_col).alias("id_b"), "sh").join(
+    pa = pall.select(F.col(_ID_COL).alias("id_a"), "sh")
+    pb = pall.select(F.col(_ID_COL).alias("id_b"), "sh").join(
         _maybe_bcast(ep_b, small), "id_b", "leftsemi"
     )
     return (
@@ -233,7 +234,6 @@ def _fold_pairs_naive(
     sz_a: DataFrame,
     sz_b: DataFrame,
     threshold: float,
-    id_col: str,
     bcast_batch: bool,
 ) -> DataFrame:
     """Naive count-join probe: collision counts ARE the exact
@@ -242,15 +242,15 @@ def _fold_pairs_naive(
     the broadcast build (measured-count gated): the accumulated index
     is streamed map-side, and the only shuffle is the per-pair
     partial-aggregated collision count."""
-    a = bp.select(F.col(id_col).alias("id_a"), "sh")
+    a = bp.select(F.col(_ID_COL).alias("id_a"), "sh")
     cross = (
         _maybe_bcast(a, bcast_batch)
-        .join(postings.select(F.col(id_col).alias("id_b"), "sh"), "sh")
+        .join(postings.select(F.col(_ID_COL).alias("id_b"), "sh"), "sh")
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     within = (
-        a.join(bp.select(F.col(id_col).alias("id_b"), "sh"), "sh")
+        a.join(bp.select(F.col(_ID_COL).alias("id_b"), "sh"), "sh")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
@@ -275,8 +275,6 @@ def dedup_fold_increment(
     batch: DataFrame,
     threshold: float = 0.5,
     shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dfreq: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fold one batch of ``(doc_id, text)`` documents into the standing
@@ -308,21 +306,21 @@ def dedup_fold_increment(
 
     # --- new documents only (re-ingest is identity) -------------------
     new_docs = (
-        batch.dropDuplicates([id_col])
-        .join(registry.select(id_col), id_col, "left_anti")
-        .select(id_col, text_col)
+        batch.dropDuplicates([_ID_COL])
+        .join(registry.select(_ID_COL), _ID_COL, "left_anti")
+        .select(_ID_COL, _TEXT_COL)
     )
     toks = new_docs.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
+        F.col(_ID_COL), tokens_col(F.col(_TEXT_COL)).alias("_toks")
     ).transform(materialize)
     # batch postings, shingles md5-keyed; feeds the cross probe, the
     # self join, the size aggregate and the postings output. Built
     # from the ALREADY-materialized token arrays — shingle_postings
     # would re-tokenize the batch a second time for the same frame
     bp = toks.select(
-        F.col(id_col),
+        F.col(_ID_COL),
         F.explode(shingles_col(F.col("_toks"), shingle_n)).alias("shingle"),
-    ).select(F.col(id_col), F.md5(F.col("shingle")).alias("sh")).transform(
+    ).select(F.col(_ID_COL), F.md5(F.col("shingle")).alias("sh")).transform(
         materialize
     )
     # ONE bounded scalar sizes every batch-side broadcast decision
@@ -330,14 +328,14 @@ def dedup_fold_increment(
     # is a cache read, not a recompute
     n_bp = bp.count()
     bcast_batch = n_bp <= _FOLD_BCAST_MAX
-    bsizes = bp.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    bsizes = bp.groupBy(_ID_COL).agg(F.count(F.lit(1)).alias("n_sh"))
     new_rows = (
         toks.select(
-            F.col(id_col), F.size("_toks").cast("long").alias("n_tokens")
+            F.col(_ID_COL), F.size("_toks").cast("long").alias("n_tokens")
         )
-        .join(bsizes, id_col, "left")
+        .join(bsizes, _ID_COL, "left")
         .select(
-            id_col,
+            _ID_COL,
             "n_tokens",
             F.coalesce(F.col("n_sh"), F.lit(0)).cast("long").alias("n_sh"),
         )
@@ -425,12 +423,12 @@ def dedup_fold_increment(
     plen = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
     if scr["coll"] is not None:
         if scr["hot"] is not None and scr["hot"] * 2.0 >= scr["coll"]:
-            wrank = Window.partitionBy(id_col).orderBy("_df", "sh")
-            wsz = Window.partitionBy(id_col)
+            wrank = Window.partitionBy(_ID_COL).orderBy("_df", "sh")
+            wsz = Window.partitionBy(_ID_COL)
             ranked = (
                 bp.join(_maybe_bcast(merged_b, bcast_batch), "sh")
                 .select(
-                    id_col,
+                    _ID_COL,
                     "sh",
                     F.row_number().over(wrank).alias("_rn"),
                     F.count(F.lit(1)).over(wsz).alias("_sz"),
@@ -444,19 +442,19 @@ def dedup_fold_increment(
             use_prefix = (
                 st["pre"] is not None and st["pre"] * 4.0 <= scr["full"]
             )
-    sizes = registry.select(F.col(id_col), "n_sh").unionByName(
-        new_rows.select(id_col, "n_sh")
+    sizes = registry.select(F.col(_ID_COL), "n_sh").unionByName(
+        new_rows.select(_ID_COL, "n_sh")
     )
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("sz_b"))
+    sz_a = sizes.select(F.col(_ID_COL).alias("id_a"), F.col("n_sh").alias("sz_a"))
+    sz_b = sizes.select(F.col(_ID_COL).alias("id_b"), F.col("n_sh").alias("sz_b"))
     if use_prefix:
         scored = _fold_pairs_prefix(
-            postings, bp, ranked, plen, sz_a, sz_b, threshold, id_col,
+            postings, bp, ranked, plen, sz_a, sz_b, threshold,
             bcast_batch,
         )
     else:
         scored = _fold_pairs_naive(
-            postings, bp, sz_a, sz_b, threshold, id_col, bcast_batch
+            postings, bp, sz_a, sz_b, threshold, bcast_batch
         )
     edges = (
         scored.filter(
@@ -478,11 +476,11 @@ def dedup_fold_increment(
     # label, old docs read the registry. The corpus-sized label frame
     # is only ever joined against the bounded edge set (AQE broadcasts
     # the small side from its runtime size), never shuffled by key.
-    labels_now = registry.select(id_col, "label").unionByName(
-        new_rows.select(id_col, F.col(id_col).alias("label"))
+    labels_now = registry.select(_ID_COL, "label").unionByName(
+        new_rows.select(_ID_COL, F.col(_ID_COL).alias("label"))
     )
-    la = labels_now.select(F.col(id_col).alias("id_a"), F.col("label").alias("la"))
-    lb = labels_now.select(F.col(id_col).alias("id_b"), F.col("label").alias("lb"))
+    la = labels_now.select(F.col(_ID_COL).alias("id_a"), F.col("label").alias("la"))
+    lb = labels_now.select(F.col(_ID_COL).alias("id_b"), F.col("label").alias("lb"))
     lbl_edges = (
         edges.join(la, "id_a")
         .join(lb, "id_b")
@@ -505,7 +503,7 @@ def dedup_fold_increment(
     # corpus-wide label frame (the r14 fold attached new labels to
     # every doc, then semi-joined — a ∝-corpus join per fold).
     new_final = (
-        new_rows.select(F.col(id_col).alias("label"))
+        new_rows.select(F.col(_ID_COL).alias("label"))
         .join(
             _maybe_bcast(relabel, small_rel),
             F.col("label") == F.col("old_lbl"),
@@ -533,7 +531,7 @@ def dedup_fold_increment(
     # (broadcast semi on the bounded touched-label set) and re-mapped
     # through the re-label; plus every new doc under its final label
     member_old = (
-        registry.select(id_col, "n_tokens", "n_sh", "label")
+        registry.select(_ID_COL, "n_tokens", "n_sh", "label")
         .join(_maybe_bcast(touched_old, small_t), "label", "leftsemi")
         .join(
             _maybe_bcast(relabel, small_rel),
@@ -541,7 +539,7 @@ def dedup_fold_increment(
             "left",
         )
         .select(
-            id_col,
+            _ID_COL,
             "n_tokens",
             "n_sh",
             F.coalesce("new_lbl", "label").alias("label"),
@@ -550,24 +548,24 @@ def dedup_fold_increment(
     member_new = (
         new_rows.join(
             _maybe_bcast(relabel, small_rel),
-            new_rows[id_col] == F.col("old_lbl"),
+            new_rows[_ID_COL] == F.col("old_lbl"),
             "left",
         )
         .select(
-            id_col,
+            _ID_COL,
             "n_tokens",
             "n_sh",
-            F.coalesce(F.col("new_lbl"), F.col(id_col)).alias("label"),
+            F.coalesce(F.col("new_lbl"), F.col(_ID_COL)).alias("label"),
         )
     )
     doc_rows = member_old.unionByName(member_new)
-    w = Window.partitionBy("label").orderBy(F.desc("n_tokens"), F.asc(id_col))
+    w = Window.partitionBy("label").orderBy(F.desc("n_tokens"), F.asc(_ID_COL))
     recomputed = doc_rows.select(
-        id_col,
+        _ID_COL,
         "n_tokens",
         "n_sh",
         "label",
-        F.first(id_col).over(
+        F.first(_ID_COL).over(
             w.rowsBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
@@ -579,10 +577,10 @@ def dedup_fold_increment(
     # anti-join streams the registry against the bounded touched set.
     untouched = registry.join(
         _maybe_bcast(touched_old, small_t), "label", "left_anti"
-    ).select(id_col, "n_tokens", "n_sh", "label", "canonical_id", "kept")
+    ).select(_ID_COL, "n_tokens", "n_sh", "label", "canonical_id", "kept")
     new_registry = untouched.unionByName(
         recomputed.select(
-            id_col, "n_tokens", "n_sh", "label", "canonical_id", "kept"
+            _ID_COL, "n_tokens", "n_sh", "label", "canonical_id", "kept"
         )
     )
     new_postings = postings.unionByName(bp)

@@ -35,6 +35,8 @@ from ..runtime import materialize
 
 #: fixed-point scale for embedding components.
 MICRO = 1_000_000
+#: the vector id column every index and search operator reads
+_ID_COL = "vec_id"
 
 
 def micro_array(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -141,13 +143,13 @@ def power_iteration(gram: DataFrame, rounds: int) -> DataFrame:
     return v
 
 
-def pca_project(x: DataFrame, v: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def pca_project(x: DataFrame, v: DataFrame) -> DataFrame:
     """Projection of each micro-unit vector onto the (micro-unit)
     dominant direction: proj = Σ_i x[i]·v[i], exact BIGINT. One
     broadcast join + aggregate — map-side combinable, no wide shuffle."""
     return (
         x.join(F.broadcast(v), "pos")
-        .groupBy(id_col)
+        .groupBy(_ID_COL)
         .agg(F.sum(F.col("xi") * F.col("vi")).cast("long").alias("proj"))
     )
 
@@ -156,7 +158,6 @@ def pq_codes(
     x: DataFrame,
     codebook_ids: int,
     sub_dims: int,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Product-quantization code assignment with an exact integer
     metric: dims are split into ``d/sub_dims`` subspaces; the vectors
@@ -170,25 +171,25 @@ def pq_codes(
     window functions. The codebook side is broadcast (m·k·sub_dims
     rows). Returns (id, subspace, code, dist_sq)."""
     xs = x.select(
-        id_col,
+        _ID_COL,
         ((F.col("pos") - 1) / sub_dims).cast("long").alias("subspace"),
         "pos",
         "xi",
     )
     cb = (
-        xs.filter(F.col(id_col) < codebook_ids)
-        .select(F.col(id_col).alias("code"), "subspace", "pos", F.col("xi").alias("ci"))
+        xs.filter(F.col(_ID_COL) < codebook_ids)
+        .select(F.col(_ID_COL).alias("code"), "subspace", "pos", F.col("xi").alias("ci"))
     )
     diff = xs.join(F.broadcast(cb), ["subspace", "pos"])
     per_code = (
-        diff.groupBy(id_col, "subspace", "code")
+        diff.groupBy(_ID_COL, "subspace", "code")
         .agg(F.sum((F.col("xi") - F.col("ci")) * (F.col("xi") - F.col("ci"))).alias("dist_sq"))
     )
     best = (
-        per_code.groupBy(id_col, "subspace")
+        per_code.groupBy(_ID_COL, "subspace")
         .agg(F.min(F.struct("dist_sq", "code")).alias("best"))
         .select(
-            id_col,
+            _ID_COL,
             "subspace",
             F.col("best.code").alias("code"),
             F.col("best.dist_sq").alias("dist_sq"),
@@ -202,7 +203,6 @@ def ivfpq_index(
     n_cells: int,
     codebook_ids: int,
     sub_dims: int,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ index build — the FAISS-style composite: a coarse
     quantizer assigns each vector to its nearest cell, then the
@@ -223,7 +223,7 @@ def ivfpq_index(
     shuffles are the two partial-aggregatable groupBys of the PQ
     argmin, exactly as :func:`pq_codes`. Returns
     (id, centroid_id, subspace, code, dist_sq)."""
-    _, _, codes = _ivfpq_parts(xs, n_cells, codebook_ids, sub_dims, id_col)
+    _, _, codes = _ivfpq_parts(xs, n_cells, codebook_ids, sub_dims)
     return codes
 
 
@@ -238,7 +238,7 @@ def _sq_l2(a: Column, b: Column) -> Column:
 
 
 def _assign_and_explode(
-    members: DataFrame, cents: DataFrame, sub_dims: int, id_col: str
+    members: DataFrame, cents: DataFrame, sub_dims: int
 ) -> DataFrame:
     """Cell assignment + residual explosion shared by the bulk build
     and the incremental add path — ONE definition of the broadcast
@@ -247,28 +247,28 @@ def _assign_and_explode(
     add-equals-rebuild bit-identity the incremental oracle depends
     on. Returns (id, centroid_id, pos, subspace, ri)."""
     scored = members.crossJoin(F.broadcast(cents)).select(
-        id_col, "centroid_id", _sq_l2(F.col("xs"), F.col("cs")).alias("d")
+        _ID_COL, "centroid_id", _sq_l2(F.col("xs"), F.col("cs")).alias("d")
     )
     assigned = (
-        scored.groupBy(id_col)
+        scored.groupBy(_ID_COL)
         .agg(F.min(F.struct("d", "centroid_id")).alias("b"))
-        .select(id_col, F.col("b.centroid_id").alias("centroid_id"))
+        .select(_ID_COL, F.col("b.centroid_id").alias("centroid_id"))
     )
     resid = (
-        members.join(assigned, id_col)
+        members.join(assigned, _ID_COL)
         .join(F.broadcast(cents), "centroid_id")
         .select(
-            id_col,
+            _ID_COL,
             "centroid_id",
             F.zip_with("xs", "cs", lambda a, b: a - b).alias("rs"),
         )
     )
     return resid.select(
-        id_col,
+        _ID_COL,
         "centroid_id",
         F.posexplode("rs").alias("pos0", "ri"),
     ).select(
-        id_col,
+        _ID_COL,
         "centroid_id",
         (F.col("pos0") + 1).alias("pos"),
         (F.col("pos0") / sub_dims).cast("long").alias("subspace"),
@@ -281,32 +281,31 @@ def _ivfpq_parts(
     n_cells: int,
     codebook_ids: int,
     sub_dims: int,
-    id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared IVF-PQ build pieces: returns ``(cents, cb, codes)`` —
     cell centroids (centroid_id, cs), the residual codebook
     (code, subspace, pos, bi), and the code table
     (id, centroid_id, subspace, code, dist_sq). :func:`ivfpq_index`
     returns ``codes``; :func:`ivfpq_adc_search` consumes all three."""
-    cents = xs.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("centroid_id"), F.col("xs").alias("cs")
+    cents = xs.filter(F.col(_ID_COL) < n_cells).select(
+        F.col(_ID_COL).alias("centroid_id"), F.col("xs").alias("cs")
     )
-    members = xs.filter(F.col(id_col) >= n_cells)
+    members = xs.filter(F.col(_ID_COL) >= n_cells)
     # materialized: the residual-component frame feeds BOTH the
     # codebook slice and the code-assignment join, and Spark replans
     # the whole corpus-scale assign+explode subtree per consumer
     # (2 scans + 2 broadcast argmins without the checkpoint). The
     # frame is members×dims rows — the same exploded micro-unit shape
     # the workload already checkpoints for ``xs``.
-    rcomp = materialize(_assign_and_explode(members, cents, sub_dims, id_col))
-    cb = rcomp.filter(F.col(id_col) < n_cells + codebook_ids).select(
-        F.col(id_col).alias("code"), "subspace", "pos", F.col("ri").alias("bi")
+    rcomp = materialize(_assign_and_explode(members, cents, sub_dims))
+    cb = rcomp.filter(F.col(_ID_COL) < n_cells + codebook_ids).select(
+        F.col(_ID_COL).alias("code"), "subspace", "pos", F.col("ri").alias("bi")
     )
-    codes = _argmin_codes(rcomp, cb, id_col)
+    codes = _argmin_codes(rcomp, cb)
     return cents, cb, codes
 
 
-def _argmin_codes(rcomp: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
+def _argmin_codes(rcomp: DataFrame, cb: DataFrame) -> DataFrame:
     """PQ code assignment over exploded residual components: broadcast
     codebook join, per-(id, subspace, code) exact distance sum, then
     the lexicographic struct-MIN argmin — two partial-aggregatable
@@ -314,14 +313,14 @@ def _argmin_codes(rcomp: DataFrame, cb: DataFrame, id_col: str) -> DataFrame:
     encode so the two paths cannot drift."""
     per = (
         rcomp.join(F.broadcast(cb), ["subspace", "pos"])
-        .groupBy(id_col, "centroid_id", "subspace", "code")
+        .groupBy(_ID_COL, "centroid_id", "subspace", "code")
         .agg(F.sum((F.col("ri") - F.col("bi")) * (F.col("ri") - F.col("bi"))).alias("dist_sq"))
     )
     return (
-        per.groupBy(id_col, "centroid_id", "subspace")
+        per.groupBy(_ID_COL, "centroid_id", "subspace")
         .agg(F.min(F.struct("dist_sq", "code")).alias("b"))
         .select(
-            id_col,
+            _ID_COL,
             "centroid_id",
             "subspace",
             F.col("b.code").alias("code"),
@@ -335,7 +334,6 @@ def ivfpq_encode_increment(
     cents: DataFrame,
     cb: DataFrame,
     sub_dims: int,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Incremental index maintenance — the FAISS ``add()`` path: encode
     NEW vectors against a FROZEN index (cells + residual codebook from
@@ -352,8 +350,8 @@ def ivfpq_encode_increment(
     oracle-checked (its oracle IS the full-rebuild SQL). At 100 TB
     this is the difference between encoding a day's new embeddings
     (one broadcast pass) and re-clustering the corpus."""
-    rcomp = _assign_and_explode(new_xs, cents, sub_dims, id_col)
-    return _argmin_codes(rcomp, cb, id_col)
+    rcomp = _assign_and_explode(new_xs, cents, sub_dims)
+    return _argmin_codes(rcomp, cb)
 
 
 def ivfpq_adc_search(
@@ -364,7 +362,6 @@ def ivfpq_adc_search(
     sub_dims: int,
     k: int,
     nprobe: int,
-    id_col: str = "vec_id",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """ADC (asymmetric-distance) search over the IVF-PQ index — the
@@ -389,8 +386,8 @@ def ivfpq_adc_search(
     ``centroid_id``, step (3)'s cell restriction becomes partition
     pruning — only nprobe/n_cells of the index is read.
 
-    ``queries`` is a micro-array frame (id_col, xs). ``allowed``
-    (optional, a frame with an ``id_col`` column) PRE-filters the code
+    ``queries`` is a micro-array frame (vec_id, xs). ``allowed``
+    (optional, a frame with a ``vec_id`` column) PRE-filters the code
     table with a semi-join before scoring — filtered vector search
     with the production pre-filter semantics: the top-k is taken AMONG
     allowed neighbors (a post-filter of an unfiltered top-k can return
@@ -398,9 +395,9 @@ def ivfpq_adc_search(
     side of the plan, never the raw vectors. Returns
     (query_id, neighbor_id, adc_dist, rank); self-matches excluded.
     """
-    cents, cb, codes = _ivfpq_parts(xs, n_cells, codebook_ids, sub_dims, id_col)
+    cents, cb, codes = _ivfpq_parts(xs, n_cells, codebook_ids, sub_dims)
     return adc_search_on_index(
-        cents, cb, codes, queries, sub_dims, k, nprobe, id_col, allowed
+        cents, cb, codes, queries, sub_dims, k, nprobe, allowed
     )
 
 
@@ -412,7 +409,6 @@ def adc_search_on_index(
     sub_dims: int,
     k: int,
     nprobe: int,
-    id_col: str = "vec_id",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """The SEARCH stage of :func:`ivfpq_adc_search`, taking a prebuilt
@@ -424,9 +420,9 @@ def adc_search_on_index(
     from pyspark.sql.window import Window
 
     if allowed is not None:
-        codes = codes.join(allowed.select(id_col), id_col, "leftsemi")
+        codes = codes.join(allowed.select(_ID_COL), _ID_COL, "leftsemi")
     qscored = queries.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col).alias("query_id"),
+        F.col(_ID_COL).alias("query_id"),
         "centroid_id",
         "xs",
         "cs",
@@ -464,8 +460,8 @@ def adc_search_on_index(
     )
     adc = (
         codes.join(F.broadcast(dt), ["centroid_id", "subspace", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+        .filter(F.col(_ID_COL) != F.col("query_id"))
+        .groupBy("query_id", F.col(_ID_COL).alias("neighbor_id"))
         .agg(F.sum("dt").cast("long").alias("adc_dist"))
     )
     w_rank = Window.partitionBy("query_id").orderBy(
@@ -487,7 +483,6 @@ def ivfpq_adc_rerank(
     k: int,
     nprobe: int,
     shortlist: int,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Two-stage IVF-PQ search — the production FAISS deployment shape:
     stage 1 shortlists the ADC top-``shortlist`` per query from codes
@@ -510,10 +505,10 @@ def ivfpq_adc_rerank(
 
     short = ivfpq_adc_search(
         xs, queries, n_cells, codebook_ids, sub_dims,
-        k=shortlist, nprobe=nprobe, id_col=id_col,
+        k=shortlist, nprobe=nprobe,
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col("xs").alias("qxs"))
-    nv = xs.select(F.col(id_col).alias("neighbor_id"), F.col("xs").alias("nxs"))
+    qv = queries.select(F.col(_ID_COL).alias("query_id"), F.col("xs").alias("qxs"))
+    nv = xs.select(F.col(_ID_COL).alias("neighbor_id"), F.col("xs").alias("nxs"))
     exact = (
         F.broadcast(short.select("query_id", "neighbor_id"))
         .join(nv, "neighbor_id")

@@ -51,14 +51,14 @@ MAX_INCREMENT_NEW_KEYS = 5_000_000
 def assign_surrogate_ids(
     keys: DataFrame,
     existing_map: DataFrame,
-    key_col: str = "iri",
     max_new_keys: int = MAX_INCREMENT_NEW_KEYS,
 ) -> DataFrame:
-    """Return the full map (key_col, id) = existing ∪ newly-numbered keys.
+    """Return the full map (iri, id) = existing ∪ newly-numbered keys.
 
-    ``existing_map`` has columns (key_col, id: long). ``keys`` is the
-    (possibly duplicated) key universe; only unseen keys get new ids,
-    numbered max(id)+1.. in deterministic ``key_col`` order.
+    ``existing_map`` has columns (iri, id: long). ``keys`` is the
+    (possibly duplicated) key universe in column ``iri``; only unseen
+    keys get new ids, numbered max(id)+1.. in deterministic ``iri``
+    order.
 
     INCREMENT-SIZED ONLY — enforced, not just documented: the new keys
     are ranked via a sorted-array aggregate that holds one increment's
@@ -69,8 +69,8 @@ def assign_surrogate_ids(
     :func:`assign_surrogate_ids_bulk` (identical ids, distributed
     spill-safe numbering); ``plans/pipeline.run_post_extract_pipeline`` does.
     """
-    distinct_keys = keys.select(key_col).distinct()
-    new_keys = distinct_keys.join(existing_map.select(key_col), key_col, "left_anti")
+    distinct_keys = keys.select("iri").distinct()
+    new_keys = distinct_keys.join(existing_map.select("iri"), "iri", "left_anti")
     start = existing_map.agg(F.coalesce(F.max("id"), F.lit(0)).alias("start"))
     # one increment's NEW keys only (small by definition — the bulk
     # variant below is the corpus-sized path, and unlike this
@@ -99,18 +99,18 @@ def assign_surrogate_ids(
     numbered = (
         rank_small_frame(
             new_keys.limit(max_new_keys + 1),
-            [(F.col(key_col), ASC)],
-            [key_col],
+            [(F.col("iri"), ASC)],
+            ["iri"],
             rank_name="_rn",
         )
         .filter(guard)
         .crossJoin(F.broadcast(start))
         .select(
-            key_col,
+            "iri",
             (F.col("start") + F.col("_rn")).cast("long").alias("id"),
         )
     )
-    return existing_map.select(key_col, "id").unionByName(numbered)
+    return existing_map.select("iri", "id").unionByName(numbered)
 
 
 #: the column tagging each key with its table in the bulk numbering
@@ -122,7 +122,7 @@ def _union(frames) -> DataFrame:
 
 
 def assign_surrogate_ids_bulk(
-    keys: dict[str, DataFrame], existing_maps: dict[str, DataFrame], key_col: str = "iri"
+    keys: dict[str, DataFrame], existing_maps: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
     """Bulk variant over several tables at once: for every table name
     of ``keys``, the same map ``assign_surrogate_ids(keys[name],
@@ -145,28 +145,28 @@ def assign_surrogate_ids_bulk(
     """
     names = list(keys)
     carried = _union(
-        existing_maps[n].select(F.lit(t).alias(_TABLE), key_col, "id") for t, n in enumerate(names)
+        existing_maps[n].select(F.lit(t).alias(_TABLE), "iri", "id") for t, n in enumerate(names)
     )
     # a key is new when no carried row shares its (table, key): one
     # aggregate over the keys and the carried maps together, not an
     # anti-join, which the optimizer would split into one join (and
     # one broadcast job) per table
     tagged = _union(
-        [keys[n].select(F.lit(t).alias(_TABLE), key_col, F.lit(False).alias("_c"))
+        [keys[n].select(F.lit(t).alias(_TABLE), "iri", F.lit(False).alias("_c"))
          for t, n in enumerate(names)]
-        + [carried.select(_TABLE, key_col, F.lit(True).alias("_c"))]
+        + [carried.select(_TABLE, "iri", F.lit(True).alias("_c"))]
     )
     # Materialize the range-partitioned sort ONCE: the counts and every
     # table's numbering read it, and cutting lineage makes each row's
     # partition and in-partition position fixed. Under AQE the sort's
     # shuffle stages already run here, while the plan is built.
     new_keys = (
-        tagged.groupBy(_TABLE, key_col)
+        tagged.groupBy(_TABLE, "iri")
         .agg(F.bool_or("_c").alias("_c"))
         .filter(~F.col("_c"))
-        .select(_TABLE, key_col)
-        .repartitionByRange(_TABLE, key_col)
-        .sortWithinPartitions(_TABLE, key_col)
+        .select(_TABLE, "iri")
+        .repartitionByRange(_TABLE, "iri")
+        .sortWithinPartitions(_TABLE, "iri")
         .transform(materialize)
     )
     pid = F.spark_partition_id()
@@ -197,19 +197,19 @@ def assign_surrogate_ids_bulk(
             bases.append(base)
             base += count.get((t, p), 0)
         numbered = new_keys.filter(F.col(_TABLE) == t).select(
-            key_col,
+            "iri",
             (F.lit(bases).cast("array<bigint>")[pid] + position + 1).alias("id"),
         )
-        out[name] = existing_maps[name].select(key_col, "id").unionByName(numbered)
+        out[name] = existing_maps[name].select("iri", "id").unionByName(numbered)
     return out
 
 
-def new_key_filter(table: DataFrame, existing_map: DataFrame, pk_col: str, key_col: str = "iri") -> DataFrame:
+def new_key_filter(table: DataFrame, existing_map: DataFrame, pk_col: str) -> DataFrame:
     """J7: ``pk NOT IN (SELECT iri FROM map UNION SELECT id FROM map)`` —
     new-key detection tolerant of already-converted integer ids
     (``address_etl/id_map.py:36-45``)."""
     known = (
-        existing_map.select(F.col(key_col).cast("string").alias("k"))
+        existing_map.select(F.col("iri").cast("string").alias("k"))
         .union(existing_map.select(F.col("id").cast("string").alias("k")))
         .distinct()
     )
@@ -218,7 +218,7 @@ def new_key_filter(table: DataFrame, existing_map: DataFrame, pk_col: str, key_c
     )
 
 
-def rewrite_pk_to_id(table: DataFrame, id_map: DataFrame, pk_col: str, key_col: str = "iri") -> DataFrame:
+def rewrite_pk_to_id(table: DataFrame, id_map: DataFrame, pk_col: str) -> DataFrame:
     """M3 rewrite step: replace the text PK with the mapped integer id.
 
     Reference does this as a correlated-subquery UPDATE in 10k rowid
@@ -227,6 +227,6 @@ def rewrite_pk_to_id(table: DataFrame, id_map: DataFrame, pk_col: str, key_col: 
     """
     rest = [c for c in table.columns if c != pk_col]
     return (
-        table.join(id_map, table[pk_col] == id_map[key_col], "inner")
+        table.join(id_map, table[pk_col] == id_map["iri"], "inner")
         .select(F.col("id").alias(pk_col), *rest)
     )

@@ -36,11 +36,10 @@ def kcore_peel(
     edges: DataFrame,
     k: int,
     rounds: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
-    """Peel nodes of degree < ``k`` for exactly ``rounds`` rounds and
-    return the surviving nodes with their residual degrees.
+    """Peel nodes of degree < ``k`` for exactly ``rounds`` rounds over
+    the undirected edge set ``(id_a, id_b)`` and return the surviving
+    nodes with their residual degrees.
 
     Each round: degree per node over the current edge set (one
     union-both-directions groupBy), then anti-join the edge set
@@ -57,9 +56,9 @@ def kcore_peel(
     degrees measured on the final surviving edge set.
     """
     e = (
-        edges.filter(F.col(id_a) != F.col(id_b))
+        edges.filter(F.col("id_a") != F.col("id_b"))
         .select(
-            F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
+            F.least("id_a", "id_b").alias("u"), F.greatest("id_a", "id_b").alias("v")
         )
         .distinct()
         .transform(materialize)

@@ -102,19 +102,13 @@ def kmeans_assign(
     )
 
 
-def kmeans_update(
-    vectors: DataFrame, assignments: DataFrame, round_digits: int | None = None
-) -> DataFrame:
-    """New centroids = element-wise mean of each cluster's members.
-
-    ``round_digits`` rounds each mean component, re-synchronizing the
-    centroid arrays with an oracle engine whose AVG partial-sums in a
-    different order.
-    """
+def kmeans_update(vectors: DataFrame, assignments: DataFrame) -> DataFrame:
+    """New centroids = element-wise mean of each cluster's members,
+    unrounded."""
     member = vectors.join(assignments, "vec_id").select(
         "cluster", F.posexplode("v").alias("pos", "val")
     )
-    return _means(member, round_digits)
+    return _means(member, None)
 
 
 def _means(member: DataFrame, round_digits: int | None) -> DataFrame:

@@ -28,15 +28,9 @@ from pyspark.sql import functions as F
 from ..runtime import materialize
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-    single_exchange: bool = False,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Run exactly ``rounds`` synchronous LPA rounds over a directed
-    edge list (feed a symmetrized set for undirected semantics).
+    edge list ``(src, dst)`` (feed a symmetrized set for undirected semantics).
     Initial label of a node is its own id (string); each round every
     node adopts the most frequent label among its neighbors plus
     itself, ties to the smallest label. Returns (node, label).
@@ -45,23 +39,8 @@ def label_propagation(
     list a dst-only node still gets its self-label at round 0 and a
     self-vote every round (it receives in-messages but emits none —
     directed semantics; symmetrize for undirected).
-
-    ``single_exchange`` is the measured BALANCED-GRAPH dial (SCALING.md
-    r10 drift-family addendum): repartition the message stream by
-    ``node`` before the vote count so both per-round groupBys reuse
-    ONE node-keyed exchange (hash(node) satisfies the (node, label)
-    clustering too) — ~30% faster at sf0.1 on the near-balanced
-    supplier–part graph (5.7-6.6s vs 8.4-12.5s per 3-round run through
-    this code path). It ships RAW messages on that shuffle: duplicate
-    (node, label) votes are NOT combined map-side, and a hub's entire
-    in-box lands in one partition that the downstream aggregation
-    cannot AQE-split — a hub-regime loss, which is why the
-    two-exchange form stays the default. Both forms are vote-for-vote
-    identical (pinned in tests/test_analytics_tranche.py).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(
-        materialize
-    )
+    e = edges.select("src", "dst").transform(materialize)
     labels = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -73,8 +52,6 @@ def label_propagation(
         msgs = e.join(
             labels, e["src"] == labels["node"]
         ).select(F.col("dst").alias("node"), "label").unionByName(labels)
-        if single_exchange:
-            msgs = msgs.repartition("node")
         votes = msgs.groupBy("node", "label").agg(F.count(F.lit(1)).alias("cnt"))
         labels = (
             votes.groupBy("node")

@@ -67,10 +67,10 @@ def decode_image_meta_batches(
         yield out
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Model an opaque media payload as a binary column (here: the utf-8
-    bytes of the text, standing in for image bytes)."""
-    return df.select("doc_id", F.col(text_col).cast("binary").alias("payload"))
+    bytes of ``text``, standing in for image bytes)."""
+    return df.select("doc_id", F.col("text").cast("binary").alias("payload"))
 
 
 def decode_image_meta(df_with_payload: DataFrame) -> DataFrame:

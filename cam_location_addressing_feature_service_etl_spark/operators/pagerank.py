@@ -26,14 +26,12 @@ DAMPING = 0.85
 def pagerank(
     edges: DataFrame,
     iterations: int,
-    src: str = "src",
-    dst: str = "dst",
     damping: float = DAMPING,
     teleport: float | None = None,
 ) -> DataFrame:
     """Unnormalized PageRank (init rank 1.0, ``rank = (1-d) + d·Σ
     rank/outdeg``) for exactly ``iterations`` rounds over the given
-    directed edge list. Ranks are rounded to 6 digits each round so a
+    directed edge list ``(src, dst)``. Ranks are rounded to 6 digits each round so a
     SQL oracle unrolling the same rounds agrees despite differing
     float summation orders.
 
@@ -48,7 +46,7 @@ def pagerank(
     and none dangles).
     """
     t = (1.0 - damping) if teleport is None else teleport
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).transform(materialize)
+    e = edges.select("src", "dst").transform(materialize)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).transform(materialize)
     # Join outdeg onto the edges ONCE, outside the loop: every round
     # then does a single edges ⋈ ranks join instead of edges ⋈ ranks ⋈

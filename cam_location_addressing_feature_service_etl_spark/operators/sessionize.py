@@ -33,19 +33,17 @@ from pyspark.sql.window import Window
 
 def sessionize_time_salted(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
     gap_ms: int = 30 * 60_000,
     bucket_ms: int = 6 * 3_600_000,
 ) -> DataFrame:
-    """Events + ``session_idx`` (1-based per user, identical to the
-    unsalted lag/cumsum numbering), with no per-task state larger than
-    one (user, bucket) slice."""
-    e = events.withColumn("_ms", F.unix_millis(F.col(ts_col))).withColumn(
+    """Events + ``session_idx`` (1-based per ``user_id``, ordered by
+    ``(ts, event_id)``, identical to the unsalted lag/cumsum
+    numbering), with no per-task state larger than one (user, bucket)
+    slice."""
+    e = events.withColumn("_ms", F.unix_millis(F.col("ts"))).withColumn(
         "_b", F.floor(F.col("_ms") / F.lit(bucket_ms))
     )
-    w_local = Window.partitionBy(user_col, "_b").orderBy(ts_col, order_col)
+    w_local = Window.partitionBy("user_id", "_b").orderBy("ts", "event_id")
     flagged = e.withColumn("_prev", F.lag("_ms").over(w_local)).withColumn(
         "_new",
         F.when(
@@ -60,12 +58,12 @@ def sessionize_time_salted(
     # per-(user, bucket) summaries: session count + edge timestamps.
     # All subsequent windows run over THESE rows — bounded by the
     # number of non-empty buckets, not by event count.
-    summ = local.groupBy(user_col, "_b").agg(
+    summ = local.groupBy("user_id", "_b").agg(
         F.max("_lsid").alias("_n"),
         F.min("_ms").alias("_first"),
         F.max("_ms").alias("_last"),
     )
-    w_seq = Window.partitionBy(user_col).orderBy("_b")
+    w_seq = Window.partitionBy("user_id").orderBy("_b")
     merged = summ.withColumn("_prev_last", F.lag("_last").over(w_seq)).withColumn(
         "_m",
         F.when(
@@ -78,10 +76,10 @@ def sessionize_time_salted(
     offsets = merged.withColumn(
         "_off",
         F.coalesce(F.sum(F.col("_n") - F.col("_m")).over(w_off), F.lit(0)),
-    ).select(user_col, "_b", "_m", "_off")
+    ).select("user_id", "_b", "_m", "_off")
 
     return (
-        local.join(offsets, [user_col, "_b"])
+        local.join(offsets, ["user_id", "_b"])
         .withColumn("session_idx", F.col("_off") + F.col("_lsid") - F.col("_m"))
         .drop("_ms", "_b", "_prev", "_new", "_lsid", "_m", "_off")
     )

@@ -16,8 +16,11 @@ as equal, so the negation cannot reorder ties). Equivalence to the
 window form is pinned in ``tests/test_kmeans.py``.
 
 Determinism: dot products fold left in array order in both Spark and
-the DuckDB oracle; cosines are rounded before ranking so tie-breaking
-(neighbor id asc) is reproducible across engines.
+the DuckDB oracle; cosines are rounded to ``_DIGITS`` before ranking so
+tie-breaking (neighbor id asc) is reproducible across engines.
+
+Every operator here reads ids from ``vec_id`` and vectors from
+``embedding`` (``semdedup_keep_first`` takes its vector column).
 """
 
 from __future__ import annotations
@@ -25,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_DIGITS = 6  # cosine rounding, identical on the DuckDB side
+_TILES = 8  # cosine_pairs_above's hash tiles per side
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -51,9 +57,6 @@ def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -65,10 +68,10 @@ def brute_force_topk(
     # order as the per-pair form, so the doubles are bit-identical,
     # but the scoring loop runs 1 array fold per pair instead of 3.
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
     ).withColumn("qn", norm_col(F.col("qv")))
     v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("nv")
+        F.col("vec_id").alias("neighbor_id"), as_double_array(F.col("embedding")).alias("nv")
     ).withColumn("nn", norm_col(F.col("nv")))
     scored = (
         v.crossJoin(F.broadcast(q))
@@ -78,7 +81,7 @@ def brute_force_topk(
             "neighbor_id",
             F.round(
                 dot_col(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")),
-                round_digits,
+                _DIGITS,
             ).alias("cosine"),
         )
     )
@@ -90,9 +93,7 @@ def brute_force_topk(
     )
 
 
-def _centroid_arr(
-    centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+def _centroid_arr(centroids: DataFrame) -> DataFrame:
     """Collapse the centroid set to ONE row holding a
     ``sort_array``-by-id array of ``struct(centroid_id, cv, cn)`` —
     the broadcast build for the map-side argmax (sorted so the first
@@ -100,8 +101,8 @@ def _centroid_arr(
     tie-break the previous plan used)."""
     return (
         centroids.select(
-            F.col(id_col).alias("centroid_id"),
-            as_double_array(F.col(vec_col)).alias("cv"),
+            F.col("vec_id").alias("centroid_id"),
+            as_double_array(F.col("embedding")).alias("cv"),
         )
         .withColumn("cn", norm_col(F.col("cv")))
         .agg(
@@ -112,7 +113,7 @@ def _centroid_arr(
     )
 
 
-def _cell_ranking(vec: Column, vnorm: Column, round_digits: int) -> Column:
+def _cell_ranking(vec: Column, vnorm: Column) -> Column:
     """Array of ``struct(ncos, centroid_id)`` over the broadcast
     ``_cents`` array, where ``ncos`` = NEGATED rounded cosine — so
     ascending struct order is (cosine DESC, centroid_id ASC), the
@@ -121,7 +122,7 @@ def _cell_ranking(vec: Column, vnorm: Column, round_digits: int) -> Column:
     return F.transform(
         F.col("_cents"),
         lambda s: F.struct(
-            (-F.round(dot_col(vec, s["cv"]) / (vnorm * s["cn"]), round_digits)).alias(
+            (-F.round(dot_col(vec, s["cv"]) / (vnorm * s["cn"]), _DIGITS)).alias(
                 "ncos"
             ),
             s["centroid_id"].alias("centroid_id"),
@@ -129,13 +130,7 @@ def _cell_ranking(vec: Column, vnorm: Column, round_digits: int) -> Column:
     )
 
 
-def _assign_with_vec(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    round_digits: int,
-) -> DataFrame:
+def _assign_with_vec(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(id, vec) → (vec_id, centroid_id, nv, nn) by nearest-cosine cell,
     MAP-ONLY: the centroid array is broadcast and the argmax is
     ``array_min`` over (−cosine, centroid_id) structs. Carrying the
@@ -144,21 +139,15 @@ def _assign_with_vec(
     paid an n×k Exchange+Sort for the window argmax plus an n⋈n join
     to re-attach vectors)."""
     v = vectors.select(
-        F.col(id_col).alias("vec_id"), as_double_array(F.col(vec_col)).alias("nv")
+        "vec_id", as_double_array(F.col("embedding")).alias("nv")
     ).withColumn("nn", norm_col(F.col("nv")))
-    best = F.array_min(_cell_ranking(F.col("nv"), F.col("nn"), round_digits))
-    return v.crossJoin(
-        F.broadcast(_centroid_arr(centroids, id_col, vec_col))
-    ).select("vec_id", best["centroid_id"].alias("centroid_id"), "nv", "nn")
+    best = F.array_min(_cell_ranking(F.col("nv"), F.col("nn")))
+    return v.crossJoin(F.broadcast(_centroid_arr(centroids))).select(
+        "vec_id", best["centroid_id"].alias("centroid_id"), "nv", "nn"
+    )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine (IVF cells).
 
     Centroids are broadcast as ONE sorted array row and the argmax is
@@ -169,9 +158,7 @@ def ivf_assign(
     At scale the resulting (vec_id, centroid_id) map is what you write
     as the cell-bucketed layout searches co-partition against.
     """
-    return _assign_with_vec(
-        vectors, centroids, id_col, vec_col, round_digits
-    ).select("vec_id", "centroid_id")
+    return _assign_with_vec(vectors, centroids).select("vec_id", "centroid_id")
 
 
 def ivf_search(
@@ -180,9 +167,6 @@ def ivf_search(
     queries: DataFrame,
     k: int,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     pair_predicate: Column | None = None,
 ) -> DataFrame:
     """IVF ANN search: each query probes its ``nprobe`` nearest cells
@@ -214,24 +198,22 @@ def ivf_search(
     result the exact top-k of the RESTRICTED pool, not a post-filter
     of the unrestricted top-k (which could return < k rows and lose
     deeper valid neighbors)."""
-    assigned = _assign_with_vec(
-        vectors, centroids, id_col, vec_col, round_digits
-    ).withColumnRenamed("vec_id", "neighbor_id")
+    assigned = _assign_with_vec(vectors, centroids).withColumnRenamed(
+        "vec_id", "neighbor_id"
+    )
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), as_double_array(F.col("embedding")).alias("qv")
     ).withColumn("qn", norm_col(F.col("qv")))
     # probe selection: top-nprobe cells per query as a map-side
     # array_sort + slice over the same broadcast centroid array (the
     # previous plan windowed |Q|×k rows — one more exchange for the
     # identical (cosine DESC, centroid_id ASC) ranking)
     ranked = F.slice(
-        F.array_sort(_cell_ranking(F.col("qv"), F.col("qn"), round_digits)),
+        F.array_sort(_cell_ranking(F.col("qv"), F.col("qn"))),
         1,
         nprobe,
     )
-    probes = q.crossJoin(
-        F.broadcast(_centroid_arr(centroids, id_col, vec_col))
-    ).select(
+    probes = q.crossJoin(F.broadcast(_centroid_arr(centroids))).select(
         "query_id",
         "qv",
         "qn",
@@ -246,7 +228,7 @@ def ivf_search(
         "neighbor_id",
         F.round(
             dot_col(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")),
-            round_digits,
+            _DIGITS,
         ).alias("cosine"),
     )
     if pair_predicate is not None:
@@ -268,10 +250,6 @@ def normalized_col(a: Column) -> Column:
 def cosine_pairs_above(
     vectors: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    num_tiles: int = 8,
 ) -> DataFrame:
     """All pairs (a<b) with cosine ≥ threshold, as a fully distributed
     tiled GEMM — the driver never materializes the matrix.
@@ -293,8 +271,9 @@ def cosine_pairs_above(
     one group, and ids are emitted (min, max) — so the union over
     groups is exact and duplicate-free.
 
-    Scale: T is a knob — pick T ≈ N·bytes_per_row / executor_block
-    budget so a tile pair (2 blocks + the score tile) fits one task.
+    Scale: T is ``_TILES``; size it as T ≈ N·bytes_per_row /
+    executor_block budget so a tile pair (2 blocks + the score tile)
+    fits one task.
     At 100 TB nothing changes: no broadcast, no driver state, skew-free
     hash tiling, and the GEMM stays BLAS-vectorized per task. The float
     delta between BLAS accumulation and a sequential fold is ~1e-15
@@ -310,13 +289,12 @@ def cosine_pairs_above(
         StructType,
     )
 
-    t_count = int(num_tiles)
     v = (
         vectors.select(
-            F.col(id_col).alias("vid"),
-            normalized_col(as_double_array(F.col(vec_col))).alias("nv"),
+            F.col("vec_id").alias("vid"),
+            normalized_col(as_double_array(F.col("embedding"))).alias("nv"),
         )
-        .withColumn("t", F.pmod(F.xxhash64("vid"), F.lit(t_count)).cast("int"))
+        .withColumn("t", F.pmod(F.xxhash64("vid"), F.lit(_TILES)).cast("int"))
     )
     # Side A: tile t participates in pairs (t, tb) for tb >= t.
     a_side = (
@@ -324,10 +302,10 @@ def cosine_pairs_above(
             "vid",
             "nv",
             "t",
-            F.explode(F.sequence(F.col("t"), F.lit(t_count - 1))).alias("tb"),
+            F.explode(F.sequence(F.col("t"), F.lit(_TILES - 1))).alias("tb"),
         )
         .select(
-            (F.col("t") * t_count + F.col("tb")).alias("grp"),
+            (F.col("t") * _TILES + F.col("tb")).alias("grp"),
             F.lit(0).alias("side"),
             "vid",
             "nv",
@@ -342,7 +320,7 @@ def cosine_pairs_above(
             F.explode(F.sequence(F.lit(0), F.col("t"))).alias("ta"),
         )
         .select(
-            (F.col("ta") * t_count + F.col("t")).alias("grp"),
+            (F.col("ta") * _TILES + F.col("t")).alias("grp"),
             F.lit(1).alias("side"),
             "vid",
             "nv",
@@ -367,12 +345,12 @@ def cosine_pairs_above(
         if a.empty or b.empty:
             return empty
         grp = int(pdf["grp"].iloc[0])
-        diagonal = (grp // t_count) == (grp % t_count)
+        diagonal = (grp // _TILES) == (grp % _TILES)
         a_ids = a["vid"].to_numpy(dtype=np.int64)
         b_ids = b["vid"].to_numpy(dtype=np.int64)
         a_mat = np.vstack(a["nv"].to_numpy())
         b_mat = np.vstack(b["nv"].to_numpy())
-        sims = np.round(a_mat @ b_mat.T, round_digits)
+        sims = np.round(a_mat @ b_mat.T, _DIGITS)
         mask = sims >= threshold
         if diagonal:
             mask &= a_ids[:, None] < b_ids[None, :]
@@ -389,10 +367,7 @@ def cosine_pairs_above(
 def semdedup_keep_first(
     assigned: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    cluster_col: str = "cluster",
     vec_col: str = "nv",
-    round_digits: int = 6,
 ) -> DataFrame:
     """SemDeDup within-cluster pruning (Abbas et al. 2023): given
     (id, cluster, unit-normalized vector), flag each vector ``kept``
@@ -433,7 +408,7 @@ def semdedup_keep_first(
         pdf = pdf.sort_values("vid").reset_index(drop=True)
         ids = pdf["vid"].to_numpy(dtype=np.int64)
         m = np.vstack(pdf["v"].to_numpy())
-        sims = np.round(m @ m.T, round_digits)
+        sims = np.round(m @ m.T, _DIGITS)
         # prior[i, j] == True: i < j (id order) and sims >= threshold
         prior = np.triu(sims >= threshold, k=1)
         return pd.DataFrame(
@@ -445,8 +420,8 @@ def semdedup_keep_first(
         )
 
     base = assigned.select(
-        F.col(id_col).alias("vid"),
-        F.col(cluster_col).alias("c"),
+        F.col("vec_id").alias("vid"),
+        F.col("cluster").alias("c"),
         F.col(vec_col).alias("v"),
     )
     return base.groupBy("c").applyInPandas(kernel, out_schema)

@@ -17,19 +17,22 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: salts per hot key: the aggregation's reducers, the join's replicas
+_AGG_SALTS = 16
+_JOIN_SALTS = 8
+
 
 def salted_count_sum(
     df: DataFrame,
     key_cols: Sequence[str],
     sum_col: str,
-    n_salts: int = 16,
 ) -> DataFrame:
     """groupBy(key).agg(count, sum) resilient to a hot key: phase 1
-    aggregates on (key, salt) — splitting the hot key across n_salts
+    aggregates on (key, salt) — splitting the hot key across ``_AGG_SALTS``
     reducers — phase 2 merges the partials per key."""
     key_cols = list(key_cols)
     salted = df.withColumn(
-        "_salt", F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(n_salts))
+        "_salt", F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(_AGG_SALTS))
     )
     partial = salted.groupBy(*key_cols, "_salt").agg(
         F.count(F.lit(1)).alias("_cnt"), F.sum(sum_col).alias("_sum")
@@ -43,17 +46,16 @@ def salted_join(
     skewed: DataFrame,
     dim: DataFrame,
     key: str,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Inner equi-join where ``skewed`` has hot values of ``key`` and
     ``dim`` is too large to broadcast outright: the dim side is
-    replicated n_salts× (explode), the skewed side gets a deterministic
+    replicated ``_JOIN_SALTS``× (explode), the skewed side gets a deterministic
     salt, and the join key becomes (key, salt) — the hot key's rows
-    spread over n_salts partitions instead of one."""
+    spread over ``_JOIN_SALTS`` partitions instead of one."""
     skewed_s = skewed.withColumn(
-        "_salt", F.pmod(F.hash(*[F.col(c) for c in skewed.columns]), F.lit(n_salts))
+        "_salt", F.pmod(F.hash(*[F.col(c) for c in skewed.columns]), F.lit(_JOIN_SALTS))
     )
     dim_r = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(_JOIN_SALTS - 1)))
     )
     return skewed_s.join(dim_r, on=[key, "_salt"], how="inner").drop("_salt")

@@ -23,6 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: distances are rounded to 0.1 km before the radius filter and the rank
+_DIST_DIGITS = 1
+
 
 def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
     dlat = F.radians(lat2 - lat1)
@@ -41,13 +44,11 @@ def knn_within_radius(
     cell_deg: float,
     *,
     max_abs_lat_deg: float,
-    point_id: str = "point_id",
-    cand_id: str = "cand_id",
-    round_digits: int = 1,
 ) -> DataFrame:
     """For each row of ``points`` (point_id, lat, lon): the ``k``
     nearest rows of ``candidates`` (cand_id, lat, lon) with haversine
-    distance ≤ radius_km, ranked by (dist, cand_id). Points with no
+    distance ≤ radius_km (rounded to ``_DIST_DIGITS``), ranked by
+    (dist, cand_id). Points with no
     candidate in range are absent (inner semantics). Output adds
     ``rank`` (1-based).
 
@@ -75,25 +76,25 @@ def knn_within_radius(
     # the coverage guard must span that effective radius, not the
     # nominal one, or a rounding-admitted candidate at a guard-boundary
     # cell size could sit outside the 3×3 neighborhood.
-    effective_radius_km = radius_km + 0.5 * 10.0 ** (-round_digits)
+    effective_radius_km = radius_km + 0.5 * 10.0 ** (-_DIST_DIGITS)
     if min(cell_deg * 111.0, lon_km) < effective_radius_km:
         raise ValueError(
             f"cell_deg={cell_deg}° spans {cell_deg * 111.0:.0f} km of latitude "
             f"and {lon_km:.0f} km of longitude at |lat|={max_abs_lat_deg}° "
             f"< effective radius {effective_radius_km} km (radius {radius_km} "
-            f"+ 0.5·10^-{round_digits} rounding slack) — the 3×3 neighbor "
+            f"+ 0.5·10^-{_DIST_DIGITS} rounding slack) — the 3×3 neighbor "
             "expansion would miss in-radius candidates; widen cell_deg or "
             "shrink the radius"
         )
     # A side exploded to its 3x3 neighborhood
     a = (
-        points.select(F.col(point_id), F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"))
+        points.select("point_id", F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"))
         .withColumn("_clat", F.floor(F.col("a_lat") / F.lit(cell_deg)).cast("long"))
         .withColumn("_clon", F.floor(F.col("a_lon") / F.lit(cell_deg)).cast("long"))
         .withColumn("_dlat", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
         .withColumn("_dlon", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
         .select(
-            point_id,
+            "point_id",
             "a_lat",
             "a_lon",
             (F.col("_clat") + F.col("_dlat")).alias("cell_lat"),
@@ -101,7 +102,7 @@ def knn_within_radius(
         )
     )
     b = candidates.select(
-        F.col(cand_id),
+        "cand_id",
         F.col("lat").alias("b_lat"),
         F.col("lon").alias("b_lon"),
         F.floor(F.col("lat") / F.lit(cell_deg)).cast("long").alias("cell_lat"),
@@ -113,16 +114,16 @@ def knn_within_radius(
             "dist_km",
             F.round(
                 haversine_km(F.col("a_lat"), F.col("a_lon"), F.col("b_lat"), F.col("b_lon")),
-                round_digits,
+                _DIST_DIGITS,
             ),
         )
         .filter(F.col("dist_km") <= radius_km)
     )
-    w = Window.partitionBy(point_id).orderBy(F.asc("dist_km"), F.asc(cand_id))
+    w = Window.partitionBy("point_id").orderBy(F.asc("dist_km"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(point_id, cand_id, "dist_km", "rank")
+        .select("point_id", "cand_id", "dist_km", "rank")
     )
 
 
@@ -133,9 +134,6 @@ def nearest_within_radius(
     cell_deg: float,
     *,
     max_abs_lat_deg: float,
-    point_id: str = "point_id",
-    cand_id: str = "cand_id",
-    round_digits: int = 1,
 ) -> DataFrame:
     """k=1 specialization of :func:`knn_within_radius` (original
     nearest-neighbor contract; no rank column)."""
@@ -146,7 +144,4 @@ def nearest_within_radius(
         radius_km=radius_km,
         cell_deg=cell_deg,
         max_abs_lat_deg=max_abs_lat_deg,
-        point_id=point_id,
-        cand_id=cand_id,
-        round_digits=round_digits,
-    ).select(point_id, cand_id, "dist_km")
+    ).select("point_id", "cand_id", "dist_km")

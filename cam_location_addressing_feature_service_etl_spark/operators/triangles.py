@@ -23,19 +23,17 @@ from pyspark.sql import functions as F
 from ..runtime import materialize
 
 
-def triangle_counts_per_node(
-    edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
+def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over an undirected edge
-    set (duplicates/self-loops tolerated — canonicalized first).
+    set ``(id_a, id_b)`` (duplicates/self-loops tolerated — canonicalized first).
     Returns (node, triangles) for every node in ≥1 triangle.
     """
     # canonical undirected edges, deduped; feeds degree calc, the
     # orientation join, and the closing-edge join — materialize once
     e = (
-        edges.filter(F.col(id_a) != F.col(id_b))
+        edges.filter(F.col("id_a") != F.col("id_b"))
         .select(
-            F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
+            F.least("id_a", "id_b").alias("u"), F.greatest("id_a", "id_b").alias("v")
         )
         .distinct()
         .transform(materialize)

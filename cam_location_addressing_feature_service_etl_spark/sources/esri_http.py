@@ -123,10 +123,10 @@ class EsriClient:
         record_count: int,
         where: str = "1=1",
         out_fields: list[str] | None = None,
-        return_geometry: bool = True,
         order_by: str | None = None,
     ) -> list[dict]:
-        """S5: one page of features (geocode.py:398-427).
+        """S5: one page of features with their geometry
+        (geocode.py:398-427).
 
         ``order_by`` sends ``orderByFields``: ESRI row order without an
         explicit order is NOT contractual, so any caller that pages by
@@ -138,18 +138,19 @@ class EsriClient:
             "resultOffset": str(offset),
             "resultRecordCount": str(record_count),
             "outFields": ",".join(out_fields) if out_fields else "*",
-            "returnGeometry": "true" if return_geometry else "false",
+            "returnGeometry": "true",
         }
         if order_by:
             params["orderByFields"] = order_by
         resp = self._request(params)
         return resp.get("features", [])
 
-    def distinct_values(self, fld: str, where: str = "1=1") -> list:
-        """D4: returnDistinctValues pushdown (geocode.py:331-338)."""
+    def distinct_values(self, fld: str) -> list:
+        """D4: returnDistinctValues pushdown over every row
+        (geocode.py:331-338)."""
         resp = self._request(
             {
-                "where": where,
+                "where": "1=1",
                 "returnDistinctValues": "true",
                 "outFields": fld,
                 "returnGeometry": "false",

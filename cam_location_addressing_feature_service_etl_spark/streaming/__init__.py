@@ -19,7 +19,7 @@ Twins that keep their state in parquet share ``versioned.py``:
 - ``parquet_stream`` — the fixed-schema file-source reader every
   ``read_*_stream`` returns.
 
-The ``applyInPandasWithState`` twins (``stateful.py``, ``tws.py``,
-``cusum.py``, ``ewma.py``, ...) keep their state in the Spark state
+The ``applyInPandasWithState`` twins (``stateful.py``, ``cusum.py``,
+``ewma.py``, ...) keep their state in the Spark state
 store and do not fold.
 """

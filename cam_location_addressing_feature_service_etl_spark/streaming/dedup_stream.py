@@ -42,5 +42,7 @@ def dedup_within_watermark(events: DataFrame, delay: str) -> DataFrame:
 def read_event_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream of possibly-redelivered event rows."""
+    """File-source stream of event rows, possibly redelivered — the
+    test stand-in for the Kafka event feed the dedup, EWMA and CUSUM
+    twins read."""
     return parquet_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger)

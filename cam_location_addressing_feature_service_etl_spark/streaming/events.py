@@ -28,6 +28,16 @@ from pyspark.sql.types import (
 )
 
 from ..operators.upsert import upsert_by_key
+from ..workload.events import (
+    _CMS_DEPTH,
+    _CMS_WIDTH,
+    _GAP_MIN,
+    _KLL_K,
+    _SLD_BUCKET_MS,
+    _SLD_LGK,
+    _THETA_LGK,
+    _cms_bucket,
+)
 from .versioned import Fold
 
 #: physical schema of events.parquet when ts is TIMESTAMP(NANOS) read
@@ -75,14 +85,12 @@ def read_event_stream(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "1 hour"
-) -> DataFrame:
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     """Streaming twin of ``ev_tumbling_window_hourly``: watermarked
     tumbling-window counts/sums per event type."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
@@ -98,13 +106,12 @@ def windowed_event_counts(
     )
 
 
-def sessionized_events(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Gap-based session windows per user (stateful streaming agg)."""
+def sessionized_events(events: DataFrame) -> DataFrame:
+    """Gap-based session windows per user (stateful streaming agg),
+    with the batch sessionization's gap."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", f"{_GAP_MIN} minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,8)")), 4)
@@ -140,22 +147,20 @@ def run_stream_to_memory(
     return stream_df.sparkSession.table(query_name)
 
 
-def deduped_event_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def deduped_event_stream(events: DataFrame) -> DataFrame:
     """Streaming exactly-once-per-id dedup: drop replayed event_ids
-    within the watermark horizon (``dropDuplicatesWithinWatermark``
+    within the 1-hour watermark horizon (``dropDuplicatesWithinWatermark``
     keys the state store on event_id and evicts ids older than the
     watermark — bounded state, unlike a plain dropDuplicates which
     grows forever on a stream)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
 
-def click_purchase_stream_join(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
+def click_purchase_stream_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream inner join: each click paired with the same
-    user's purchases in the preceding ``horizon``. Both sides are
+    user's purchases in the preceding hour. Both sides are
     watermarked so the join state (buffered unmatched rows) is
     evicted once the time-range condition can no longer match —
     the canonical bounded-state stream-stream join shape.
@@ -164,18 +169,18 @@ def click_purchase_stream_join(
         F.col("event_id").alias("click_id"),
         F.col("user_id"),
         F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", horizon)
+    ).withWatermark("click_ts", "1 hour")
     p = purchases.select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user_id"),
         F.col("ts").alias("purchase_ts"),
         F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", horizon)
+    ).withWatermark("purchase_ts", "1 hour")
     return c.join(
         p,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") <= F.col("click_ts"))
-        & (F.col("purchase_ts") >= F.col("click_ts") - F.expr(f"INTERVAL {horizon}")),
+        & (F.col("purchase_ts") >= F.col("click_ts") - F.expr("INTERVAL 1 hour")),
     ).select("click_id", "user_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value")
 
 
@@ -196,14 +201,12 @@ def upsert_snapshot_sink(schema: str, key_cols: list[str]) -> Fold:
 
 
 def tumbling_distinct_sketches(
-    events: DataFrame,
-    bucket: str = "10 minutes",
-    watermark: str = "30 minutes",
-    lgk: int = 14,
+    events: DataFrame, bucket: str = f"{_SLD_BUCKET_MS // 60_000} minutes"
 ) -> DataFrame:
     """Streaming leg of the sliding-distinct pattern (the twin of the
     batch ``ev_sliding_distinct_hll`` query): maintain one MERGEABLE
-    HLL sketch per tumbling bucket — (bucket_start, sk: binary). A
+    HLL sketch, of the batch query's size, per tumbling bucket —
+    (bucket_start, sk: binary). A
     sliding window is then a sketch-sized ``hll_union_agg`` over the
     span's buckets BATCH-side (the dashboard/rollup query), so raw
     events are aggregated exactly once in the stream and the slide
@@ -217,9 +220,9 @@ def tumbling_distinct_sketches(
     State per bucket is one kilobyte-scale sketch; the watermark
     bounds how many buckets stay open."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", bucket).alias("w"))
-        .agg(F.hll_sketch_agg(F.col("user_id"), F.lit(lgk)).alias("sk"))
+        .agg(F.hll_sketch_agg(F.col("user_id"), F.lit(_SLD_LGK)).alias("sk"))
         .select(F.col("w.start").alias("bucket_start"), "sk")
     )
 
@@ -235,7 +238,7 @@ def enriched_event_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     return events.join(dim, "user_id", "left")
 
 
-def streaming_type_theta_sketches(events: DataFrame, lgk: int = 16) -> DataFrame:
+def streaming_type_theta_sketches(events: DataFrame) -> DataFrame:
     """Streaming leg of ``a10_theta_audience_overlap``: one mergeable
     theta sketch per event type, maintained incrementally across
     micro-batches (complete-mode global aggregate — state is T
@@ -250,16 +253,11 @@ def streaming_type_theta_sketches(events: DataFrame, lgk: int = 16) -> DataFrame
     (asserted in tests/test_streaming_hll.py), and updating on RAW
     events equals the batch build over distinct (type, user) pairs."""
     return events.groupBy("event_type").agg(
-        F.theta_sketch_agg(F.col("user_id"), lgNomEntries=lgk).alias("sk")
+        F.theta_sketch_agg(F.col("user_id"), lgNomEntries=_THETA_LGK).alias("sk")
     )
 
 
-def tumbling_value_quantile_sketches(
-    events: DataFrame,
-    bucket: str = "1 day",
-    watermark: str = "1 day",
-    k: int = 200,
-) -> DataFrame:
+def tumbling_value_quantile_sketches(events: DataFrame) -> DataFrame:
     """Streaming leg of ``a11_kll_quantile_rollup``: one KLL sketch of
     event value per tumbling day, maintained incrementally; the fold
     into an overall sketch (``kll_sketch_merge_double``) stays a
@@ -273,20 +271,14 @@ def tumbling_value_quantile_sketches(
     verifies against its oracle (asserted in
     tests/test_streaming_hll.py). Watermark bounds open-bucket state."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", bucket).alias("w"))
-        .agg(F.kll_sketch_agg_double(F.col("value"), F.lit(k)).alias("sk"))
+        events.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day").alias("w"))
+        .agg(F.kll_sketch_agg_double(F.col("value"), F.lit(_KLL_K)).alias("sk"))
         .select(F.col("w.start").alias("bucket_start"), "sk")
     )
 
 
-def tumbling_cms_cells(
-    events: DataFrame,
-    bucket: str = "1 day",
-    watermark: str = "1 day",
-    depth: int | None = None,
-    width: int | None = None,
-) -> DataFrame:
+def tumbling_cms_cells(events: DataFrame) -> DataFrame:
     """Streaming leg of ``a12_cms_heavy_hitters`` — completing the
     four-sketch maintenance family (HLL buckets, theta types, KLL
     days, CMS cells): maintain the (depth × width) count-min counter
@@ -299,23 +291,19 @@ def tumbling_cms_cells(
     State per bucket is d·w longs (kilobytes); watermark bounds open
     buckets. Asserted bit-exact against the batch build and the
     registry query's estimates in tests/test_streaming_hll.py."""
-    from ..workload.events import _CMS_DEPTH, _CMS_WIDTH, _cms_bucket
-
-    # geometry defaults come from the BATCH constants so a retune in
+    # the geometry is the BATCH constants', so a retune in
     # workload/events.py cannot silently diverge the streamed sketch
-    depth = _CMS_DEPTH if depth is None else depth
-    width = _CMS_WIDTH if width is None else width
     depth_rows = F.explode(
-        F.array(*[F.lit(i).cast("long") for i in range(depth)])
+        F.array(*[F.lit(i).cast("long") for i in range(_CMS_DEPTH)])
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .select("ts", "user_id")
         .withColumn("row", depth_rows)
         .groupBy(
-            F.window("ts", bucket).alias("w"),
+            F.window("ts", "1 day").alias("w"),
             "row",
-            _cms_bucket(F.col("user_id"), F.col("row"), width).alias("bucket"),
+            _cms_bucket(F.col("user_id"), F.col("row"), _CMS_WIDTH).alias("bucket"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("w.start").alias("bucket_start"), "row", "bucket", "c")

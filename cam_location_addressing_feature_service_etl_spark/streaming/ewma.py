@@ -31,7 +31,7 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -41,9 +41,6 @@ from pyspark.sql.types import (
 )
 
 from ..workload.events import _EWMA_LAGS, _EWMA_W
-from .versioned import parquet_stream
-
-EVENT_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, value double"
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -130,14 +127,6 @@ def ewma_stream(events: DataFrame) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def read_event_value_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream of event rows — the test stand-in for the
-    Kafka event feed."""
-    return parquet_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger)
 
 
 __doc__ = __doc__.format(lags=_EWMA_LAGS)

@@ -51,7 +51,6 @@ def contamination_stats(
     bench: DataFrame,
     docs: DataFrame | None = None,
     postings: DataFrame | None = None,
-    threshold: float = _DC_THRESHOLD,
 ) -> DataFrame:
     """THE per-doc contamination derivation — the batch query and the
     streaming monitor (``streaming/decontam.py``) both call this one
@@ -78,7 +77,7 @@ def contamination_stats(
             F.count(F.lit(1)).alias("n_shingles"),
             F.count(F.when(F.col("_bench"), 1)).alias("n_hit"),
             rate.alias("contamination_rate"),
-            (rate >= threshold).alias("contaminated"),
+            (rate >= _DC_THRESHOLD).alias("contaminated"),
         )
     )
 

@@ -1203,15 +1203,15 @@ _PSI_BANDS = 10
 _PSI_BAND_W = 50  # value in [0.01, ~490] → bands 0..9
 
 
-def psi_band_col(value_col: str = "value"):
-    """THE banding expression — the batch query, the streaming
+def psi_band_col():
+    """THE banding expression of ``value`` — the batch query, the streaming
     monitor's reference freeze, and its per-batch fold all call this
     one definition (``streaming/psi.py`` imports it), so a band-width
     or clamping change can never leave the standing monitor on stale
     banding while the oracle-checked batch query moves on."""
     return F.least(
         F.lit(_PSI_BANDS - 1),
-        F.floor(F.col(value_col) / _PSI_BAND_W).cast("long"),
+        F.floor(F.col("value") / _PSI_BAND_W).cast("long"),
     ).alias("band")
 
 
@@ -1704,6 +1704,8 @@ ev_anomaly_mad_flags.__doc__ = ev_anomaly_mad_flags.__doc__.format(s=_MAD_SIGMA)
 #: 10-minute tumbling buckets; a sliding window spans this many buckets
 _SLD_BUCKET_MS = 600_000
 _SLD_SPAN = 3
+#: HLL sketch size (log2 of the register count)
+_SLD_LGK = 14
 
 _SLD_ORACLE = f"""
 WITH be AS (
@@ -1735,7 +1737,9 @@ def sliding_distinct_hll(
     # ANY timestamp, not just post-epoch ones.
     b = F.floor(F.unix_millis("ts") / F.lit(bucket_ms)).cast("long")
     be = events.select("user_id", b.alias("b")).transform(materialize)
-    sk = be.groupBy("b").agg(F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("sk"))
+    sk = be.groupBy("b").agg(
+        F.hll_sketch_agg(F.col("user_id"), F.lit(_SLD_LGK)).alias("sk")
+    )
     buckets = be.select("b").distinct()
     # Explode each bucket sketch to the span windows it covers and
     # equi-join/groupBy — a sketch row is kilobytes, so replicating it
@@ -1868,6 +1872,7 @@ ev_decayed_engagement.__doc__ = ev_decayed_engagement.__doc__.format(
 # ---------------------------------------------------------------------------
 
 _THETA_TOL = 0.05
+_THETA_LGK = 16
 
 _THETA_ORACLE = f"""
 WITH tu AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -1916,7 +1921,7 @@ def a10_theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _events(spark, sf_dir)
     tu = events.select("event_type", "user_id").distinct().transform(materialize)
     sk = tu.groupBy("event_type").agg(
-        F.theta_sketch_agg(F.col("user_id"), lgNomEntries=16).alias("sk"),
+        F.theta_sketch_agg(F.col("user_id"), lgNomEntries=_THETA_LGK).alias("sk"),
         F.count(F.lit(1)).alias("n"),
     )
     sa = sk.select(
@@ -1981,6 +1986,7 @@ _KLL_QS = [0.25, 0.5, 0.75, 0.9]
 #: k=200 guarantees ~1.65% rank error at 99% confidence — 5% is ~3x
 #: that bound, so the flag is deterministically true in practice)
 _KLL_RANK_TOL = 0.05
+_KLL_K = 200
 
 _KLL_ORACLE = "\nUNION ALL\n".join(
     f"SELECT {q} AS q, ROUND(quantile_cont(value, {q}), 4) AS exact_value, "
@@ -2007,7 +2013,7 @@ def a11_kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of a production plan."""
     events = _events(spark, sf_dir)
     daily = events.groupBy(F.to_date("ts").alias("d")).agg(
-        F.kll_sketch_agg_double(F.col("value"), F.lit(200)).alias("sk")
+        F.kll_sketch_agg_double(F.col("value"), F.lit(_KLL_K)).alias("sk")
     )
     # Empty-frame guard: with zero daily sketches, slice's length arg
     # would be -1 (a runtime error) and the seed out-of-bounds — return

@@ -2159,7 +2159,6 @@ def er_resolve_increment(
     registry: DataFrame,
     batch: DataFrame,
     tau: int = _LINK_TAU,
-    block_keys: tuple[str, ...] = _LINK_BLOCK_STRATEGIES,
 ) -> DataFrame:
     """Fold ONE batch of master rows (mk, mn) into the standing entity
     registry (``ER_REGISTRY_SCHEMA``) WITHOUT re-resolving the corpus:
@@ -2219,8 +2218,8 @@ def er_resolve_increment(
     # vocabulary (old ∪ new), probe = new names only — all blocking
     # passes as ONE namespaced-block PassJoin (_block_names_union)
     cand = passjoin_link(
-        _block_names_union(all_names, block_keys),
-        _block_names_union(new_names, block_keys),
+        _block_names_union(all_names, _LINK_BLOCK_STRATEGIES),
+        _block_names_union(new_names, _LINK_BLOCK_STRATEGIES),
         "nm",
         "blk",
         tau,

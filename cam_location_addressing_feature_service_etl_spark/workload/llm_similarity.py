@@ -107,7 +107,7 @@ def sim_ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous ivf_assign⋈members form re-joined the member table on
     # vec_id just to re-attach the vector the assignment had already
     # read (operators/similarity.py r16 argmin discipline)
-    assigned = _assign_with_vec(members, centroids, "vec_id", "embedding", 6)
+    assigned = _assign_with_vec(members, centroids)
     q = assigned.filter(
         (F.col("vec_id") >= _IVF_QUERY_LO) & (F.col("vec_id") < _IVF_QUERY_HI)
     ).select(

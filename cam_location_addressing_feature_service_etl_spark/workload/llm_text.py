@@ -4493,35 +4493,34 @@ SELECT source, doc_id, n_chars, CAST(rnk AS BIGINT) AS rnk FROM (
 """
 
 
-def source_cap_phase1(
-    df: DataFrame, cap: int = _SRC_CAP, salt: int = _SRC_SALT
-) -> DataFrame:
+def source_cap_phase1(df: DataFrame) -> DataFrame:
     """Phase 1 of the two-phase salted per-source top-cap: rank within
-    (source, salt = doc_id mod ``salt``) and keep ≤ ``cap`` per salt
-    class, so no task ever sorts a whole hot source. Exact by
-    containment: every global per-source top-``cap`` winner wins its
-    own salt class. Shared by the batch query and the streaming twin
+    (source, salt = doc_id mod ``_SRC_SALT``) and keep ≤ ``_SRC_CAP``
+    per salt class, so no task ever sorts a whole hot source. Exact by
+    containment: every global per-source top-cap winner wins its own
+    salt class. Shared by the batch query and the streaming twin
     (``streaming/source_cap.py``) so the priority order can never
     drift between them."""
     w1 = Window.partitionBy("source", "_salt").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
     )
     return (
-        df.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(salt)))
+        df.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(_SRC_SALT)))
         .withColumn("_r", F.row_number().over(w1))
-        .filter(F.col("_r") <= cap)
+        .filter(F.col("_r") <= _SRC_CAP)
         .drop("_salt", "_r")
     )
 
 
-def source_cap_phase2(df: DataFrame, cap: int = _SRC_CAP) -> DataFrame:
+def source_cap_phase2(df: DataFrame) -> DataFrame:
     """Phase 2: re-rank the bounded phase-1 survivors per source and
-    keep the global per-source top-``cap`` with its rank — the output
-    shape. The input is ≤ cap·salt rows per source by construction."""
+    keep the global per-source top-``_SRC_CAP`` with its rank — the
+    output shape. The input is ≤ cap·salt rows per source by
+    construction."""
     w2 = Window.partitionBy("source").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (
         df.withColumn("rnk", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rnk") <= cap)
+        .filter(F.col("rnk") <= _SRC_CAP)
         .select("source", "doc_id", "n_chars", "rnk")
     )
 

@@ -180,28 +180,3 @@ def test_zipf_slope_matches_numpy_replica(spark, tmp_path):
     var = sum((x - mr) ** 2 for x in lnr) / 3
     assert abs(r["zipf_slope"] - round(cov / var, 6)) <= 1e-6
     assert abs(r["zipf_intercept"] - round(mf - cov / var * mr, 6)) <= 1e-6
-
-def test_label_propagation_single_exchange_dial_is_identical(spark):
-    """The single_exchange balanced-graph dial (one node-keyed shuffle
-    per round instead of a (node,label)-keyed pair) must be purely
-    physical: vote-for-vote identical labels on a graph that exercises
-    majority, tie-break, and dst-only nodes."""
-    import random
-
-    rng = random.Random(0xD1A1)
-    nodes = [f"n{i:03d}" for i in range(60)]
-    pairs = {
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(300)
-    }
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in pairs if a != b], "src string, dst string"
-    )
-    base = {
-        (r["node"], r["label"])
-        for r in label_propagation(edges, rounds=3).collect()
-    }
-    dial = {
-        (r["node"], r["label"])
-        for r in label_propagation(edges, rounds=3, single_exchange=True).collect()
-    }
-    assert base == dial

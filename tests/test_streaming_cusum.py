@@ -17,8 +17,8 @@ import pytest
 from cam_location_addressing_feature_service_etl_spark.streaming.cusum import (
     cusum_stream,
 )
-from cam_location_addressing_feature_service_etl_spark.streaming.ewma import (
-    read_event_value_stream,
+from cam_location_addressing_feature_service_etl_spark.streaming.dedup_stream import (
+    read_event_stream,
 )
 from cam_location_addressing_feature_service_etl_spark.tables import load
 from cam_location_addressing_feature_service_etl_spark.workload import QUERIES
@@ -28,7 +28,7 @@ from tests.conftest import SF_SMOKE
 
 def _run(spark, d, name, max_files):
     q = (
-        cusum_stream(read_event_value_stream(spark, str(d), max_files))
+        cusum_stream(read_event_stream(spark, str(d), max_files))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -101,7 +101,7 @@ def test_cusum_stream_rejects_out_of_order_feed(spark, tmp_path):
     write("b2.parquet", [(5, base + 50)], m + 60)  # time goes backward
 
     q = (
-        cusum_stream(read_event_value_stream(spark, str(d), 1))
+        cusum_stream(read_event_stream(spark, str(d), 1))
         .writeStream.format("memory")
         .queryName("cusum_ooo")
         .outputMode("append")

@@ -11,10 +11,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from cam_location_addressing_feature_service_etl_spark.streaming.ewma import (
-    ewma_stream,
-    read_event_value_stream,
+from cam_location_addressing_feature_service_etl_spark.streaming.dedup_stream import (
+    read_event_stream,
 )
+from cam_location_addressing_feature_service_etl_spark.streaming.ewma import ewma_stream
 from cam_location_addressing_feature_service_etl_spark.tables import load
 from cam_location_addressing_feature_service_etl_spark.workload import QUERIES
 
@@ -23,7 +23,7 @@ from tests.conftest import SF_SMOKE
 
 def _run(spark, d, name, max_files):
     q = (
-        ewma_stream(read_event_value_stream(spark, str(d), max_files))
+        ewma_stream(read_event_stream(spark, str(d), max_files))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -98,7 +98,7 @@ def test_ewma_stream_rejects_out_of_order_feed(spark, tmp_path):
     write("b2.parquet", [(5, base + 50)], m + 60)  # time goes backward
 
     q = (
-        ewma_stream(read_event_value_stream(spark, str(d), 1))
+        ewma_stream(read_event_stream(spark, str(d), 1))
         .writeStream.format("memory")
         .queryName("ewma_ooo")
         .outputMode("append")
